@@ -5,40 +5,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-table sink — the reference's Delta ingest re-expressed
-  * over parquet + a [[TxnLog]] transaction log (rust-cdc
-  * `src/delta/mod.rs` IngestProcessor/DataWriter: partition_field
-  * extraction, composite unique_key_fields, buffered upsert flush,
-  * transactional add/remove commits, checkpoint every 10 commits,
-  * commit offsets, dead-letter table).
+  * over parquet + a Delta transaction log, `_delta_log/` ([[TxnLog]]
+  * over [[DeltaLog]]; rust-cdc `src/delta/mod.rs`
+  * IngestProcessor/DataWriter: partition_field extraction, composite
+  * unique_key_fields, buffered upsert flush, transactional add/remove
+  * commits, checkpoint every 10 commits, commit offsets, dead-letter
+  * table). The table root holds only `_delta_log/` and the `c-*`
+  * commit dirs.
   *
   * Design for scale:
   *  - every write lands in a fresh commit directory and becomes
-  *    visible only when the manifest version is atomically published
-  *    — a crash mid-merge can never lose or half-expose the table,
-  *    and a reader racing a writer sees a consistent version;
+  *    visible only when its log version is atomically published — a
+  *    crash mid-merge can never lose or half-expose the table, and a
+  *    reader racing a writer sees a consistent version;
   *  - [[merge]] rewrites ONLY the files the incoming changelog can
-  *    touch, pruned at two levels: partition value first (the
-  *    manifest maps files to partition values — no directory
-  *    listing), then per-file key range within the touched
-  *    partitions (the manifest carries typed min/max of the LWW key
-  *    per file, Delta-style data skipping); merge cost tracks the
-  *    TOUCHED data volume, not the table;
-  *  - commit offsets are written after data (write-ahead by data,
-  *    like the reference commits the log AFTER a successful flush)
-  *    via temp-file + atomic rename, and re-merging an
-  *    already-committed batch is a no-op upsert — idempotent
-  *    recovery;
-  *  - every [[CompactEvery]]-th merge compacts accumulated small
-  *    files into size-targeted ones (≤ [[TxnLog.TargetRecordsPerFile]]
-  *    records; a skew-hot partition value sub-splits across parallel
-  *    tasks) and vacuums crashed/superseded commit dirs (the
-  *    reference's checkpoint-every-10-commits);
+  *    touch, pruned at two levels: partition value first (each file's
+  *    partition value is in its logged path — no directory listing),
+  *    then per-file key range within the touched partitions (each
+  *    add action's stats carry the typed min/max of the LWW key,
+  *    Delta-style data skipping); merge cost tracks the TOUCHED data
+  *    volume, not the table;
+  *  - the per-source committed offsets ride in the same log commit as
+  *    the data (Delta `txn` actions): data and offsets become visible
+  *    together, so the committed offsets never run ahead of the data
+  *    and a crash loses both or neither. Re-merging a batch is still
+  *    a no-op upsert, so recovery is simply re-merging it;
+  *  - every [[CompactEvery]]-th merge (counted in the log's
+  *    commitInfo) compacts accumulated small files into size-targeted
+  *    ones (≤ [[TxnLog.TargetRecordsPerFile]] records; a skew-hot
+  *    partition value sub-splits across parallel tasks) and vacuums
+  *    crashed/superseded commit dirs;
   *  - undecodable records are appended to a dead-letter directory
   *    (`IngestOptions.dlq_table_uri`).
   */
 object CdcSink {
-
-  val CommitFile = "_graft_commit_offset.json"
 
   /** DLQ path for a table — a SIBLING directory, deliberately outside
     * the table dir so snapshot compaction/vacuum can never clear
@@ -56,7 +56,7 @@ object CdcSink {
   /** Read only the rows whose key falls in `[lo, hi]` (both
     * inclusive, encoded as canonical stat strings — the value's
     * cast-to-string form; epoch micros/days for timestamp/date keys,
-    * see [[TxnLog.statExpr]]), opening ONLY the files whose manifest
+    * see [[TxnLog.statExpr]]), opening ONLY the files whose logged
     * key range intersects it. The read-side complement of the pruned
     * merge: a point lookup on a range-compacted 100 TB table opens
     * one file instead of listing and footer-probing all of them.
@@ -69,7 +69,7 @@ object CdcSink {
     * on an impossible string→type cast.
     *
     * `asOf` composes the pruned read with time travel: the range is
-    * evaluated against THAT version's manifest (and only its files),
+    * evaluated against THAT version's files and stats,
     * with [[TxnLog.readVersion]]'s contract — a vacuumed or
     * never-committed version throws rather than silently serving a
     * different state of the data.
@@ -138,8 +138,7 @@ object CdcSink {
     val snap = CdcApply.snapshot(changelog)
     val version = TxnLog.current(fs, tableDir).map(_.version + 1).getOrElse(1L)
     val entries = TxnLog.writeCommitDir(snap, tableDir, partitionCol, version)
-    TxnLog.commit(fs, tableDir, version, snap.schema, entries)
-    commitOffsets(changelog, tableDir)
+    TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(changelog))
   }
 
   /** Full rewrite like [[writeSnapshot]], but range-clustered by the
@@ -173,8 +172,7 @@ object CdcSink {
     val version = TxnLog.current(fs, tableDir).map(_.version + 1).getOrElse(1L)
     val entries = TxnLog.writeCommitDir(
       snap, tableDir, None, version, targetRecordsPerFile)
-    TxnLog.commit(fs, tableDir, version, snap.schema, entries)
-    commitOffsets(snap, tableDir)
+    TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(snap))
   }
 
   def writeSnapshotClustered(
@@ -202,15 +200,14 @@ object CdcSink {
       val version = TxnLog.current(fs, tableDir).map(_.version + 1).getOrElse(1L)
       val entries = TxnLog.writeCommitDir(
         out, tableDir, None, version, targetRecordsPerFile)
-      TxnLog.commit(fs, tableDir, version, out.schema, entries)
-      commitOffsets(changelog, tableDir)
+      TxnLog.commit(fs, tableDir, version, out.schema, entries, batchOffsets(changelog))
     } finally snap.unpersist()
   }
 
   /** Incremental upsert merge: apply `changes` (a changelog batch)
     * to the existing snapshot, rewriting only touched partitions.
-    * The new version's manifest carries the untouched partitions'
-    * files forward unchanged.
+    * The new version carries the untouched partitions' files forward
+    * unchanged.
     */
   def merge(
       spark: SparkSession,
@@ -225,7 +222,7 @@ object CdcSink {
       return
     }
     // a merge takes several actions over the batch (prune bounds /
-    // touched partitions, the write, committed-offset agg): cache the
+    // touched partitions and offsets, the write): cache the
     // increment once instead of re-running its lineage per pass —
     // batches are increment-sized by contract (bulk loads take
     // writeSnapshot)
@@ -253,19 +250,18 @@ object CdcSink {
       .filter(kt => m.schema.fields
         .find(_.name == TxnLog.StatsKeyCol).map(_.dataType).contains(kt))
     val meta = batchMeta(changes, partitionCol, keyType)
-    partitionCol match {
+    val (schema, entries) = partitionCol match {
       case None =>
         // unpartitioned: key-range-pruned merge. Files whose
         // [min,max] key range no batch key can hit are carried
-        // forward untouched (Delta-style data skipping on the
-        // manifest's per-file stats); only intersecting files are
-        // read, folded with the batch, and rewritten. Stats-less
-        // files / key types and null-key batches degrade to
-        // everything-touched — a full rewrite, never a wrong prune.
-        // allowMissingColumns both ways → schema EVOLVES when the
-        // changelog gains columns (reference DDL propagation: ALTER
-        // TABLE ADD COLUMN flows into the table; dropped columns
-        // stay, null-filled).
+        // forward untouched (Delta-style data skipping on the logged
+        // per-file stats); only intersecting files are read, folded
+        // with the batch, and rewritten. Stats-less files / key types
+        // and null-key batches degrade to everything-touched — a full
+        // rewrite, never a wrong prune. allowMissingColumns both ways
+        // → schema EVOLVES when the changelog gains columns
+        // (reference DDL propagation: ALTER TABLE ADD COLUMN flows
+        // into the table; dropped columns stay, null-filled).
         val pr = splitByKeyRange(spark, changes, m.schema, m.entries, meta)
         val unioned =
           if (pr.touched.isEmpty) changes
@@ -285,13 +281,14 @@ object CdcSink {
           .map(e => pr.commitRange.fold(e) { case (lo, hi) =>
             e.copy(min = Some(lo), max = Some(hi))
           })
-        TxnLog.commit(fs, tableDir, m.version + 1,
-          unionSchema(m.schema, merged.schema), pr.untouched ++ entries)
+        (unionSchema(m.schema, merged.schema), pr.untouched ++ entries)
       case Some(p) =>
         // touched partition values come from the fused metadata pass
-        // (the SMALL change batch's distinct partition set)
+        // (the SMALL change batch's distinct partition set); an empty
+        // batch touches nothing and commits no file changes
         val touched = meta.touchedParts.getOrElse(Seq.empty).toArray
-        if (touched.nonEmpty) {
+        if (touched.isEmpty) (m.schema, m.entries)
+        else {
           val touchedEsc = touched.map(hivePartName).toSet
           val (partTouched, untouchedEntries) =
             m.entries.partition(_.partition.exists(touchedEsc.contains))
@@ -300,14 +297,13 @@ object CdcSink {
           // updates rewrite the files they intersect, not the whole
           // partition value)
           val pr = splitByKeyRange(spark, changes, m.schema, partTouched, meta)
-          val incoming = changes
-          val unioned = if (pr.touched.isEmpty) incoming else {
+          val unioned = if (pr.touched.isEmpty) changes else {
             // mergeSchema: after a partial (touched-partition) schema
             // evolution, untouched files still carry the old footer —
             // readEntries merges footers so evolved columns survive
             TxnLog.readEntries(spark, tableDir, pr.touched)
               .withColumn("op", lit(Op.Update))
-              .unionByName(incoming, allowMissingColumns = true)
+              .unionByName(changes, allowMissingColumns = true)
           }
           val merged = CdcApply.snapshot(unioned)
           val newEntries = TxnLog.writeCommitDir(
@@ -316,21 +312,22 @@ object CdcSink {
               e.copy(min = Some(lo), max = Some(hi))
             })
           // emptied partitions simply have no files in the new version
-          TxnLog.commit(fs, tableDir, m.version + 1,
-            unionSchema(m.schema, merged.schema),
+          (unionSchema(m.schema, merged.schema),
             untouchedEntries ++ pr.untouched ++ newEntries)
         }
     }
-    commitOffsetsFrom(spark, tableDir, meta.offsets)
-    maybeCompact(spark, tableDir, partitionCol)
+    val committed = TxnLog.commit(fs, tableDir, m.version + 1, schema, entries,
+      meta.offsets, DeltaLog.MergeOp)
+    TxnLog.failpoint(TxnLog.Crash.AfterPublish)
+    if (committed.mergeCount % CompactEvery == 0) compact(spark, tableDir, partitionCol)
   }
 
   /** One-pass merge-batch metadata (guide §2.4 — fold sequential
     * driver actions that scan the same frame). A merge needs three
     * increment-sized metadata reads: the key bounds that drive file
     * pruning ([[splitByKeyRange]]), the distinct partition values the
-    * batch touches, and the per-source max offsets [[commitOffsetsFrom]]
-    * commits after the data write. They used to run as three separate
+    * batch touches, and the per-source max offsets the commit records
+    * next to the data. They used to run as three separate
     * jobs over the persisted batch; one ROLLUP(source) aggregate
     * computes all of them in a single scan — the rollup's grand-total
     * row is EXACTLY the old bounds agg (same native-typed min/max then
@@ -402,7 +399,7 @@ object CdcSink {
     */
   private[cdc] val RefineMaxKeys = 200000L
 
-  /** Result of [[splitByKeyRange]]: which manifest files a batch
+  /** Result of [[splitByKeyRange]]: which live files a batch
     * merge must rewrite, which carry forward, and — when computable
     * with zero extra work — a sound outer key range for the commit's
     * OUTPUT files (batch bounds ∪ touched files' ranges).
@@ -412,7 +409,7 @@ object CdcSink {
       untouched: Seq[TxnLog.Entry],
       commitRange: Option[(String, String)])
 
-  /** Split the manifest's files into (touched, untouched) for a
+  /** Split a version's live files into (touched, untouched) for a
     * change batch using the per-file key-range stats. Stage 1 runs on
     * the driver with a typed comparator over one cheap bounds agg;
     * stage 2 (increment-sized batches that stage 1 already pruned)
@@ -437,7 +434,7 @@ object CdcSink {
       .find(_.name == TxnLog.StatsKeyCol).map(_.dataType)
     val (withStats, statless) =
       entries.partition(e => e.min.isDefined && e.max.isDefined)
-    // no stats anywhere (legacy manifest), unprunable key type, or a
+    // no stats anywhere (stats-less files), unprunable key type, or a
     // batch whose key TYPE differs from the table's: skip all extra
     // work — batch bounds couldn't prune anything safely
     if (keyField.isEmpty || withStats.isEmpty ||
@@ -529,7 +526,7 @@ object CdcSink {
   }
 
   /** The committed schema after a pruned merge: the merged frame's
-    * fields, plus any manifest-schema column the touched slice
+    * fields, plus any committed-schema column the touched slice
     * happened not to carry — untouched files keep columns alive even
     * when no rewritten file holds them.
     */
@@ -550,23 +547,15 @@ object CdcSink {
     else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .escapePathName(v.toString)
 
-  /** Checkpoint-style compaction every N merges — the reference
-    * creates a delta checkpoint every 10 commits
-    * (`src/delta/mod.rs:262-285` try_create_checkpoint); the analog
-    * is rewriting accumulated small files into one per partition and
-    * vacuuming superseded/crashed commit dirs. At 100 TB merge
-    * cadence this is what keeps scan task counts (and manifest size /
-    * listing pressure) bounded.
+  /** Compaction every N merges (the merge count is read from the
+    * log's commitInfo) — the reference creates a delta checkpoint
+    * every 10 commits (`src/delta/mod.rs:262-285`
+    * try_create_checkpoint); the analog here is rewriting accumulated
+    * small files into one per partition and vacuuming
+    * superseded/crashed commit dirs. At 100 TB merge cadence this is
+    * what keeps scan task counts (and live-file count) bounded.
     */
   val CompactEvery = 10
-
-  private def maybeCompact(
-      spark: SparkSession,
-      tableDir: String,
-      partitionCol: Option[String]): Unit = {
-    val mergeCount = bumpMergeCounter(spark, tableDir)
-    if (mergeCount % CompactEvery == 0) compact(spark, tableDir, partitionCol)
-  }
 
   /** Rewrite the table to size-targeted files (≤ targetRecordsPerFile
     * records each) and vacuum. Partitioned tables cluster + sub-split
@@ -587,12 +576,12 @@ object CdcSink {
         val out = partitionCol match {
           case Some(_) => snap // writeCommitDir clusters + sub-splits
           case None =>
-            // row count from the manifest when every entry carries one
-            // (stats-era commits do) — saves a full count scan of the
-            // table per compaction; legacy manifests pay the count.
+            // row count from the log when every entry carries one
+            // (stats-bearing commits do) — saves a full count scan of
+            // the table per compaction; stats-less files pay the count.
             // Invariant: Entry.rows must equal the file's parquet
             // footer row count (graft writes it from the footer and
-            // merge is copy-on-write). A foreign manifest with
+            // merge is copy-on-write). A foreign writer's stats with
             // present-but-wrong rows mis-sizes the repartition —
             // performance only, never correctness: writeCommitDir
             // still enforces targetRecordsPerFile sub-splitting
@@ -620,43 +609,10 @@ object CdcSink {
         val entries = TxnLog.writeCommitDir(
           out, tableDir, partitionCol, m.version + 1, targetRecordsPerFile,
           subSplitHotPartitions = true)
-        TxnLog.commit(fs, tableDir, m.version + 1, out.schema, entries)
+        TxnLog.commit(fs, tableDir, m.version + 1, out.schema, entries,
+          operation = "OPTIMIZE")
       }
       TxnLog.vacuum(fs, tableDir)
-    }
-  }
-
-  private def bumpMergeCounter(spark: SparkSession, tableDir: String): Long = {
-    val p = new Path(tableDir, "_graft_merge_count")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current =
-      if (!fs.exists(p)) 0L
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-    val next = current + 1
-    atomicWrite(fs, p, next.toString)
-    next
-  }
-
-  /** Crash-atomic small-file write: temp file + rename. A reader (or
-    * a resuming writer) sees either the old content or the new,
-    * never a torn write.
-    */
-  private def atomicWrite(fs: FileSystem, target: Path, content: String): Unit = {
-    val tmp = new Path(target.getParent,
-      s".${target.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, target)) {
-      // destination exists (HDFS rename does not overwrite): replace
-      // via delete+rename — the no-file window is recoverable (merge
-      // is idempotent), a torn file would not be
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(s"atomic replace failed for $target")
     }
   }
 
@@ -674,9 +630,10 @@ object CdcSink {
     *    shuffle).
     *  - RenameTable: filesystem rename (metadata-only, O(1)).
     *  - DropTable: recursive delete.
-    *  - TruncateTable: publish an EMPTY version, KEEP commit offsets
-    *    — the reference truncates data but the replication position
-    *    must survive (a resumed stream must not re-ingest history).
+    *  - TruncateTable: publish an EMPTY version; the committed
+    *    offsets carry over in the log — the reference truncates data
+    *    but the replication position must survive (a resumed stream
+    *    must not re-ingest history).
     *
     * Returns the table dir after the statement (differs on rename).
     */
@@ -692,11 +649,11 @@ object CdcSink {
         if (m.entries.isEmpty) {
           // empty table: the schema change still commits
           val out = project(TxnLog.read(spark, tableDir))
-          TxnLog.commit(fs, tableDir, version, out.schema, Nil)
+          TxnLog.commit(fs, tableDir, version, out.schema, Nil, operation = "ALTER TABLE")
         } else {
           val out = project(TxnLog.readEntries(spark, tableDir, m.entries))
           val entries = TxnLog.writeCommitDir(out, tableDir, partitionCol, version)
-          TxnLog.commit(fs, tableDir, version, out.schema, entries)
+          TxnLog.commit(fs, tableDir, version, out.schema, entries, operation = "ALTER TABLE")
         }
       }
     stmt match {
@@ -716,7 +673,7 @@ object CdcSink {
         fs.delete(new Path(tableDir), true); tableDir
       case Ddl.TruncateTable(_) =>
         TxnLog.current(fs, tableDir).foreach { m =>
-          TxnLog.commit(fs, tableDir, m.version + 1, m.schema, Nil)
+          TxnLog.commit(fs, tableDir, m.version + 1, m.schema, Nil, operation = "TRUNCATE")
           TxnLog.vacuum(fs, tableDir) // truncated data is gone for good
         }
         tableDir
@@ -774,54 +731,27 @@ object CdcSink {
     changes.filter(!isBad)
   }
 
-  /** Committed max offset per source, written after a successful
-    * flush (reference LogCommitter.commit: same-offset re-commit is
-    * a no-op). Crash-atomic: temp file + rename.
+  /** Max offset per source in a snapshot write's input — one agg job
+    * (the merge path gets the same numbers from its fused metadata
+    * pass).
     */
-  private def commitOffsets(changes: DataFrame, tableDir: String): Unit = {
+  private def batchOffsets(changes: DataFrame): Map[String, Long] = {
     val sourceCol =
       if (changes.columns.contains("source_file")) col("source_file")
       else lit("default")
-    val batchOffsets = changes
+    changes
       .groupBy(sourceCol.as("source"))
       .agg(max(col("offset")).as("committed_offset"))
       .collect()
       .map(r => String.valueOf(r.get(0)) -> r.getLong(1))
       .toMap
-    commitOffsetsFrom(changes.sparkSession, tableDir, batchOffsets)
   }
 
-  /** [[commitOffsets]] with the per-source max offsets already in
-    * hand (the merge path computes them in its fused metadata pass —
-    * zero extra jobs; snapshot writers still take the agg form above).
+  /** Committed max offset per source at the current version (the
+    * resume point after a restart): the log's `txn` actions, which
+    * commit atomically with the data (reference LogCommitter.commit:
+    * same-offset re-commit is a no-op).
     */
-  private def commitOffsetsFrom(
-      spark: SparkSession,
-      tableDir: String,
-      batchOffsets: Map[String, Long]): Unit = {
-    // merge with previously committed sources — a batch from source B
-    // must not erase source A's resume point (monotone per source)
-    val previous = committedOffsets(spark, tableDir)
-    val merged = previous ++ batchOffsets.map { case (src, off) =>
-      src -> math.max(off, previous.getOrElse(src, Long.MinValue))
-    }
-    val json = merged
-      .map { case (src, off) => s""""$src": $off""" }
-      .mkString("{", ", ", "}")
-    atomicWrite(fsFor(spark, tableDir), new Path(tableDir, CommitFile), json)
-  }
-
-  /** Read back committed offsets (resume point after restart). */
-  def committedOffsets(spark: SparkSession, tableDir: String): Map[String, Long] = {
-    val p = new Path(tableDir, CommitFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      // minimal {"k": v, ...} parse — keys are file names, values longs
-      "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-    }
-  }
+  def committedOffsets(spark: SparkSession, tableDir: String): Map[String, Long] =
+    DeltaLog.snapshot(fsFor(spark, tableDir), tableDir).fold(Map.empty[String, Long])(_.txns)
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * At scale: state is partitioned by key hash across executors;
   * watermark-based timeout bounds state for keys that go quiet.
   */
-object CdcStream {
+object CdcStream extends org.apache.spark.internal.Logging {
 
   private[cdc] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -496,8 +496,8 @@ object CdcStream {
       // a skip here means terminated-query + state-store cleanup is
       // deferred JVM-wide — make that visible, a silent skip turns
       // into unbounded native growth over a long bench run
-      System.err.println(
-        s"[graft] releaseStreamResources deferred: active=${blockers.map(_.name).mkString(",")}")
+      logWarning(
+        s"releaseStreamResources deferred: active=${blockers.map(_.name).mkString(",")}")
     }
   }
 

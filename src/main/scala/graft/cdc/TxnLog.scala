@@ -5,42 +5,35 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-/** Versioned transaction log for the [[CdcSink]] snapshot store — the
-  * reference's Delta commit semantics (rust-cdc `src/delta/mod.rs:
-  * 262-285`: transactional add/remove actions, checkpoint every 10
-  * commits) re-expressed over plain parquet + a manifest directory.
+/** Table API of the [[CdcSink]] snapshot store over its transaction
+  * log, [[DeltaLog]] (`_delta_log/`, which owns the format).
   *
   * Protocol (single writer, any number of readers):
   *  1. a commit writes its data into a FRESH commit directory
   *     (`c-<version>-<uuid>/`) under the table dir — existing files
   *     are never modified or overwritten;
-  *  2. the commit is PUBLISHED by renaming a temp manifest into
-  *     `_graft_log/<version>.json` (atomic on posix/HDFS; rename onto
-  *     an existing version fails → concurrent-writer detection);
-  *  3. readers resolve the highest manifest and read exactly the
-  *     files it lists — a reader racing a merge sees either the old
-  *     or the new version, never a half-written directory;
-  *  4. a crash between (1) and (2) leaves an orphan commit dir that
-  *     the current manifest never references; [[vacuum]] (run at the
-  *     checkpoint/compaction cadence) removes orphans and superseded
-  *     versions.
+  *  2. [[commit]] publishes the version's live-file set, per-file key
+  *     stats and per-source offsets as ONE Delta commit (temp file +
+  *     rename; an existing version fails → concurrent-writer
+  *     detection), so data and offsets become visible together;
+  *  3. readers resolve the latest version and read exactly the files
+  *     it lists — a reader racing a merge sees either the old or the
+  *     new version, never a half-written directory;
+  *  4. a crash before (2) leaves an orphan commit dir no version
+  *     references; [[vacuum]] (run at the compaction cadence) removes
+  *     orphans and superseded commit dirs, which ends time travel to
+  *     the versions that listed them.
   *
-  * The manifest lists each live file with its (Hive-escaped)
-  * partition value, so a partition-pruned merge selects files without
-  * listing directories. File counts stay bounded by compaction, so
-  * the manifest itself stays small (one JSON line per live file).
+  * A live file's partition value is its `__gp=` directory, so a
+  * partition-pruned merge selects files without listing directories.
   */
 object TxnLog {
 
-  val LogDirName = "_graft_log"
-
   /** Partition-directory column used inside commit dirs. The user's
     * partition column is DUPLICATED into it before `partitionBy`, so
-    * data files keep the original column and manifest-listed files
-    * can be read directly (no partition-discovery basePath games).
+    * data files keep the original column and logged files can be
+    * read directly (no partition-discovery basePath games).
     */
   val PartDirCol = "__gp"
 
@@ -51,8 +44,8 @@ object TxnLog {
     * canonically stringified — Delta-style per-file stats): a merge
     * prunes files whose range no batch key can hit. None when the
     * table has no stats-able key column, the file's keys are all
-    * null, or the manifest predates stats — all read as "cannot
-    * prune, always rewrite" (conservative, never wrong).
+    * null, or the file was committed without stats — all read as
+    * "cannot prune, always rewrite" (conservative, never wrong).
     */
   final case class Entry(
       path: String,
@@ -61,61 +54,72 @@ object TxnLog {
       max: Option[String] = None,
       rows: Option[Long] = None)
 
-  final case class Manifest(version: Long, schemaJson: String, entries: Seq[Entry]) {
+  /** A committed version: its schema, live files, per-source
+    * committed offsets and the number of merges committed so far. */
+  final case class Manifest(
+      version: Long,
+      schemaJson: String,
+      entries: Seq[Entry],
+      offsets: Map[String, Long] = Map.empty,
+      mergeCount: Long = 0L) {
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
-  /** Test-only failpoint: simulate a crash after data files are
-    * written but before the manifest publish — the window the
-    * protocol must make safe.
+  /** Test-only failpoints, each simulating a process crash at one step
+    * of a commit: after the data files are written, before the log
+    * publish, after the publish (before compaction or vacuum), and
+    * inside the checkpoint write.
     */
-  private[graft] var crashBeforeCommit: Boolean = false
-
-  def logDir(tableDir: String): Path = new Path(tableDir, LogDirName)
-
-  private def versionOf(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.endsWith(".json")) n.stripSuffix(".json").toLongOption else None
+  private[graft] object Crash extends Enumeration {
+    val AfterDataWrite, BeforePublish, AfterPublish, InCheckpoint = Value
   }
+  private[graft] var crashAt: Option[Crash.Value] = None
+  private[graft] def crashBeforeCommit: Boolean = crashAt.contains(Crash.BeforePublish)
+  private[graft] def crashBeforeCommit_=(on: Boolean): Unit =
+    crashAt = if (on) Some(Crash.BeforePublish) else None
 
-  /** Highest committed manifest, if the table has a log. */
-  def current(fs: FileSystem, tableDir: String): Option[Manifest] = {
-    val d = logDir(tableDir)
-    if (!fs.exists(d)) None
-    else {
-      val versions = fs.listStatus(d).map(_.getPath)
-        .flatMap(p => versionOf(p).map(_ -> p))
-      if (versions.isEmpty) None
-      else {
-        val (v, p) = versions.maxBy(_._1)
-        Some(readManifestFile(fs, p, v))
-      }
+  private[cdc] def failpoint(at: Crash.Value): Unit =
+    if (crashAt.contains(at)) throw new RuntimeException(s"txnlog: injected crash at $at")
+
+  /** Latest committed data version, if the table has one. */
+  def current(fs: FileSystem, tableDir: String): Option[Manifest] =
+    DeltaLog.snapshot(fs, tableDir).filter(_.version >= 1).map(_.manifest)
+
+  /** A version is retained while every commit dir it lists is still
+    * on disk ([[vacuum]] deletes whole dirs). */
+  private def retained(fs: FileSystem, tableDir: String, paths: Iterable[String],
+      seen: scala.collection.mutable.Map[String, Boolean]): Boolean =
+    paths.iterator.map(_.split('/').head).forall(d =>
+      seen.getOrElseUpdate(d, fs.exists(new Path(tableDir, d))))
+
+  /** Retained data versions, ascending: walking back from the latest,
+    * the versions up to the first one [[vacuum]] has made unreadable.
+    */
+  def versions(fs: FileSystem, tableDir: String): Seq[Long] =
+    DeltaLog.snapshot(fs, tableDir) match {
+      case None => Nil
+      case Some(s) =>
+        val seen = scala.collection.mutable.Map.empty[String, Boolean]
+        @scala.annotation.tailrec
+        def walk(v: Long, live: Set[String], acc: List[Long]): List[Long] =
+          if (v < 1 || !retained(fs, tableDir, live, seen)) acc
+          else DeltaLog.fileChanges(fs, tableDir, v) match {
+            case None => v :: acc
+            case Some((added, removed)) => walk(v - 1, live -- added ++ removed, v :: acc)
+          }
+        walk(s.version, s.files.keySet, Nil)
     }
-  }
-
-  private def readManifestFile(fs: FileSystem, p: Path, v: Long): Manifest = {
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    parseManifest(v, txt)
-  }
-
-  /** All committed versions, ascending. */
-  def versions(fs: FileSystem, tableDir: String): Seq[Long] = {
-    val d = logDir(tableDir)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).map(_.getPath).flatMap(versionOf).sorted.toSeq
-  }
 
   /** Manifest at a specific historical version (time travel), if it
-    * is still retained. [[vacuum]] reclaims superseded manifests at
+    * is still retained. [[vacuum]] reclaims superseded commit dirs at
     * the compaction cadence, so the travel horizon = commits since
     * the last compaction — the same horizon the reference's
     * checkpoint-every-10-commits delta log keeps cheap to reach.
     */
-  def manifestAt(fs: FileSystem, tableDir: String, version: Long): Option[Manifest] = {
-    val p = new Path(logDir(tableDir), f"$version%020d.json")
-    if (!fs.exists(p)) None else Some(readManifestFile(fs, p, version))
-  }
+  def manifestAt(fs: FileSystem, tableDir: String, version: Long): Option[Manifest] =
+    if (version < 1) None
+    else DeltaLog.snapshot(fs, tableDir, Some(version)).map(_.manifest).filter(m =>
+      retained(fs, tableDir, m.entries.map(_.path), scala.collection.mutable.Map.empty))
 
   /** Read the table AS OF `version`. Throws if the version was never
     * committed or has been vacuumed — time travel must not silently
@@ -135,71 +139,21 @@ object TxnLog {
     }
   }
 
-  private def parseManifest(version: Long, txt: String): Manifest = {
-    val j = JsonMethods.parse(txt)
-    implicit val fmt: Formats = DefaultFormats
-    val schema = (j \ "schema").extract[String]
-    val entries = (j \ "files") match {
-      case JArray(items) => items.map { it =>
-        Entry((it \ "path").extract[String], (it \ "part").extractOpt[String],
-          (it \ "min").extractOpt[String], (it \ "max").extractOpt[String],
-          (it \ "rows").extractOpt[Long])
-      }
-      case _ => Nil
-    }
-    Manifest(version, schema, entries)
-  }
-
-  /** Atomically publish `entries` as `version`. Throws if that
-    * version already exists (concurrent writer lost the race).
+  /** Publish `entries` as the complete live-file set of `version`,
+    * with the batch's per-source max `offsets`, in one log commit
+    * (see [[DeltaLog.commit]]). Throws
+    * `ConcurrentModificationException` if that version already
+    * exists (a concurrent writer won). Returns the committed version.
     */
   def commit(
       fs: FileSystem,
       tableDir: String,
       version: Long,
       schema: StructType,
-      entries: Seq[Entry]): Unit = {
-    if (crashBeforeCommit)
-      throw new RuntimeException("txnlog: injected crash before manifest publish")
-    val prev = current(fs, tableDir)
-    val d = logDir(tableDir)
-    fs.mkdirs(d)
-    val json = JObject(
-      "version" -> JInt(BigInt(version)),
-      "schema" -> JString(schema.json),
-      "files" -> JArray(entries.toList.map { e =>
-        val base = List(
-          "path" -> JString(e.path),
-          "part" -> e.partition.map(JString.apply).getOrElse(JNull))
-        val stats =
-          e.min.map(v => "min" -> JString(v)).toList :::
-          e.max.map(v => "max" -> JString(v)).toList :::
-          e.rows.map(n => "rows" -> JInt(BigInt(n))).toList
-        JObject(base ::: stats)
-      }))
-    val tmp = new Path(d, s".tmp-${UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, false)
-    try out.write(JsonMethods.compact(JsonMethods.render(json)).getBytes("UTF-8"))
-    finally out.close()
-    val target = new Path(d, f"$version%020d.json")
-    if (fs.exists(target) || !fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"txnlog: version $version already committed under $d")
-    }
-    // mirror the published commit into a public-spec Delta log so
-    // the table doubles as a real Delta table (see [[DeltaLog]]).
-    // The graft manifest above IS durable at this point: a mirror
-    // failure must not report the commit as failed — warn instead;
-    // the next commit's mirror backfills the gap (self-healing).
-    try DeltaLog.mirrorCommit(fs, tableDir, version, schema, entries, prev)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] WARN delta mirror for version $version failed " +
-            s"(${e.getMessage}); the next commit backfills the gap")
-    }
-  }
+      entries: Seq[Entry],
+      offsets: Map[String, Long] = Map.empty,
+      operation: String = "WRITE"): Manifest =
+    DeltaLog.commit(fs, tableDir, version, schema, entries, offsets, operation).manifest
 
   /** Size target for commit/compaction output files, in records.
     * Bounds BOTH file size and write-task runtime: a partition value
@@ -210,8 +164,8 @@ object TxnLog {
   val TargetRecordsPerFile: Long = 2L * 1000 * 1000
 
   /** Write `df` into a fresh commit directory for `version`; returns
-    * the manifest entries (paths relative to the table dir). Nothing
-    * is visible to readers until [[commit]] publishes them.
+    * its entries (paths relative to the table dir). Nothing is visible
+    * to readers until [[commit]] publishes them.
     */
   def writeCommitDir(
       df: DataFrame,
@@ -313,6 +267,7 @@ object TxnLog {
         df.write.option("maxRecordsPerFile", targetRecordsPerFile)
           .parquet(dest.toString)
     }
+    failpoint(Crash.AfterDataWrite)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = listParquet(fs, dest)
     // Per-file key-range stats (partitioned tables prune first on the
@@ -422,7 +377,7 @@ object TxnLog {
     * parse failure), which callers must treat as "don't prune".
     * Exists so a merge's range pre-check costs ZERO Spark jobs.
     * Date/timestamp stats are epoch numbers ([[statExpr]]) and
-    * compare numerically; a LEGACY manifest's ISO-rendered stat fails
+    * compare numerically; a legacy ISO-rendered stat fails
     * the numeric parse → None → the file stays un-pruned (sound).
     */
   private[cdc] def compareStat(dt: DataType, a: String, b: String): Option[Int] = {
@@ -616,12 +571,12 @@ object TxnLog {
   }
 
   /** Read the table at its current version. Falls back to a plain
-    * (mergeSchema) directory read for pre-log directories; an empty
-    * manifest yields an empty frame with the committed schema.
+    * (mergeSchema) directory read for directories without a log; an
+    * empty version yields an empty frame with the committed schema.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    current(fs, tableDir) match {
+    DeltaLog.snapshot(fs, tableDir).map(_.manifest) match {
       case None =>
         spark.read.option("mergeSchema", "true").parquet(tableDir)
       case Some(m) if m.entries.isEmpty =>
@@ -631,17 +586,18 @@ object TxnLog {
     }
   }
 
-  /** Read a subset of manifest entries (partition-pruned merges). */
+  /** Read a subset of a version's entries (partition-pruned merges). */
   def readEntries(spark: SparkSession, tableDir: String, entries: Seq[Entry]): DataFrame = {
     val paths = entries.map(e => new Path(tableDir, e.path).toString)
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
       .drop(PartDirCol) // defensive: never surface the dir column
   }
 
-  /** Remove commit directories the current manifest does not
-    * reference (crashed commits, superseded versions) and manifests
-    * older than current. Run at the compaction cadence — deferring
-    * it keeps just-superseded files alive for in-flight readers.
+  /** Remove commit directories the current version does not reference
+    * (crashed commits, superseded versions) and temp files left in the
+    * log by crashed publishes. The log itself is kept. Run at the
+    * compaction cadence — deferring it keeps just-superseded files
+    * alive for in-flight readers.
     */
   def vacuum(fs: FileSystem, tableDir: String): Unit =
     current(fs, tableDir).foreach { m =>
@@ -651,9 +607,8 @@ object TxnLog {
         if (st.isDirectory && n.startsWith("c-") && !live.contains(n))
           fs.delete(st.getPath, true)
       }
-      fs.listStatus(logDir(tableDir)).map(_.getPath).foreach { p =>
-        if (versionOf(p).exists(_ < m.version) || p.getName.startsWith(".tmp-"))
-          fs.delete(p, false)
+      fs.listStatus(DeltaLog.logDir(tableDir)).map(_.getPath).foreach { p =>
+        if (p.getName.startsWith(".tmp-")) fs.delete(p, false)
       }
     }
 }

@@ -648,10 +648,11 @@ object Cdc {
   // The interop proof in the inventory: a sink table built by
   // bootstrap + merge is re-opened through DeltaLog.read — the
   // PUBLIC Delta protocol (checkpoint discovery + JSON action
-  // replay), zero use of graft's own _graft_log manifests — and
-  // must reproduce the exact snapshot the oracle computes from the
-  // changelog. This is the read path any foreign engine would take
-  // on graft's tables (and graft on theirs).
+  // replay) over the sink's one log, `_delta_log`, with no use of
+  // TxnLog's entries, stats or offsets — and must reproduce the
+  // exact snapshot the oracle computes from the changelog. This is
+  // the read path any foreign engine would take on graft's tables
+  // (and graft on theirs).
   private def deltaRead(s: SparkSession, dir: String): DataFrame = {
     val log = Changelog.fromEvents(s, dir)
       .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
@@ -672,15 +673,15 @@ object Cdc {
 
   // --- cdc_merge_pruned: key-range data skipping in the merge -------
   // The 100 TB merge shape: bootstrap load → range-clustered
-  // compaction (key-disjoint files with min/max stats in the txn-log
-  // manifest) → a key-LOCALIZED change batch (updates + deletes on
-  // the first ~1% of the keyspace) merged by rewriting ONLY the
-  // files it intersects — every other file's path carries forward in
-  // the new manifest. The reference reaches the same idea through
-  // its delta-rs dependency (add-action stats in the public Delta
-  // protocol); graft's txnlog re-expresses it natively and mirrors
-  // the stats back out to the Delta log. The oracle replays the full
-  // changelog — a wrong prune surfaces as a stale/duplicate key.
+  // compaction (key-disjoint files with min/max stats in the log's
+  // add actions) → a key-LOCALIZED change batch (updates + deletes
+  // on the first ~1% of the keyspace) merged by rewriting ONLY the
+  // files it intersects — every other file carries forward into the
+  // new version. The reference reaches the same idea through its
+  // delta-rs dependency (add-action stats in the public Delta
+  // protocol), which is where graft keeps them too. The oracle
+  // replays the full changelog — a wrong prune surfaces as a
+  // stale/duplicate key.
   private def mergePruned(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
     val w1 = orders.select(
@@ -734,7 +735,7 @@ object Cdc {
   // --- cdc_point_lookup: stat-pruned range read + AS-OF compose -----
   // The read-side complement of cdc_merge_pruned: bootstrap →
   // range-clustered compaction → localized merge, then serve a key
-  // WINDOW through CdcSink.readRange — which opens only the manifest
+  // WINDOW through CdcSink.readRange — which opens only the live
   // files whose min/max intersect the bounds (a point lookup on a
   // 100 TB range-compacted table opens one file, not the table) —
   // both at the current version and AS-OF the pre-merge version
@@ -742,7 +743,7 @@ object Cdc {
   // deliberately straddles the merge's touched keyspace, so the two
   // states differ and a wrong prune OR a wrong version surfaces as a
   // hash mismatch against the oracle's dual replay. CdcPruneSpec
-  // asserts the physical side (files opened < manifest size).
+  // asserts the physical side (files opened < live files).
   private def pointLookup(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
     val w1 = orders.select(
@@ -1452,8 +1453,8 @@ object Cdc {
 
   // --- cdc_time_travel: versioned reads from the txn log ----------
   // The reference's delta log retains historical versions between
-  // checkpoints (src/delta/mod.rs:262-285); the TxnLog analog keeps
-  // every manifest until vacuum, so a reader can pin a version.
+  // checkpoints (src/delta/mod.rs:262-285); graft's log keeps every
+  // version readable until vacuum, so a reader can pin a version.
   // Bootstrap (changelog prefix) commits v1, the merge commits v2;
   // reading AS OF v1 must equal the prefix-bounded snapshot — the
   // oracle replays the changelog with the same offset cutoff.
@@ -1486,11 +1487,11 @@ object Cdc {
   // The audit primitive versioned storage exists for: what changed
   // between AS OF v1 and v2 — added keys, deleted keys, updated
   // rows (same key, new offset). Exercises the TxnLog versioned
-  // read path on BOTH ends (bootstrap manifest vs latest) and diffs
+  // read path on BOTH ends (bootstrap version vs latest) and diffs
   // with ONE full-outer key join; unchanged keys are filtered
   // before the output sort, so the result is ∝ churn, not ∝ table.
   // At 100 TB both sides are partition-pruned parquet reads of
-  // pinned manifests and the join shuffles on the key — the same
+  // pinned versions and the join shuffles on the key — the same
   // single-exchange shape as the snapshot fold itself. The oracle
   // replays the changelog with and without the version cutoff and
   // must land on identical verdicts.
@@ -1547,15 +1548,15 @@ object Cdc {
        |   OR v1.key IS NULL OR v2.key IS NULL
        |ORDER BY key""".stripMargin
 
-  // --- cdc_compaction: small-file compaction + manifest vacuum ----
-  // Incremental merges accrete small files and superseded manifests
+  // --- cdc_compaction: small-file compaction + vacuum -------------
+  // Incremental merges accrete small files and superseded commit dirs
   // (the reference checkpoints its delta log every 10 commits for
   // the same reason). compact() rewrites the live version into one
   // file per partition value and vacuum() reclaims everything
   // unreferenced. The content contract — compaction changes LAYOUT,
   // never DATA — is exactly what the oracle checks: the post-compact
   // read must still equal the plain latest-per-key fold. File-count
-  // and manifest-retention effects are asserted in CdcSinkSpec.
+  // and version-retention effects are asserted in CdcSinkSpec.
   private def compaction(s: SparkSession, dir: String): DataFrame = {
     val log = Changelog.fromEvents(s, dir)
       .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))

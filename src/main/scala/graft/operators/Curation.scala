@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * sampling is per-row, packing windows are sharded, the only global
   * sort is top-K (TakeOrderedAndProject).
   */
-object Curation {
+object Curation extends org.apache.spark.internal.Logging {
 
   lazy val defs: Seq[QueryDef] = Seq(
     QueryDef("cur_split", splitQ, Some(splitSql)),
@@ -709,7 +709,7 @@ object Curation {
     // identical parenthesization to bm25Sql — IEEE doubles are
     // engine-deterministic given the same operation order; only the
     // ln() differs by ulps and the DECIMAL(18,9) round absorbs it
-    val idf = log(lit(1.0) +
+    val idf = ln(lit(1.0) +
       (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm = (col("tf") * lit(k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / col("avgdl"))))
@@ -855,8 +855,8 @@ object Curation {
     val hist = toks.groupBy("bucket")
       .agg(count(lit(1)).as("raw_n"),
         sum(when(col("is_t"), 1L).otherwise(0L)).as("tgt_n"))
-    val wCol = (log((col("tgt_n") + lit(1.0)) / (col("tgt_tot") + lit(buckets.toDouble))) -
-      log((col("raw_n") + lit(1.0)) / (col("raw_tot") + lit(buckets.toDouble))))
+    val wCol = (ln((col("tgt_n") + lit(1.0)) / (col("tgt_tot") + lit(buckets.toDouble))) -
+      ln((col("raw_n") + lit(1.0)) / (col("raw_tot") + lit(buckets.toDouble))))
       .cast(org.apache.spark.sql.types.DecimalType(18, 9))
     // totals as a window over the ≤`buckets`-row histogram, NOT a
     // separate hist.agg branch: the agg form re-derived the whole
@@ -1096,8 +1096,8 @@ object Curation {
       .limit(probe)
       .collect()
     if (rows.length > maxVocab)
-      System.err.println(
-        s"[graft] WARN bpeMerges: distinct words with freq >= $minFreq " +
+      logWarning(
+        s"bpeMerges: distinct words with freq >= $minFreq " +
           s"exceed maxVocab=$maxVocab — training on the top-$maxVocab " +
           "head; learned merges are approximate vs the unpruned trainer")
     rows.take(maxVocab).map(r => (r.getString(0), r.getLong(1)))

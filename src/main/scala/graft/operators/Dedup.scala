@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * mutants (doc_id + 1000000, first word dropped) — the operators
   * then have real work to do and non-vacuous oracle output.
   */
-object Dedup {
+object Dedup extends org.apache.spark.internal.Logging {
 
   lazy val defs: Seq[QueryDef] = Seq(
     QueryDef("dedup_exact", exact, Some(exactSql)),
@@ -1335,7 +1335,6 @@ object Dedup {
       .select(col("v"), least(col("v"), col("mn")).as("label")).persist()
     var labels = cached
     val spark = pairs.sparkSession
-    val ccDebug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
     // FRONTIER propagation: only a vertex whose label DROPPED last
     // round can lower a neighbor this round (labels are monotone
     // decreasing, and every drop re-enters the frontier), so the
@@ -1392,8 +1391,8 @@ object Dedup {
       // through the round chain later
       val changed = nextFrontier.count()
       done = changed == 0L
-      if (ccDebug) System.err.println(
-        f"[graft] cc round ${i + 1}: changed=$changed%d " +
+      logDebug(
+        f"cc round ${i + 1}: changed=$changed%d " +
           f"${(System.nanoTime() - tRound) / 1e9}%.1fs")
       cached.unpersist()
       if (frontierCached) frontier.unpersist()
@@ -1422,7 +1421,7 @@ object Dedup {
       // min label per component IS the component min, and composing
       // the quotient roots through each vertex's current label is
       // exact.
-      if (ccDebug) System.err.println(s"[graft] $msg — finishing on the label quotient")
+      logDebug(s"$msg — finishing on the label quotient")
       // built from the PERSISTED symmetrized edge set, not `pairs`:
       // re-evaluating pairs would re-run the (expensive) candidate
       // mining upstream of it

@@ -17,7 +17,7 @@ import scala.collection.mutable
   * shared state, so it parallelizes per-file inside a Spark source
   * (see [[BinlogFileFormat]]).
   */
-object BinlogParser {
+object BinlogParser extends org.apache.spark.internal.Logging {
 
   val Magic: Array[Byte] = Array(0xfe.toByte, 'b'.toByte, 'i'.toByte, 'n'.toByte)
 
@@ -143,7 +143,7 @@ object BinlogParser {
   private def lookupCollation(id: Int): Option[java.nio.charset.Charset] = {
     val r = collationCharset.get(id)
     if (r.isEmpty && warnedCollations.add(id))
-      System.err.println(s"[graft] WARN binlog: unmapped collation id $id — " +
+      logWarning(s"binlog: unmapped collation id $id — " +
         "decoding as UTF-8 (may be mojibake); extend BinlogParser.collationCharset")
     r
   }

@@ -244,9 +244,11 @@ class CdcSinkSpec extends AnyFunSuite {
     val commitDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("c-"))
     assert(commitDirs.length == 1, commitDirs.map(_.getName).mkString(","))
-    // sidecar metadata survived the compaction rewrite
+    // offsets survived the compaction rewrite; the merge count that
+    // set the cadence lives in the log, beside nothing but commit dirs
     assert(CdcSink.committedOffsets(spark, dir).nonEmpty)
-    assert(new java.io.File(dir, "_graft_merge_count").exists())
+    assert(m.mergeCount == CdcSink.CompactEvery)
+    assert(new java.io.File(dir).list().toSet == commitDirs.map(_.getName).toSet + "_delta_log")
   }
 
   test("compaction sub-splits a skew-hot partition into size-bounded files") {

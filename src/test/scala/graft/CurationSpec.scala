@@ -660,18 +660,27 @@ class CurationSpec extends AnyFunSuite {
     val wfTrunc = operators.Curation.bpeWordFreq(corpus, "text",
       minFreq = 1L, maxVocab = 2)
     assert(wfTrunc.toSeq == Seq(("xy", 4L), ("xz", 3L)))
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val oldErr = System.err
-    System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+    // the warning goes through Spark's logger: capture Curation's
+    // log events while the truncated trainer runs
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "bpe-cap", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        logged.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger("graft.operators.Curation")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
     val got =
       try operators.Curation.bpeMerges(corpus, "text", rounds = 3,
           minFreq = 1L, maxVocab = 2)
         .orderBy("rnd").collect()
         .map(r => (r.getAs[Long]("rnd"), r.getAs[String]("lhs"),
           r.getAs[String]("rhs"), r.getAs[Long]("cnt"))).toSeq
-      finally System.setErr(oldErr)
+      finally logger.removeAppender(appender)
     // truncation is detected, not silent
-    assert(errBuf.toString("UTF-8").contains("WARN bpeMerges"),
+    assert(logged.toArray.exists(_.toString.contains("WARN bpeMerges")),
       "no truncation warning emitted")
     // merges equal the naive trainer on the truncated table...
     assert(got == bpeNaive(wfTrunc, 3))

@@ -9,7 +9,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural conformance of the `_delta_log` mirror: an INDEPENDENT
+/** Structural conformance of the sink's `_delta_log`: an INDEPENDENT
   * reader implementing the public Delta protocol (action-JSON replay,
   * checkpoint-parquet + `_last_checkpoint` discovery) must
   * reconstruct, at every version, exactly the state graft's own
@@ -162,7 +162,7 @@ class DeltaLogSpec extends AnyFunSuite {
       val mine = TxnLog.readVersion(spark, dir, v)
       assert(sortedRows(readState(st, dir)) == sortedRows(mine),
         s"delta replay of v$v diverges from TxnLog")
-      // the replayed live set must be exactly the graft manifest
+      // the replayed live set must be exactly TxnLog's entries
       val manifest = TxnLog.manifestAt(fs, dir, v).get
       assert(st.live.keySet == manifest.entries.map(_.path).toSet)
       assert(st.schemaJson == manifest.schemaJson)
@@ -205,6 +205,18 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(ckAdds == st10.live.keySet)
     assert(ck.filter(col("protocol").isNotNull).count() == 1)
     assert(ck.filter(col("metaData").isNotNull).count() == 1)
+    // ... and carries what resolution past version 10 needs: each
+    // add's stats as logged, and the per-source offsets as txn rows
+    implicit val fmt: Formats = DefaultFormats
+    val logged = (0L to 10L).flatMap(v => readJsonActions(new Path(d, f"$v%020d.json")))
+      .flatMap(a => (a \ "add").toOption)
+      .map(ad => (ad \ "path").extract[String] -> (ad \ "stats").extractOpt[String]).toMap
+    val ckStats = ck.filter(col("add").isNotNull).select("add.path", "add.stats").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(ckStats.forall { case (p, st) => logged(p) == st } && ckStats.values.exists(_.isDefined))
+    val txns = ck.filter(col("txn").isNotNull).select("txn.appId", "txn.version")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(txns == Map("bin.1" -> 10L))
   }
 
   test("multi-part checkpoint: parted files read back; stale part falls back to replay") {
@@ -500,45 +512,6 @@ class DeltaLogSpec extends AnyFunSuite {
     val got = DeltaLog.read(spark, dir).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getInt(2))).toSet
     assert(got == Set(("a", 1.0, 1), ("b", 2.0, 2)))
-  }
-
-  test("a lost mirror write self-heals: next commit backfills the gap") {
-    // Simulate the crash window (graft manifest published, delta json
-    // not) by deleting one mirrored version, then commit again: the
-    // log must be contiguous afterwards and the public-protocol read
-    // must land on the current snapshot.
-    val dir = Files.createTempDirectory("graft_delta_heal_").toString
-    CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, Some("part"))
-    CdcSink.merge(spark, changelog(("b", "c", 2, "p2", 2.0)), dir, Some("part"))
-    val log = new Path(dir, "_delta_log")
-    assert(fs.delete(new Path(log, f"${2L}%020d.json"), false)) // the hole
-    CdcSink.merge(spark, changelog(("a", "u", 3, "p1", 9.0)), dir, Some("part"))
-    val versions = fs.listStatus(log).map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .flatMap(_.stripSuffix(".json").toLongOption).sorted
-    assert(versions.toSeq == Seq(0L, 1L, 2L, 3L),
-      s"delta log not contiguous after heal: ${versions.mkString(",")}")
-    // the backfilled v2 is commitInfo-only; v3 re-converges the state
-    val v2 = readJsonActions(new Path(log, f"${2L}%020d.json"))
-    assert(v2.forall(a => (a \ "add") == JNothing && (a \ "remove") == JNothing))
-    assert(sortedRows(DeltaLog.read(spark, dir)) ==
-      sortedRows(CdcSink.read(spark, dir)))
-    // a SCHEMA EVOLUTION lost in the gap must be re-emitted by the
-    // heal: the graft prev manifest already carries the new schema,
-    // so the naive prev-comparison would skip metaData and every
-    // later delta read would drop the evolved column forever
-    val dir2 = Files.createTempDirectory("graft_delta_heal2_").toString
-    CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir2, None)
-    CdcSink.merge(spark,
-      changelog(("b", "c", 2, "p2", 2.0)).withColumn("extra", lit(7.5)),
-      dir2, None) // v2 evolves the schema — then its mirror is lost
-    val log2 = new Path(dir2, "_delta_log")
-    assert(fs.delete(new Path(log2, f"${2L}%020d.json"), false))
-    CdcSink.merge(spark, changelog(("c", "c", 3, "p3", 3.0)), dir2, None)
-    val healed = DeltaLog.read(spark, dir2)
-    assert(healed.schema.fieldNames.contains("extra"),
-      "schema evolution lost in the mirror gap was not re-emitted")
-    assert(sortedRows(healed) == sortedRows(CdcSink.read(spark, dir2)))
   }
 
   test("add actions carry public-format stats (numRecords + key min/max)") {
