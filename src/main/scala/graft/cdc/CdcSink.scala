@@ -111,7 +111,7 @@ object CdcSink {
         if (live.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-        else TxnLog.readEntries(spark, tableDir, live).filter(rowFilter(kt))
+        else TxnLog.readEntries(spark, tableDir, live, m.schema).filter(rowFilter(kt))
       case Some(m) => // committed but empty version (e.g. post-truncate)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
@@ -141,15 +141,6 @@ object CdcSink {
     TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(changelog))
   }
 
-  /** Full rewrite like [[writeSnapshot]], but range-clustered by the
-    * stats key in the same pass — equivalent to writeSnapshot followed
-    * by [[compact]] without materializing and re-reading the table in
-    * between. The 100 TB bootstrap shape: a snapshot load's files come
-    * out key-disjoint and sorted on day one, so the very first merge
-    * already prunes, and the table never pays a full compaction
-    * rewrite just to earn its key-range stats. Falls back to plain
-    * writeSnapshot when the key column isn't stats-orderable.
-    */
   /** Bulk-import a PRE-clustered consistent snapshot: the caller
     * guarantees the rows are (a) final images — one row per key, no
     * per-key dedup needed — and (b) globally range-clustered on
@@ -175,6 +166,15 @@ object CdcSink {
     TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(snap))
   }
 
+  /** Full rewrite like [[writeSnapshot]], but range-clustered by the
+    * stats key in the same pass — equivalent to writeSnapshot followed
+    * by [[compact]] without materializing and re-reading the table in
+    * between. The 100 TB bootstrap shape: a snapshot load's files come
+    * out key-disjoint and sorted on day one, so the very first merge
+    * already prunes, and the table never pays a full compaction
+    * rewrite just to earn its key-range stats. Falls back to plain
+    * writeSnapshot when the key column isn't stats-orderable.
+    */
   def writeSnapshotClustered(
       changelog: DataFrame,
       tableDir: String,
@@ -250,7 +250,20 @@ object CdcSink {
       .filter(kt => m.schema.fields
         .find(_.name == TxnLog.StatsKeyCol).map(_.dataType).contains(kt))
     val meta = batchMeta(changes, partitionCol, keyType)
+    // Output files get exact per-file stats from their parquet footers
+    // (row counts, and key ranges for footer-decodable key types — no
+    // Spark job). Files left without a range inherit the FREE
+    // commit-level range (batch bounds ∪ touched files' ranges,
+    // already on the driver): conservative but sound, and it keeps
+    // append-pattern increments key-disjoint.
+    def withRange(es: Seq[TxnLog.Entry], range: Option[(String, String)]) =
+      es.map(e => range.filter(_ => e.min.isEmpty).fold(e) { case (lo, hi) =>
+        e.copy(min = Some(lo), max = Some(hi))
+      })
     val (schema, entries) = partitionCol match {
+      // an empty batch commits no file changes (it still counts as a
+      // merge toward the compaction cadence)
+      case _ if meta.nRows == 0 => (m.schema, m.entries)
       case None =>
         // unpartitioned: key-range-pruned merge. Files whose
         // [min,max] key range no batch key can hit are carried
@@ -265,56 +278,37 @@ object CdcSink {
         val pr = splitByKeyRange(spark, changes, m.schema, m.entries, meta)
         val unioned =
           if (pr.touched.isEmpty) changes
-          else TxnLog.readEntries(spark, tableDir, pr.touched)
+          else TxnLog.readEntries(spark, tableDir, pr.touched, m.schema)
             .withColumn("op", lit(Op.Update))
             .unionByName(changes, allowMissingColumns = true)
         val merged = CdcApply.snapshot(unioned)
-        // computeStats=false: increment commits skip the per-file
-        // stats job — instead the new files inherit the FREE
-        // commit-level range (batch bounds ∪ touched files' ranges,
-        // already on the driver). Conservative but sound, and it
-        // keeps append-pattern increments key-disjoint, so later
-        // merges don't re-rewrite them; per-file precision comes
-        // back at the next compaction.
         val entries = TxnLog.writeCommitDir(
           merged, tableDir, None, m.version + 1, computeStats = false)
-          .map(e => pr.commitRange.fold(e) { case (lo, hi) =>
-            e.copy(min = Some(lo), max = Some(hi))
-          })
-        (unionSchema(m.schema, merged.schema), pr.untouched ++ entries)
+        (unionSchema(m.schema, merged.schema), pr.untouched ++ withRange(entries, pr.commitRange))
       case Some(p) =>
         // touched partition values come from the fused metadata pass
-        // (the SMALL change batch's distinct partition set); an empty
-        // batch touches nothing and commits no file changes
-        val touched = meta.touchedParts.getOrElse(Seq.empty).toArray
-        if (touched.isEmpty) (m.schema, m.entries)
-        else {
-          val touchedEsc = touched.map(hivePartName).toSet
-          val (partTouched, untouchedEntries) =
-            m.entries.partition(_.partition.exists(touchedEsc.contains))
-          // second pruning level: within the touched PARTITIONS, keep
-          // files whose key range no batch key can hit (hot-partition
-          // updates rewrite the files they intersect, not the whole
-          // partition value)
-          val pr = splitByKeyRange(spark, changes, m.schema, partTouched, meta)
-          val unioned = if (pr.touched.isEmpty) changes else {
-            // mergeSchema: after a partial (touched-partition) schema
-            // evolution, untouched files still carry the old footer —
-            // readEntries merges footers so evolved columns survive
-            TxnLog.readEntries(spark, tableDir, pr.touched)
-              .withColumn("op", lit(Op.Update))
-              .unionByName(changes, allowMissingColumns = true)
-          }
-          val merged = CdcApply.snapshot(unioned)
-          val newEntries = TxnLog.writeCommitDir(
-            merged, tableDir, Some(p), m.version + 1, computeStats = false)
-            .map(e => pr.commitRange.fold(e) { case (lo, hi) =>
-              e.copy(min = Some(lo), max = Some(hi))
-            })
-          // emptied partitions simply have no files in the new version
-          (unionSchema(m.schema, merged.schema),
-            untouchedEntries ++ pr.untouched ++ newEntries)
+        // (the SMALL change batch's distinct partition set)
+        val touchedEsc = meta.touchedParts.getOrElse(Seq.empty).map(hivePartName).toSet
+        val (partTouched, untouchedEntries) =
+          m.entries.partition(_.partition.exists(touchedEsc.contains))
+        // second pruning level: within the touched PARTITIONS, keep
+        // files whose key range no batch key can hit (hot-partition
+        // updates rewrite the files they intersect, not the whole
+        // partition value)
+        val pr = splitByKeyRange(spark, changes, m.schema, partTouched, meta)
+        // touched files read under the committed schema: a file that
+        // predates an evolved column reads it as null
+        val unioned = if (pr.touched.isEmpty) changes else {
+          TxnLog.readEntries(spark, tableDir, pr.touched, m.schema)
+            .withColumn("op", lit(Op.Update))
+            .unionByName(changes, allowMissingColumns = true)
         }
+        val merged = CdcApply.snapshot(unioned)
+        val newEntries = TxnLog.writeCommitDir(
+          merged, tableDir, Some(p), m.version + 1, computeStats = false)
+        // emptied partitions simply have no files in the new version
+        (unionSchema(m.schema, merged.schema),
+          untouchedEntries ++ pr.untouched ++ withRange(newEntries, pr.commitRange))
     }
     val committed = TxnLog.commit(fs, tableDir, m.version + 1, schema, entries,
       meta.offsets, DeltaLog.MergeOp)
@@ -456,7 +450,6 @@ object CdcSink {
         }
       }
     val nRows = meta.nRows
-    if (nRows == 0) return PruneSplit(Seq.empty, entries, None)
     if (meta.nullKeys > 0) {
       // null keys can hide in ANY file (ranges only witness non-null
       // keys), so every file is touched — but the OUTPUT's non-null
@@ -572,13 +565,14 @@ object CdcSink {
     val fs = fsFor(spark, tableDir)
     TxnLog.current(fs, tableDir).foreach { m =>
       if (m.entries.nonEmpty) {
-        val snap = TxnLog.readEntries(spark, tableDir, m.entries)
+        val snap = TxnLog.readEntries(spark, tableDir, m.entries, m.schema)
         val out = partitionCol match {
           case Some(_) => snap // writeCommitDir clusters + sub-splits
           case None =>
             // row count from the log when every entry carries one
-            // (stats-bearing commits do) — saves a full count scan of
-            // the table per compaction; stats-less files pay the count.
+            // (merges and stats-bearing bulk commits record it) —
+            // saves a full count scan of the table per compaction;
+            // files committed without a row count pay the count.
             // Invariant: Entry.rows must equal the file's parquet
             // footer row count (graft writes it from the footer and
             // merge is copy-on-write). A foreign writer's stats with
@@ -622,8 +616,9 @@ object CdcSink {
     * parquet store.
     *
     *  - AddColumn: no rewrite — the table schema evolves lazily on
-    *    the next [[merge]] (`unionByName(allowMissingColumns)` +
-    *    mergeSchema read). Rewriting 100 TB to add a null column
+    *    the next [[merge]] (`unionByName(allowMissingColumns)`; the
+    *    log's schema then carries the column and files that predate
+    *    it read it as null). Rewriting 100 TB to add a null column
     *    would be the anti-pattern.
     *  - DropColumn / RenameColumn: projection rewrite committed as a
     *    new version (one straight-through column-pruned scan, no
@@ -651,7 +646,7 @@ object CdcSink {
           val out = project(TxnLog.read(spark, tableDir))
           TxnLog.commit(fs, tableDir, version, out.schema, Nil, operation = "ALTER TABLE")
         } else {
-          val out = project(TxnLog.readEntries(spark, tableDir, m.entries))
+          val out = project(TxnLog.readEntries(spark, tableDir, m.entries, m.schema))
           val entries = TxnLog.writeCommitDir(out, tableDir, partitionCol, version)
           TxnLog.commit(fs, tableDir, version, out.schema, entries, operation = "ALTER TABLE")
         }

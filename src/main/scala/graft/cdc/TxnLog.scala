@@ -135,7 +135,7 @@ object TxnLog {
       case Some(m) if m.entries.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
       case Some(m) =>
-        readEntries(spark, tableDir, m.entries)
+        readEntries(spark, tableDir, m.entries, m.schema)
     }
   }
 
@@ -270,30 +270,29 @@ object TxnLog {
     failpoint(Crash.AfterDataWrite)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = listParquet(fs, dest)
-    // Per-file key-range stats (partitioned tables prune first on the
-    // partition value, then on these within touched partitions). One
-    // extra single-column scan of the just-written, page-cache-hot
-    // commit dir — O(new data), never O(table). Callers writing
-    // increment-sized commits pass computeStats=false: the files
-    // worth protecting from rewrites are the BIG ones (bootstrap
-    // loads, compaction output); an increment file is cheap to
-    // rewrite and gets stats at the next compaction anyway, so a
-    // merge doesn't pay a stats job per micro-batch.
+    // Per-file row count and key-range stats (partitioned tables
+    // prune first on the partition value, then on these within
+    // touched partitions). The common key types' ranges decode from
+    // the just-written parquet FOOTERS on the driver (no Spark job;
+    // ~ms per file). A bulk commit (computeStats) with many files or
+    // another key type pays one single-column scan of the commit dir
+    // instead — O(new data), never O(table). Increment commits
+    // (computeStats=false) never run that scan: they take the row
+    // counts, plus the range where the footers decode, from footers
+    // alone, and the caller may fill in a coarser range.
     val keyType = df.schema.fields
       .find(f => f.name == StatsKeyCol && statsSupported(f.dataType))
       .map(_.dataType)
+    val footerKey = keyType.filter(footerStatsDecodable)
     val stats: Map[(Option[String], String), (Option[String], Option[String], Long)] =
-      if (computeStats && files.nonEmpty && keyType.isDefined) {
-        // fast path: read the just-written parquet FOOTERS on the
-        // driver (no Spark job; ~ms per file) for the common key
-        // types whose footer statistics decode to the exact canonical
-        // string form; a big commit (many files) or another key type
-        // takes the distributed single-column scan instead
-        if (files.length <= FooterStatsMaxFiles &&
-            footerStatsDecodable(keyType.get))
-          fileKeyStatsFromFooters(spark, tableDir, files, keyType.get)
-        else fileKeyStats(spark, dest, keyType.get)
-      } else Map.empty
+      if (files.isEmpty) Map.empty
+      else if (!computeStats) fileKeyStatsFromFooters(spark, tableDir, files, footerKey)
+      else keyType match {
+        case Some(_) if footerKey.isDefined && files.length <= FooterStatsMaxFiles =>
+          fileKeyStatsFromFooters(spark, tableDir, files, footerKey)
+        case Some(kt) => fileKeyStats(spark, dest, kt)
+        case None => Map.empty
+      }
     files.map { f =>
       val rel = relativize(new Path(tableDir), f)
       val part = rel.split('/')
@@ -428,7 +427,8 @@ object TxnLog {
   }
 
   /** Per-file stats straight from the parquet footers, driver-side —
-    * zero Spark jobs. Statistics missing or unreliable for a file
+    * zero Spark jobs. Row counts always; the key range only when
+    * `keyType` is given. Statistics missing or unreliable for a file
     * (huge values dropped by the writer, no non-null values) degrade
     * to a row-count-only entry, exactly like the scan path's all-null
     * files. Footer min/max are whole-value (column chunk statistics
@@ -441,8 +441,7 @@ object TxnLog {
       spark: SparkSession,
       tableDir: String,
       files: Seq[Path],
-      keyType: DataType): Map[(Option[String], String), (Option[String], Option[String], Long)] = {
-    import scala.jdk.CollectionConverters._
+      keyType: Option[DataType]): Map[(Option[String], String), (Option[String], Option[String], Long)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // footer opens are independent ms-scale IO: batch them through a
     // bounded pool instead of one-at-a-time (a 512-file commit's
@@ -467,7 +466,7 @@ object TxnLog {
       tableDir: String,
       f: Path,
       conf: org.apache.hadoop.conf.Configuration,
-      keyType: DataType): ((Option[String], String), (Option[String], Option[String], Long)) = {
+      keyType: Option[DataType]): ((Option[String], String), (Option[String], Option[String], Long)) = {
     import scala.jdk.CollectionConverters._
     {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -476,7 +475,7 @@ object TxnLog {
         try {
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
           val rows = blocks.map(_.getRowCount).sum
-          val perBlock = blocks.flatMap { b =>
+          val perBlock = if (keyType.isEmpty) Nil else blocks.flatMap { b =>
             b.getColumns.asScala
               .find(_.getPath.toDotString == StatsKeyCol)
               .map(_.getStatistics)
@@ -497,7 +496,7 @@ object TxnLog {
               // string min-reduce would misorder numeric blocks
               def pick(vs: Seq[String], wantMin: Boolean): Option[String] =
                 vs.map(Option(_)).reduceLeft { (ao, bo) =>
-                  for { a <- ao; b <- bo; c <- compareStat(keyType, a, b) }
+                  for { a <- ao; b <- bo; c <- compareStat(keyType.get, a, b) }
                     yield if ((c <= 0) == wantMin) a else b
                   // an uncomparable pair dissolves to None → no stats
                 }
@@ -582,16 +581,22 @@ object TxnLog {
       case Some(m) if m.entries.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
       case Some(m) =>
-        readEntries(spark, tableDir, m.entries)
+        readEntries(spark, tableDir, m.entries, m.schema)
     }
   }
 
-  /** Read a subset of a version's entries (partition-pruned merges). */
-  def readEntries(spark: SparkSession, tableDir: String, entries: Seq[Entry]): DataFrame = {
-    val paths = entries.map(e => new Path(tableDir, e.path).toString)
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      .drop(PartDirCol) // defensive: never surface the dir column
-  }
+  /** Read a subset of a version's entries under that version's
+    * committed `schema` (its [[Manifest.schema]]). The log already
+    * knows the schema, so no footer-inference job runs before the
+    * scan; a column a file predates reads as null (schema evolution
+    * is reconciled from the log, not from footers).
+    */
+  def readEntries(
+      spark: SparkSession,
+      tableDir: String,
+      entries: Seq[Entry],
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(entries.map(e => new Path(tableDir, e.path).toString): _*)
 
   /** Remove commit directories the current version does not reference
     * (crashed commits, superseded versions) and temp files left in the

@@ -1644,11 +1644,11 @@ object Cdc {
   // delta table between data batches. Here: bootstrap commits the
   // NARROW schema (no props), an ALTER TABLE ADD COLUMN lands (lazy —
   // no 100 TB rewrite; applyDdl records nothing, the schema evolves
-  // on the next merge via unionByName(allowMissingColumns) and
-  // mergeSchema reads), then the post-DDL half of the changelog
-  // merges WITH props. Partitioned table, so untouched partitions
-  // keep old-footer files — the mergeSchema read path is what
-  // reconciles them. Keys last written pre-DDL must read props=NULL.
+  // on the next merge via unionByName(allowMissingColumns)), then the
+  // post-DDL half of the changelog merges WITH props. Partitioned
+  // table, so untouched partitions keep files without props — the
+  // read under the log's committed schema is what reconciles them.
+  // Keys last written pre-DDL must read props=NULL.
   private def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val log = Changelog.fromEvents(s, dir)
       .select(col("key"), col("op"), col("offset"), col("event_type"),

@@ -191,14 +191,14 @@ class CdcPruneSpec extends AnyFunSuite {
     val m0 = TxnLog.current(fs, dir).get
     // batch 1 entirely above the bootstrap range → pure append: the
     // bootstrap file must carry forward, and the NEW file must carry
-    // the commit-level range (no per-file stats job ran)
+    // its key range (read from its footer, no stats job)
     CdcSink.merge(spark, strLog(("b1", "c", 10, 10.0), ("b2", "c", 11, 11.0)), dir, None)
     val m1 = TxnLog.current(fs, dir).get
     assert(m0.entries.map(_.path).toSet.subsetOf(m1.entries.map(_.path).toSet),
       "bootstrap file was rewritten by a disjoint append batch")
     val inc1 = m1.entries.filterNot(e => m0.entries.map(_.path).contains(e.path))
     assert(inc1.nonEmpty && inc1.forall(e => e.min.contains("b1") && e.max.contains("b2")),
-      s"increment files missing the commit range: $inc1")
+      s"increment files missing their key range: $inc1")
     // batch 2 above again → BOTH earlier files carry forward
     CdcSink.merge(spark, strLog(("c1", "c", 20, 20.0)), dir, None)
     val m2 = TxnLog.current(fs, dir).get
@@ -214,6 +214,27 @@ class CdcPruneSpec extends AnyFunSuite {
       .select("key", "value").as[(String, Double)].collect().toMap
     assert(got == Map("a1" -> 1.0, "a2" -> 2.0, "b1" -> -10.0,
       "b2" -> 11.0, "c1" -> 20.0))
+  }
+
+  test("merge increments record footer row counts; keys whose footers do not decode keep the commit range") {
+    // double keys have no exact footer decoding: the increment takes
+    // the commit-level range (batch bounds ∪ touched ranges) and its
+    // row count from the footer, and no stats scan job runs
+    val dir = Files.createTempDirectory("graft_prune_dbl_").toString
+    CdcSink.writeSnapshot(spark.range(0, 100).select(
+      (col("id").cast("double") / 8).as("key"), lit("c").as("op"),
+      col("id").as("offset"), col("id").cast("double").as("value"),
+      lit("bin.1").as("source_file")), dir)
+    val m0 = TxnLog.current(fs, dir).get
+    val batch = Seq((1000.5, "c", 200L, 1.0), (1001.5, "c", 201L, 2.0))
+      .toDF("key", "op", "offset", "value").withColumn("source_file", lit("bin.1"))
+    val (_, jobs) = SparkJobs.during(spark)(CdcSink.merge(spark, batch, dir, None))
+    assert(!jobs.exists(_.callSite.startsWith("collect at TxnLog.scala")), jobs.toString)
+    val inc = TxnLog.current(fs, dir).get.entries
+      .filterNot(e => m0.entries.map(_.path).contains(e.path))
+    assert(inc.nonEmpty && inc.forall(e =>
+      e.min.contains("1000.5") && e.max.contains("1001.5")), inc.toString)
+    assert(inc.flatMap(_.rows).sum == 2 && inc.forall(_.rows.isDefined), inc.toString)
   }
 
   test("null batch keys degrade to a full (never wrong) merge") {
@@ -506,9 +527,12 @@ class CdcPruneSpec extends AnyFunSuite {
   test("randomized equivalence: readRange == full-scan filter across seeded merge streams") {
     // The property the whole read path hangs on: for ANY window and
     // ANY merge history — clustered and scattered keys, updates,
-    // deletes, NULL keys, stats-bearing and stats-less (post-merge,
-    // computeStats=false) files mixed in one manifest — the pruned
-    // read returns exactly what a full scan + row filter returns.
+    // deletes, NULL keys, stats-bearing and stats-less files mixed in
+    // one manifest — the pruned read returns exactly what a full scan
+    // + row filter returns. Merges record stats for every file they
+    // write, so the stats-less files (a legacy or foreign writer's
+    // shape) are made on purpose: each merge's new files are
+    // republished without stats, and mid-stream half of all entries.
     val rnd = new scala.util.Random(20260815L)
     val dir = Files.createTempDirectory("graft_prune_rreq_").toString
     val boot = spark.range(0, 4000).select(
@@ -522,8 +546,8 @@ class CdcPruneSpec extends AnyFunSuite {
       val rows = (0 until n).map { i =>
         val key: Option[String] =
           // nulls only in the LAST batch: a null batch key forces a
-          // full (stats-less) rewrite, which would destroy the mixed
-          // prunable shape the earlier windows are exercising
+          // full rewrite, which would destroy the mixed prunable
+          // shape the earlier windows are exercising
           if (withNulls && rnd.nextInt(10) == 0) None
           else if (rnd.nextBoolean()) Some(f"k${rnd.nextInt(400)}%05d") // scattered low
           else Some(f"k${1500 + rnd.nextInt(40)}%05d")                  // clustered mid
@@ -540,23 +564,26 @@ class CdcPruneSpec extends AnyFunSuite {
     def sortedRows(df: DataFrame): Seq[(String, Double)] =
       df.select("key", "value").collect()
         .map(r => String.valueOf(r.getString(0)) -> r.getDouble(1)).toSeq.sorted
+    def stripStats(m: TxnLog.Manifest, strip: TxnLog.Entry => Boolean): Unit =
+      TxnLog.commit(fs, dir, m.version + 1, m.schema,
+        m.entries.map(e => if (strip(e)) e.copy(min = None, max = None) else e))
     (0 until 5).foreach { b =>
+      val before = TxnLog.current(fs, dir).get.entries.map(_.path).toSet
       CdcSink.merge(spark, randBatch(500000L + b * 1000, withNulls = b == 4), dir, None)
+      stripStats(TxnLog.current(fs, dir).get, e => !before(e.path))
       if (b == 2) {
-        // strip stats from half the entries mid-stream (a legacy/
-        // foreign-writer manifest shape) so later windows run
-        // against a genuinely MIXED manifest
+        // strip stats from half the entries mid-stream too, compacted
+        // files included
+        val half = TxnLog.current(fs, dir).get.entries.map(_.path).zipWithIndex
+          .collect { case (p, i) if i % 2 == 0 => p }.toSet
+        stripStats(TxnLog.current(fs, dir).get, e => half(e.path))
+      }
+      if (b < 4) {
+        // the windows below really run against the mixed shape the
+        // property claims (the null-key batch touches every file)
         val m = TxnLog.current(fs, dir).get
-        TxnLog.commit(fs, dir, m.version + 1, m.schema,
-          m.entries.zipWithIndex.map { case (e, i) =>
-            if (i % 2 == 0) e.copy(min = None, max = None) else e
-          })
-        // the manifest now really holds the mixed shape the property
-        // claims (later merges rewrite stats-less files — they always
-        // "intersect" — so assert here, while the mix exists)
-        val mixed = TxnLog.current(fs, dir).get
-        assert(mixed.entries.exists(_.min.isDefined) &&
-          mixed.entries.exists(_.min.isEmpty))
+        assert(m.entries.exists(_.min.isDefined) && m.entries.exists(_.min.isEmpty),
+          s"batch $b: the manifest is not mixed")
       }
       (0 until 3).foreach { _ =>
         val a = rnd.nextInt(4500)

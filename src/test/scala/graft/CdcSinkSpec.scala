@@ -388,6 +388,66 @@ class CdcSinkSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(pl)
   }
 
+  private def commitDirs(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.startsWith("c-")).toSet
+
+  /** 3,000 string keys compacted into key-disjoint files of at most 500 rows. */
+  private def compactedTable(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    CdcSink.writeSnapshot(spark.range(0, 3000).select(
+      format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
+      col("id").as("offset"), lit("p1").as("part"), col("id").cast("double").as("value"),
+      lit("bin.1").as("source_file")), dir)
+    CdcSink.compact(spark, dir, None, targetRecordsPerFile = 500L)
+    dir
+  }
+
+  test("an empty batch on an unpartitioned table commits no file changes but counts as a merge") {
+    val dir = compactedTable("graft_sink_empty_")
+    val m0 = TxnLog.current(fs, dir).get
+    assert(m0.entries.length >= 5 && m0.entries.forall(_.min.isDefined))
+    val dirs0 = commitDirs(dir)
+    CdcSink.merge(spark, changelog(), dir, None)
+    val m1 = TxnLog.current(fs, dir).get
+    assert(m1.version == m0.version + 1)
+    assert(m1.entries == m0.entries, "the empty batch changed the live set")
+    assert(commitDirs(dir) == dirs0, "the empty batch wrote a commit dir")
+    assert(m1.mergeCount == m0.mergeCount + 1)
+    // the next merge touches only the file its key hits
+    CdcSink.merge(spark, changelog(("k00100", "u", 9000, "p1", -1.0)), dir, None)
+    val m2 = TxnLog.current(fs, dir).get
+    val rewritten = m1.entries.map(_.path).toSet -- m2.entries.map(_.path)
+    assert(rewritten.size == 1, s"rewrote $rewritten")
+    assert(table(dir).filter($"key" === "k00100").select("value").head.getDouble(0) == -1.0)
+  }
+
+  test("job counts: a lookup and a scan run one Spark job, merges infer no schema, compaction counts nothing") {
+    val dir = compactedTable("graft_sink_jobs_")
+    val (_, lookup) = SparkJobs.during(spark) {
+      CdcSink.readRange(spark, dir, "k00100", "k00100").collect()
+    }
+    assert(lookup.length == 1, lookup.toString)
+    val (_, scan) = SparkJobs.during(spark) {
+      CdcSink.read(spark, dir).write.format("noop").mode("overwrite").save()
+    }
+    assert(scan.length == 1, scan.toString)
+    // merges that read touched files: footer schema inference would be
+    // a job outside the merge's SQL executions
+    (1 to 3).foreach { i =>
+      val (_, merge) = SparkJobs.during(spark) {
+        CdcSink.merge(spark, changelog((f"k${i * 700}%05d", "u", 9000L + i, "p1", -1.0)), dir, None)
+      }
+      assert(merge.forall(_.sqlExecution), merge.toString)
+    }
+    val m = TxnLog.current(fs, dir).get
+    assert(m.entries.forall(_.rows.isDefined), "a merge committed a file without its row count")
+    // the compaction sizes its output from the log's row counts
+    val (_, compaction) = SparkJobs.during(spark)(CdcSink.compact(spark, dir, None))
+    assert(!compaction.exists(_.callSite.startsWith("count at")), compaction.toString)
+    assert(compaction.forall(_.sqlExecution), compaction.toString)
+    assert(table(dir).count() == 3000)
+  }
+
   test("unpartitioned merge works end-to-end") {
     val dir = Files.createTempDirectory("graft_sink_flat_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, None)
@@ -428,12 +488,25 @@ class CdcSinkSpec extends AnyFunSuite {
     val withScore = Seq(("c", "c", 3L, "p1", 3.0, 42))
       .toDF("key", "op", "offset", "part", "value", "score")
       .withColumn("source_file", lit("bin.1"))
+    val preDdl = TxnLog.current(fs, dir).get
     CdcSink.merge(spark, withScore, dir, None)
     val snap = table(dir)
     assert(snap.columns.contains("score"))
     val scores = snap.select("key", "score").collect()
       .map(r => r.getString(0) -> Option(r.get(1))).toMap
     assert(scores("c").contains(42) && scores("a").isEmpty, scores.toString)
+    // the batch's key lies above the pre-DDL file's range, so that file
+    // is carried untouched; a lookup that opens only it still reads
+    // the log's schema, with score null
+    assert(preDdl.entries.map(_.path).toSet
+      .subsetOf(TxnLog.current(fs, dir).get.entries.map(_.path).toSet))
+    val lookup = CdcSink.readRange(spark, dir, "a", "a").select("key", "score").collect()
+      .map(r => r.getString(0) -> Option(r.get(1))).toSeq
+    assert(lookup == Seq("a" -> None), lookup.toString)
+    // AS OF the pre-DDL version: that version's columns, no score
+    val asOf = TxnLog.readVersion(spark, dir, preDdl.version)
+    assert(asOf.columns.toSeq == preDdl.schema.fieldNames.toSeq && !asOf.columns.contains("score"))
+    assert(asOf.select("key").collect().map(_.getString(0)).toSet == Set("a", "b"))
 
     // RENAME COLUMN then DROP COLUMN rewrite as new versions
     CdcSink.applyDdl(spark, Ddl.parse("ALTER TABLE t1 RENAME COLUMN score TO rating"), dir)
