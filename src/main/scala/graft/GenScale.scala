@@ -155,7 +155,9 @@ object GenScale {
     val spark = SparkSession.builder()
       .master("local[16]")
       .config("spark.sql.shuffle.partitions", "16")
-      // events.ts is TIMESTAMP(NANOS); read as long (see Tables.events)
+      // this plain spark.read.parquet infers every table, so a legacy
+      // TIMESTAMP(NANOS) events.ts needs the flag to read as a long
+      // (graft's own readers declare that schema instead: Tables0)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

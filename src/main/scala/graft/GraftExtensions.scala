@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{BpeTokenCount, CompressRatio, CosineSimilarity, DotProduct, SortedIntersectCount, WsTokenCount}
 
 /** Session extension point: `SparkSession.builder()
   * .withExtensions(new GraftExtensions)` (or
@@ -16,48 +15,9 @@ import graft.functions.{BpeTokenCount, CompressRatio, CosineSimilarity, DotProdu
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     graft.plans.TopKPerKey.register(e)
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("cosine_sim", 2)(exprs)
-        CosineSimilarity(a.head, a(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("dot_product", 2)(exprs)
-        DotProduct(a.head, a(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("compress_ratio"),
-      new ExpressionInfo(classOf[CompressRatio].getName, "compress_ratio"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("compress_ratio", 1)(exprs)
-        CompressRatio(a.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(
-        classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("sorted_intersect_count", 2)(exprs)
-        SortedIntersectCount(a.head, a(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "ws_token_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("ws_token_count", 1)(exprs)
-        WsTokenCount(a.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val a = graft.functions.arity("bpe_token_count", 1)(exprs)
-        BpeTokenCount(a.head)
-      }))
+    graft.functions.sqlFunctions.foreach(f => e.injectFunction((
+      FunctionIdentifier(f.name),
+      new ExpressionInfo(f.exprClass.getName, f.name),
+      f.builder)))
   }
 }

@@ -16,13 +16,15 @@ object Tables {
   def part(s: SparkSession, dir: String): DataFrame      = load(s, dir, "part")
   def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
-  /** events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
-    * default; read nanos as long and convert in Changelog (micros).
+  /** events.ts in nanos (TIMESTAMP(NANOS), which Spark 4 cannot infer,
+    * or plain INT64) is read through the declared schema as a raw long
+    * and converted to micros in Changelog; µs files infer as usual.
+    * A dir mixing both units fails here (see Tables0.tsReadsAsLong).
     */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, dir, "events")
-  }
+  def events(s: SparkSession, dir: String): DataFrame =
+    if (graft.cdc.Tables0.tsReadsAsLong(s, dir))
+      s.read.schema(graft.cdc.Tables0.eventsSchema).parquet(s"$dir/events.parquet")
+    else load(s, dir, "events")
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 

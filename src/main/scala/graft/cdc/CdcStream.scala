@@ -29,11 +29,21 @@ object CdcStream extends org.apache.spark.internal.Logging {
   private[cdc] val HdfsProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
-  /** Set the state-store provider for the next stateful query.
+  /** A clone of the caller's session that runs ONE stateful stream.
+    * Its settings stay on the clone: the caller's conf is never
+    * touched, so queries other threads plan on the caller's session
+    * meanwhile see none of them. Spark locks both settings into the
+    * query's checkpoint when the stream starts.
     *
-    * The choice is VOLUME-SCALED, riding the same probe that sizes
-    * the state partitions (callers pass `smallState = true` exactly
-    * when their bounded replay runs at the 8-partition tier): a
+    * `statePartitions` overrides `spark.sql.shuffle.partitions`, which
+    * sets the stateful operator's state-store partition count: a
+    * bounded local replay with small state wants a handful of stores,
+    * not one per core; a long-lived cluster deployment should size it
+    * to total executor cores and pass None.
+    *
+    * The state-store provider is VOLUME-SCALED, riding the same probe
+    * that sizes the state partitions (callers pass `smallState = true`
+    * exactly when their bounded replay runs at the 8-partition tier): a
     * small-state replay pays mostly per-store spin-up — measured
     * isolated min-of-4 at sf0.1 on local[32]: stream-stream join
     * 4.95 s RocksDB vs 3.57 s HDFS-backed (FOUR stores per
@@ -44,19 +54,21 @@ object CdcStream extends org.apache.spark.internal.Logging {
     * is bounded at 100 TB key cardinality (off-heap, spillable), and
     * measured faster once per-partition state dominates spin-up
     * (upsert state: 1.98 vs 2.44 the other way even at sf0.1).
-    * GRAFT_STATE_PROVIDER=hdfs|rocksdb overrides (A/B profiling).
     */
-  private def setStateProvider(s: SparkSession, smallState: Boolean): Unit = {
-    val p = sys.env.get("GRAFT_STATE_PROVIDER") match {
-      case Some("hdfs")    => HdfsProvider
-      case Some("rocksdb") => RocksProvider
-      case _               => if (smallState) HdfsProvider else RocksProvider
-    }
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+  private def streamSession(
+      s: SparkSession,
+      statePartitions: Option[Int],
+      smallState: Boolean): SparkSession = {
+    val c = org.apache.spark.sql.graftbridge.cloneSession(s)
+    statePartitions.foreach(n => c.conf.set("spark.sql.shuffle.partitions", n.toString))
+    c.conf.set("spark.sql.streaming.stateStore.providerClass",
+      if (smallState) HdfsProvider else RocksProvider)
+    c
   }
 
   /** A bounded replay running at the narrow state-partition tier has
-    * spin-up-dominated state cost — the [[setStateProvider]] signal. */
+    * spin-up-dominated state cost — the provider signal of
+    * [[streamSession]]. */
   private def smallStateTier(statePartitions: Option[Int]): Boolean =
     statePartitions.exists(_ <= 8)
 
@@ -181,15 +193,12 @@ object CdcStream extends org.apache.spark.internal.Logging {
       queryName: String = "cdc_stream_apply",
       statePartitions: Option[Int] = None): DataFrame = {
     import s.implicits._
-    dropStaleSinks(s, queryName)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // upsert state stays on RocksDB at every tier: measured ~2×
     // faster than the HDFS-backed store for flatMapGroupsWithState
     // state (re-confirmed r18: 1.98 s vs 2.44 isolated min-of-4 at
     // sf0.1), and the only provider whose memory is bounded at
     // 100 TB key cardinality (off-heap, spillable).
-    setStateProvider(s, smallState = false)
-    val stream = eventsStream(s, dir)
+    val stream = eventsStream(streamSession(s, statePartitions, smallState = false), dir)
     val changes: Dataset[Change] = Changelog.canonicalize(stream)
       .select(col("key"), col("op"), col("offset"), col("ts"),
         col("event_type"), col("value"))
@@ -202,7 +211,7 @@ object CdcStream extends org.apache.spark.internal.Logging {
     // foreachBatch — snapshot state is |keys|-sized, which grows with
     // the corpus, so a memory sink here would be a driver collect
     val emissions = runToParquetForeachBatch(
-      s, queryName, upserts.toDF(), OutputMode.Update, statePartitions)
+      s, queryName, upserts.toDF(), OutputMode.Update)
     // multiple micro-batches may re-emit a key; keep the last
     // emission (max last_offset per key — append-order-independent),
     // then drop tombstoned keys
@@ -229,36 +238,14 @@ object CdcStream extends org.apache.spark.internal.Logging {
       dir: String,
       queryName: String = "cdc_stream_dedup",
       statePartitions: Option[Int] = None): DataFrame = {
-    dropStaleSinks(s, queryName)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    setStateProvider(s, smallStateTier(statePartitions))
-    def src() = eventsStream(s, dir)
+    val c = streamSession(s, statePartitions, smallStateTier(statePartitions))
+    def src() = eventsStream(c, dir)
     val deduped = src().unionAll(src()).dropDuplicates("event_id")
     // deduped output is corpus-sized — file sink, never driver memory
-    runToParquetSink(s, queryName, deduped, statePartitions)
+    runToParquetSink(s, queryName, deduped)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type")
-  }
-
-  /** Run `body` (start a stream + await it) with
-    * `spark.sql.shuffle.partitions` temporarily overridden. The
-    * override pins the stateful operator's state-store partition
-    * count, which is locked into the checkpoint at first start: a
-    * bounded local replay with small state wants a handful of RocksDB
-    * instances, not one per core; a long-lived cluster deployment
-    * should size it to total executor cores and leave this None. The
-    * conf must stay overridden until the query terminates because
-    * micro-batches plan asynchronously after `start()`.
-    */
-  private def withStatePartitions[T](
-      s: SparkSession, n: Option[Int])(body: => T): T = n match {
-    case None => body
-    case Some(parts) =>
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try body
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Release the resources a finished availableNow run pins in a
@@ -302,6 +289,8 @@ object CdcStream extends org.apache.spark.internal.Logging {
     * driver-resident and grows with traffic (the anti-pattern this
     * repo removed twice: cdc_stream_join in r5, dedup_stream_probe in
     * r9). Results land on storage; the driver only holds the path.
+    * The stream runs on `out`'s own session (a stateful operator's
+    * [[streamSession]] clone); the result is read back on `s`.
     *
     * Per-BASE-query scratch root, pruned on entry: invocations carry
     * nanoTime-suffixed names (fresh checkpoint by design), so temp
@@ -348,21 +337,18 @@ object CdcStream extends org.apache.spark.internal.Logging {
   private[graft] def runToParquetSink(
       s: SparkSession,
       queryName: String,
-      out: DataFrame,
-      statePartitions: Option[Int] = None): DataFrame = {
-    val sinkDir = runInPrunedScratch(s, queryName) { (dir, ckpt) =>
-      withStatePartitions(s, statePartitions) {
-        registerStreamingSession(s)
-        val q = out.writeStream
-          .outputMode(OutputMode.Append)
-          .format("parquet")
-          .queryName(queryName)
-          .option("path", dir)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      out: DataFrame): DataFrame = {
+    val sinkDir = runInPrunedScratch(out.sparkSession, queryName) { (dir, ckpt) =>
+      registerStreamingSession(out.sparkSession)
+      val q = out.writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .queryName(queryName)
+        .option("path", dir)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
     // Explicit schema: an empty stream commits ZERO data files and
     // schema inference would throw; with the stream's own schema the
@@ -386,25 +372,22 @@ object CdcStream extends org.apache.spark.internal.Logging {
       s: SparkSession,
       queryName: String,
       out: DataFrame,
-      mode: OutputMode,
-      statePartitions: Option[Int] = None): DataFrame = {
-    val sinkDir = runInPrunedScratch(s, queryName) { (dir, ckpt) =>
-      withStatePartitions(s, statePartitions) {
-        registerStreamingSession(s)
-        val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
-          if (mode == OutputMode.Complete())
-            // the whole state every batch — idempotent by definition
-            batch.write.mode("overwrite").parquet(dir)
-          else writeBatchSubdir(dir)(batch, batchId)
-        val q = out.writeStream
-          .outputMode(mode)
-          .foreachBatch(writeBatch)
-          .queryName(queryName)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      mode: OutputMode): DataFrame = {
+    val sinkDir = runInPrunedScratch(out.sparkSession, queryName) { (dir, ckpt) =>
+      registerStreamingSession(out.sparkSession)
+      val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
+        if (mode == OutputMode.Complete())
+          // the whole state every batch — idempotent by definition
+          batch.write.mode("overwrite").parquet(dir)
+        else writeBatchSubdir(dir)(batch, batchId)
+      val q = out.writeStream
+        .outputMode(mode)
+        .foreachBatch(writeBatch)
+        .queryName(queryName)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
     readBatchSubdirs(s, out.schema, sinkDir)
   }
@@ -514,7 +497,6 @@ object CdcStream extends org.apache.spark.internal.Logging {
       tableDir: String,
       partitionCol: Option[String] = None,
       queryName: String = "cdc_ingest"): Unit = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val stream = Changelog.canonicalize(
       eventsStream(s, dir))
     registerStreamingSession(s)
@@ -560,11 +542,8 @@ object CdcStream extends org.apache.spark.internal.Logging {
       queryName: String = "cdc_stream_join",
       statePartitions: Option[Int] = None): DataFrame = {
     import graft.QueryDef._
-    dropStaleSinks(s, queryName)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    setStateProvider(s, smallStateTier(statePartitions))
-    def src() = Changelog.canonicalize(
-      eventsStream(s, dir))
+    val c = streamSession(s, statePartitions, smallStateTier(statePartitions))
+    def src() = Changelog.canonicalize(eventsStream(c, dir))
     val clicks = src().filter(col("event_type") === "click")
       .select(col("key"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
@@ -576,7 +555,7 @@ object CdcStream extends org.apache.spark.internal.Logging {
       col("key") === col("p_key") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-    runToParquetSink(s, queryName, pairs, statePartitions)
+    runToParquetSink(s, queryName, pairs)
       .groupBy(date_trunc("day", col("click_ts")).as("day"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("key")).as("n_users"),
@@ -594,14 +573,8 @@ object CdcStream extends org.apache.spark.internal.Logging {
       queryName: String = "cdc_stream_window",
       statePartitions: Option[Int] = None): DataFrame = {
     import graft.QueryDef._
-    dropStaleSinks(s, queryName)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // set explicitly: this entry used to inherit whatever provider a
-    // previously-run stateful query leaked into the shared session
-    // conf — measurement nondeterminism, not a semantic issue
-    setStateProvider(s, smallStateTier(statePartitions))
-    val stream = Changelog.canonicalize(
-      eventsStream(s, dir))
+    val stream = Changelog.canonicalize(eventsStream(
+      streamSession(s, statePartitions, smallStateTier(statePartitions)), dir))
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -610,20 +583,21 @@ object CdcStream extends org.apache.spark.internal.Logging {
     // Complete-mode state via foreachBatch overwrite: each batch is
     // the whole aggregate, the last overwrite is the answer — window
     // cardinality is bounded but still not the driver's to hold
-    runToParquetForeachBatch(
-      s, queryName, agg, OutputMode.Complete, statePartitions)
+    runToParquetForeachBatch(s, queryName, agg, OutputMode.Complete)
   }
 }
 
 /** Static schema for the events table (streaming sources must declare
-  * schemas up front — no inference mid-pipeline at scale).
+  * schemas up front — no inference mid-pipeline at scale; a batch
+  * `Tables.events` declares it only for nanos files).
   *
   * The `ts` column's declared type is dispatched on the ACTUAL
-  * parquet annotation of one probed footer, because the two testdata
+  * parquet annotation of the probed footers, because the two testdata
   * generations differ: TIMESTAMP(NANOS) (and plain-INT64 nanos
   * written back by old GenScale runs) must be read as LongType
-  * (Spark 4 rejects ns timestamps without the nanosAsLong legacy
-  * flag) and converted `div 1000` downstream, while TIMESTAMP(MICROS)
+  * (Spark 4 cannot infer a ns timestamp, but reads one exactly
+  * through a declared long, no session flag needed) and converted
+  * `div 1000` downstream, while TIMESTAMP(MICROS)
   * reads natively as TimestampType with NO conversion. Declaring
   * LongType for a µs file silently re-divides micros by 1000 and
   * collapses every timestamp onto 1970-01-20 — the reference decodes
@@ -633,7 +607,7 @@ object CdcStream extends org.apache.spark.internal.Logging {
   * conversion on the dtype this schema declares, plus a loud
   * year-range guard so a future unit drift fails at the source.
   */
-private[cdc] object Tables0 {
+private[graft] object Tables0 {
   import org.apache.spark.sql.types._
 
   private def schemaWithTs(tsType: DataType): StructType = StructType(Seq(
@@ -677,7 +651,7 @@ private[cdc] object Tables0 {
     * (Spark reads them natively as TimestampType). Throws on a dir
     * whose part files disagree — see [[eventsStreamSchema]].
     */
-  private def tsReadsAsLong(s: SparkSession, dir: String): Boolean = {
+  def tsReadsAsLong(s: SparkSession, dir: String): Boolean = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(conf)

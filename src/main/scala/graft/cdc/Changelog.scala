@@ -63,7 +63,7 @@ object Changelog {
 
   def canonicalize(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    // ns-as-long (see Tables.events / Tables0.eventsStreamSchema) →
+    // ns-as-long (declared by Tables0.eventsSchema) →
     // truncate to micros for Catalyst; µs files arrive as
     // TimestampType and pass through untouched.
     val decoded =

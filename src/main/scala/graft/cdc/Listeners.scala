@@ -67,7 +67,6 @@ object Listeners {
     try {
       val qn = s"cdc_listeners_${System.nanoTime()}"
       val acc = s.sparkContext.longAccumulator(qn)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val keys = Changelog.canonicalize(
         CdcStream.eventsStream(s, dir))
         .select(col("key")).as[String]

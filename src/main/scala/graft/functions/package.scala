@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.{toColumn, toExpr}
 
 /** Column-level API over graft's native Catalyst expressions, plus
@@ -36,44 +37,36 @@ package object functions {
   def dsir_score(words: Column, wts: Array[Long]): Column =
     toColumn(DsirScore(toExpr(words), wts))
 
-  /** Arity gate for SQL builders: extra arguments must not be
-    * silently discarded and a missing one must raise a NAMED error,
-    * not a bare NoSuchElement from exprs.head. */
-  private[graft] def arity(
-      name: String, n: Int)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    require(exprs.length == n,
-      s"$name expects $n argument(s), got ${exprs.length}")
-    exprs
+  /** One SQL-callable graft expression. `builder` is what both
+    * registration routes install: an arity gate, then `build`. The
+    * gate keeps extra arguments from being silently discarded and
+    * makes a missing one raise a NAMED error, not a bare
+    * NoSuchElement from exprs.head. */
+  private[graft] final case class SqlFunction(
+      name: String,
+      exprClass: Class[_ <: Expression],
+      arity: Int,
+      build: Seq[Expression] => Expression) {
+    def builder: Seq[Expression] => Expression = exprs => {
+      require(exprs.length == arity,
+        s"$name expects $arity argument(s), got ${exprs.length}")
+      build(exprs)
+    }
   }
 
+  /** The SQL function table; [[register]] and [[graft.GraftExtensions]]
+    * both iterate it. */
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("cosine_sim", classOf[CosineSimilarity], 2, a => CosineSimilarity(a.head, a(1))),
+    SqlFunction("dot_product", classOf[DotProduct], 2, a => DotProduct(a.head, a(1))),
+    SqlFunction("compress_ratio", classOf[CompressRatio], 1, a => CompressRatio(a.head)),
+    SqlFunction("sorted_intersect_count", classOf[SortedIntersectCount], 2,
+      a => SortedIntersectCount(a.head, a(1))),
+    SqlFunction("ws_token_count", classOf[WsTokenCount], 1, a => WsTokenCount(a.head)),
+    SqlFunction("bpe_token_count", classOf[BpeTokenCount], 1, a => BpeTokenCount(a.head)))
+
   /** Register graft functions on an existing session (temp scope). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => { val a = arity("cosine_sim", 2)(exprs); CosineSimilarity(a.head, a(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => { val a = arity("dot_product", 2)(exprs); DotProduct(a.head, a(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "compress_ratio",
-      exprs => { val a = arity("compress_ratio", 1)(exprs); CompressRatio(a.head) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => { val a = arity("sorted_intersect_count", 2)(exprs)
-        SortedIntersectCount(a.head, a(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count",
-      exprs => { val a = arity("ws_token_count", 1)(exprs); WsTokenCount(a.head) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_token_count",
-      exprs => { val a = arity("bpe_token_count", 1)(exprs); BpeTokenCount(a.head) },
-      "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach(f => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
 }

@@ -17,6 +17,10 @@ package object graftbridge {
   def analyzedPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =
     classic.ClassicConversions.castToImpl(df).queryExecution.analyzed
 
+  /** A session with a copy of `spark`'s conf, temp views and functions. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    classic.ClassicConversions.castToImpl(spark).cloneSession()
+
   /** Release the executor blocks behind a localCheckpoint()ed frame.
     * Dataset.unpersist is a no-op for checkpoints (they bypass the
     * CacheManager), so without this the blocks linger until RDD GC.

@@ -358,7 +358,6 @@ class CdcSinkSpec extends AnyFunSuite {
     spark.streams.addListener(pl)
     val qn = s"listener_probe_${System.nanoTime()}"
     try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val counter = spark.sparkContext.longAccumulator("events_seen")
       val stream = spark.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(

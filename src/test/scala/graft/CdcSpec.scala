@@ -220,7 +220,6 @@ class CdcSpec extends AnyFunSuite {
     // dispatch on the actual layout and read the same rows either way.
     import org.apache.spark.sql.functions._
     val dirLayout = java.nio.file.Files.createTempDirectory("graft_layout_").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf/events.parquet")
       .repartition(3).write.parquet(s"$dirLayout/events.parquet")
     val flat = CdcStream.streamingDedup(spark, sf, s"lay_flat_${System.nanoTime()}")
@@ -262,7 +261,6 @@ class CdcSpec extends AnyFunSuite {
     // clicks only: the interval join can never match, the parquet sink
     // commits zero data files, and the read must not throw
     val dir = java.nio.file.Files.createTempDirectory("graft_clicks_").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf/events.parquet")
       .filter(col("event_type") === "click")
       .write.parquet(s"$dir/events.parquet")

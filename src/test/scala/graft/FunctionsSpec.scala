@@ -87,6 +87,13 @@ class FunctionsSpec extends AnyFunSuite {
       "dot_product(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d").collect().head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1) - 11.0) < 1e-12)
+    // the arity gate names the function instead of dropping or
+    // inventing an argument
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    val bad = intercept[Exception](spark.sql("SELECT cosine_sim(array(1.0f))").collect())
+    assert(messages(bad).exists(_.contains("cosine_sim expects 2 argument(s), got 1")),
+      messages(bad).mkString(" | "))
 
     val ext = SparkSession.builder()
       .master("local[2]")

@@ -62,5 +62,68 @@ class MixedUnitSpec extends AnyFunSuite {
     writeOnePart(new java.io.File(nDir), onDir)
     assert(Tables0.eventsStreamSchema(spark, onlyNanos.toString) ==
       Tables0.eventsSchema)
+    // a batch read runs the same probe, so it fails fast the same way
+    val batch = intercept[IllegalStateException](graft.Tables.events(spark, root.toString))
+    assert(batch.getMessage.contains("mixes timestamp units"), batch.getMessage)
+  }
+
+  /** `<dir>/events.parquet` as one file whose `ts` is annotated
+    * TIMESTAMP(NANOS,true), the unit Spark 4 cannot infer. */
+  private def writeTrueNanosEvents(
+      dir: java.io.File,
+      rows: Seq[(Long, Long, Long, String, Double)]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val groups = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(new java.io.File(dir, "events.parquet").toString))
+      .withType(schema)
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .build()
+    try rows.foreach { case (id, ts, user, typ, v) =>
+      w.write(groups.newGroup().append("event_id", id).append("ts", ts)
+        .append("user_id", user).append("event_type", typ).append("value", v)
+        .append("props", "{}"))
+    } finally w.close()
+  }
+
+  test("true TIMESTAMP(NANOS) events read on a session without the legacy flag") {
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    assert(s.conf.get(flag, "false") == "false")
+    val dir = java.nio.file.Files.createTempDirectory("true_nanos_").toFile
+    val base = 1704067200L * 1000000000L // 2024-01-01T00:00:00Z in nanos
+    writeTrueNanosEvents(dir, Seq(
+      (1L, base + 123456789L, 7L, "signup", 1.5),
+      (2L, base + 60000000999L, 7L, "click", 2.5),
+      (3L, base + 120000001000L, 8L, "signup", 4.0)))
+    // Tables.events: the raw nanos, through the declared long schema
+    val raw = graft.Tables.events(s, dir.toString)
+    assert(raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(raw.orderBy("event_id").collect().map(_.getLong(1)).toSeq ==
+      Seq(base + 123456789L, base + 60000000999L, base + 120000001000L))
+    // Changelog.fromEvents: truncated to the µs instant
+    val micros = Changelog.fromEvents(s, dir.toString).orderBy("offset")
+      .select(col("ts")).collect().map(_.getTimestamp(0).toInstant).toSeq
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    assert(micros == Seq(t0.plusNanos(123456000L), t0.plusNanos(60000000000L),
+      t0.plusNanos(120000001000L)))
+    // the streaming upsert reads the same file and lands on the batch fold
+    val streamed = CdcStream.applyAvailableNow(s, dir.toString,
+      s"true_nanos_${System.nanoTime()}", statePartitions = Some(2))
+      .select("key", "last_offset").orderBy("key")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(streamed == Seq(("7", 2L), ("8", 3L)))
+    assert(s.conf.get(flag, "false") == "false")
   }
 }
