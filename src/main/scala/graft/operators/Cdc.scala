@@ -1151,12 +1151,22 @@ object Cdc {
       .orderBy("event_type")
   }
 
-  // --- cdc_binlog_source: real MySQL binlog files → event DataFrame ---
-  // Reads the reference repo's own binlog fixtures through the DSv2
-  // "binlog" format (rows-only check: the oracle cannot read binlog).
+  /** Glob over the eight MySQL 8.0.21 binlog fixtures
+    * ([[graft.sources.binlog.BinlogGen.writeReferenceFixtures]], the
+    * same bytes BinlogSpec reads from its test resources), written
+    * once under the temp dir as `events/<fixture>/<file>`. */
+  private def referenceFixtures(): String =
+    ensureGenerated("graft_binlog_fixtures_v1") { tmp =>
+      graft.sources.binlog.BinlogGen.writeReferenceFixtures(
+        tmp.resolve("events").toString)
+    } + "/events/*/*"
+
+  // --- cdc_binlog_source: MySQL binlog files → event DataFrame ---
+  // Reads the MySQL 8.0.21 binlog fixtures through the DSv2 "binlog"
+  // format (rows-only check: the oracle cannot read binlog).
   private def binlogSource(s: SparkSession, dir: String): DataFrame =
     graft.sources.binlog.BinlogSource
-      .events(s, "/root/reference/tests/events/*/*")
+      .events(s, referenceFixtures())
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("table_id")).as("n_tables"))
@@ -1276,14 +1286,14 @@ object Cdc {
       |ORDER BY plane""".stripMargin
 
   // --- cdc_binlog_stream: readStream.format("binlog") micro-batch path ---
-  // Tails the reference repo's own fixture files through the DSv2
+  // Tails the MySQL 8.0.21 binlog fixtures through the DSv2
   // MicroBatchStream (rows-only: the oracle cannot read binlog).
   private def binlogStream(s: SparkSession, dir: String): DataFrame = {
     val qn = s"cdc_binlog_stream_${System.nanoTime()}"
     CdcStream.dropStaleSinks(s, qn)
     CdcStream.registerStreamingSession(s)
     val q = s.readStream.format("binlog")
-      .load("/root/reference/tests/events/*/*")
+      .load(referenceFixtures())
       .writeStream.format("memory").queryName(qn)
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("binlog_stream_ckpt_").toString)
@@ -1321,7 +1331,7 @@ object Cdc {
       }
     }
     val base = graft.sources.binlog.BinlogSource
-      .events(s, "/root/reference/tests/events/*/*")
+      .events(s, referenceFixtures())
     val dispatch = base
       .filter(col("event_type") === "WRITE_ROWS_V2" && col("log_pos") > 0)
       .select("event_type", "table_name", "op")
@@ -1772,7 +1782,7 @@ object Cdc {
   // rust-cdc src/mysql/event/mod.rs XidEvent) — the XID terminator
   // is the atomic-apply unit a correct sink must respect (commit
   // offsets only at XID boundaries, never mid-transaction). This
-  // entry assembles the reference's own fixture binlogs back into
+  // entry assembles the binlog fixtures back into
   // their transactions: each event joins the NEAREST FOLLOWING
   // commit in its file (min-struct over an unbounded-following
   // window — ONE exchange on file, the binlog's natural parallel
@@ -1813,7 +1823,7 @@ object Cdc {
 
   private def txnAssemble(s: SparkSession, dir: String): DataFrame =
     assembleTransactions(graft.sources.binlog.BinlogSource
-        .events(s, "/root/reference/tests/events/*/*"))
+        .events(s, referenceFixtures()))
       .select(regexp_extract(col("file"), "events/([^/]+)/", 1).as("fixture"),
         col("txn_xid"), col("begin_pos"), col("commit_pos"),
         col("n_row_images"), col("n_tables"), col("n_events"))

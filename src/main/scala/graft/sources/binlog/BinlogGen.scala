@@ -13,6 +13,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * TABLE_MAP for `gen.gen (id INT, title VARCHAR(160))`, then
   * WRITE_ROWS_V2 events of `rowsPerEvent` rows each, one XID per
   * event. All timestamps fixed → byte-identical output across runs.
+  * [[writeReferenceFixtures]] alone writes server-shaped files
+  * (MySQL 8.0.21 FDE, GTID events, CRC32 trailers).
   */
 object BinlogGen {
 
@@ -20,19 +22,21 @@ object BinlogGen {
   private val Ts = 1700000000L // fixed
   private val ServerId = 1L
 
-  /** Shared fixture-file scaffold: magic + FDE, then each emitted
-    * event threaded through [[writeEvent]] position accounting. One
-    * place to change if fixtures ever gain checksums/rotate events —
-    * was EIGHT copies of the open/magic/FDE/close boilerplate.
+  /** Shared fixture-file scaffold: magic + `fde`, then each emitted
+    * event threaded through [[writeEvent]] position accounting; with
+    * `checksum` every event, the FDE included, carries a CRC32
+    * trailer.
     */
-  private def withBinlog(path: String)(body: ((Int, Array[Byte]) => Unit) => Unit): Unit = {
+  private def withBinlog(
+      path: String, fde: Array[Byte] = fdeBody(), checksum: Boolean = false)(
+      body: ((Int, Array[Byte]) => Unit) => Unit): Unit = {
     val out = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
     try {
       out.write(BinlogParser.Magic)
       var pos = 4L
       def emit(eventType: Int, eventBody: Array[Byte]): Unit =
-        pos = writeEvent(out, pos, eventType, eventBody)
-      emit(0x0f, fdeBody())
+        pos = writeEvent(out, pos, eventType, eventBody, checksum)
+      emit(0x0f, fde)
       body(emit)
     } finally out.close()
   }
@@ -204,8 +208,10 @@ object BinlogGen {
     b.array()
   }
 
-  private def writeEvent(out: BufferedOutputStream, pos: Long, eventType: Int, body: Array[Byte]): Long = {
-    val size = 19 + body.length
+  private def writeEvent(
+      out: BufferedOutputStream, pos: Long, eventType: Int, body: Array[Byte],
+      checksum: Boolean): Long = {
+    val size = 19 + body.length + (if (checksum) 4 else 0)
     val h = ByteBuffer.allocate(19).order(ByteOrder.LITTLE_ENDIAN)
     h.putInt(Ts.toInt)
     h.put(eventType.toByte)
@@ -215,17 +221,34 @@ object BinlogGen {
     h.putShort(0)
     out.write(h.array())
     out.write(body)
+    if (checksum) { // CRC32 over header + body, u32 LE
+      val crc = new java.util.zip.CRC32
+      crc.update(h.array()); crc.update(body)
+      out.write(ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+        .putInt(crc.getValue.toInt).array())
+    }
     pos + size
   }
 
-  private def fdeBody(): Array[Byte] = {
-    val b = ByteBuffer.allocate(2 + 50 + 4 + 1 + 40).order(ByteOrder.LITTLE_ENDIAN)
+  /** FORMAT_DESCRIPTION body. The default is the generator's own FDE:
+    * 39 post-header lengths, checksum algorithm 0 (none). `checksum`
+    * lays out an 8.0.20+ server's FDE instead: one post-header length
+    * per event type 1..40, then algorithm 1 (CRC32). Post-header
+    * lengths are written as zero: the parser reads each event type's
+    * fixed layout.
+    */
+  private def fdeBody(
+      serverVersion: String = "8.0.99-graftgen",
+      checksum: Boolean = false): Array[Byte] = {
+    val nTypes = if (checksum) 40 else 39
+    val b = ByteBuffer.allocate(2 + 50 + 4 + 1 + nTypes + 1).order(ByteOrder.LITTLE_ENDIAN)
     b.putShort(4) // binlog_version
-    val ver = "8.0.99-graftgen".getBytes("UTF-8")
+    val ver = serverVersion.getBytes("UTF-8")
     b.put(ver); b.put(new Array[Byte](50 - ver.length)) // null-padded
     b.putInt(0) // create_timestamp
     b.put(19.toByte) // header length
-    b.put(new Array[Byte](40)) // post-header lens + alg byte 0 (no CRC)
+    b.put(new Array[Byte](nTypes)) // post-header lengths
+    b.put((if (checksum) 1 else 0).toByte) // checksum algorithm
     b.array()
   }
 
@@ -662,16 +685,22 @@ object BinlogGen {
     }
   }
 
+  /** TABLE_MAP for `<schema>.<table>`; `nullable(i)` marks column i
+    * nullable (default: none). */
   private def genericTableMapBody(
       tableId: Long, table: String,
-      colTypes: Array[Int], metaBytes: Array[Byte]): Array[Byte] = {
-    val schema = "gen".getBytes("UTF-8")
+      colTypes: Array[Int], metaBytes: Array[Byte],
+      schemaName: String = "gen",
+      nullable: Int => Boolean = _ => false): Array[Byte] = {
+    val schema = schemaName.getBytes("UTF-8")
     val tbl = table.getBytes("UTF-8")
     val nCols = colTypes.length
     require(nCols < 251 && metaBytes.length < 251)
-    val nullLen = (nCols + 7) / 8
+    val nullBits = new Array[Byte]((nCols + 7) / 8)
+    (0 until nCols).filter(nullable).foreach(i =>
+      nullBits(i / 8) = (nullBits(i / 8) | (1 << (i % 8))).toByte)
     val b = ByteBuffer.allocate(6 + 2 + 1 + schema.length + 1 + 1 + tbl.length + 1 +
-      1 + nCols + 1 + metaBytes.length + nullLen).order(ByteOrder.LITTLE_ENDIAN)
+      1 + nCols + 1 + metaBytes.length + nullBits.length).order(ByteOrder.LITTLE_ENDIAN)
     putU48(b, tableId)
     b.putShort(1)
     b.put(schema.length.toByte); b.put(schema); b.put(0.toByte)
@@ -680,27 +709,276 @@ object BinlogGen {
     colTypes.foreach(t => b.put(t.toByte))
     b.put(metaBytes.length.toByte)
     b.put(metaBytes)
-    b.put(new Array[Byte](nullLen)) // nothing nullable
+    b.put(nullBits)
     b.array()
   }
 
+  /** v2 rows-event body with every column present in every image;
+    * for an update (`update`), `rowValues` are (before, after) pairs
+    * flattened in order. */
   private def genericRowsBody(
-      tableId: Long, nCols: Int, rowValues: Seq[Array[Byte]]): Array[Byte] = {
+      tableId: Long, nCols: Int, rowValues: Seq[Array[Byte]],
+      update: Boolean = false): Array[Byte] = {
     val nullLen = (nCols + 7) / 8
     val rowBytes = rowValues.map(_.length + nullLen).sum
     val presentLen = (nCols + 7) / 8
-    val b = ByteBuffer.allocate(6 + 2 + 2 + 1 + presentLen + rowBytes)
+    val nPresent = if (update) 2 else 1
+    val b = ByteBuffer.allocate(6 + 2 + 2 + 1 + nPresent * presentLen + rowBytes)
       .order(ByteOrder.LITTLE_ENDIAN)
     putU48(b, tableId)
     b.putShort(1)
     b.putShort(2) // extra data length (just itself)
     b.put(nCols.toByte) // col count lenenc (< 251)
-    b.put(Array.fill(presentLen)(0xff.toByte)) // all columns present
+    (1 to nPresent).foreach(_ => // all columns present
+      b.put(Array.fill(presentLen)(0xff.toByte)))
     rowValues.foreach { v =>
       b.put(new Array[Byte](nullLen)) // null bitmap: none null
       b.put(v)
     }
     b.array()
+  }
+
+  // --- reference fixtures: binlogs as a MySQL 8.0.21 server writes them
+
+  /** Writes the eight binlog fixtures the binlog specs and the
+    * cdc_binlog_source / _stream / _pushdown and cdc_txn_assemble
+    * entries read, as `<dir>/<fixture>/<file>`, each with the
+    * `sql.sql` whose statements it logs. Every file is laid out as a
+    * MySQL 8.0.21 server with binlog_format=ROW and
+    * binlog_checksum=CRC32 writes it: a binlog v4 FDE (server
+    * `8.0.21`, CRC32), a PREVIOUS_GTIDS event, then per transaction a
+    * GTID event (ANONYMOUS_GTID under gtid_mode=OFF) and its QUERY /
+    * TABLE_MAP / rows v2 / XID events, each with a CRC32 trailer.
+    * TABLE_MAPs carry no optional-metadata block. The test resources
+    * `binlog/events` hold these bytes; BinlogSpec checks them against
+    * this writer.
+    */
+  def writeReferenceFixtures(dir: String): Unit =
+    ReferenceFixtures.foreach { f =>
+      val d = java.nio.file.Paths.get(dir, f.name)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve("sql.sql"), f.sql)
+      withBinlog(d.resolve(f.file).toString,
+        fdeBody("8.0.21", checksum = true), checksum = true) { emit =>
+        emit(0x23, previousGtidsBody(f.executed))
+        f.txns.zipWithIndex.foreach { case (t, i) =>
+          val rest = t.events.map { case (_, b) => 19 + b.length + 4 }.sum
+          emit(if (t.gno == 0) 0x22 else 0x21, gtid80Body(t.gno, i + 1L, rest))
+          t.events.foreach { case (et, b) => emit(et, b) }
+        }
+        f.tail.foreach { case (et, b) => emit(et, b) }
+      }
+    }
+
+  /** A transaction's events after its GTID event; `gno` 0 is the
+    * ANONYMOUS_GTID of a gtid_mode=OFF server. */
+  private final case class ServerTxn(events: Seq[(Int, Array[Byte])], gno: Long = 0L)
+
+  /** `executed`: the PREVIOUS_GTIDS set, half-open gno intervals
+    * under [[ServerSid]]; `tail`: events after the last transaction. */
+  private final case class RefFixture(
+      name: String, file: String, sql: String, txns: Seq[ServerTxn],
+      executed: Seq[(Long, Long)] = Nil, tail: Seq[(Int, Array[Byte])] = Nil)
+
+  private val RefSchema = "rustcdc"
+  /** `rustcdc.rustcdc (id INT NOT NULL, name VARCHAR(40))`; utf8mb4
+    * makes the VARCHAR's byte length (its meta) 160. */
+  private val RefTableId = 71L
+  /** the nine-column `rustcdc.rustcdc` of 31_update_rows_v2 */
+  private val RefWideTableId = 72L
+  private val ServerSid: Array[Byte] = {
+    val u = java.util.UUID.fromString("3e11fa47-71ca-11e1-9e33-c80aa9429562")
+    ByteBuffer.allocate(16).putLong(u.getMostSignificantBits)
+      .putLong(u.getLeastSignificantBits).array()
+  }
+
+  private val DropRef = "DROP TABLE IF EXISTS `rustcdc`"
+  private val CreatePair =
+    "CREATE TABLE `rustcdc` (`id` INT NOT NULL PRIMARY KEY, `name` VARCHAR(40))"
+  private val CreateWide =
+    "CREATE TABLE `rustcdc` (`id` INT NOT NULL PRIMARY KEY, `name` VARCHAR(40), " +
+      "`i8` TINYINT, `i16` SMALLINT, `i24` MEDIUMINT, `i64` BIGINT, " +
+      "`f` FLOAT, `d` DOUBLE, `num` DECIMAL(10,4))"
+
+  private def sqlFile(file: String, gtidMode: Boolean, statements: String*): String =
+    (Seq(
+      s"-- Statements logged in $file by MySQL 8.0.21",
+      "-- (binlog_format=ROW, binlog_checksum=CRC32, " +
+        (if (gtidMode) "gtid_mode=ON," else "gtid_mode=OFF: each transaction"),
+      if (gtidMode) "-- server_uuid 3e11fa47-71ca-11e1-9e33-c80aa9429562)."
+      else "-- opens with an ANONYMOUS_GTID).",
+      "USE rustcdc;") ++ statements).mkString("", "\n", "\n")
+
+  private lazy val ReferenceFixtures: Seq[RefFixture] = Seq(
+    RefFixture("15_format_desc", "binlog.000002",
+      sqlFile("binlog.000002", gtidMode = false,
+        "-- binlog.000002 holds only its FORMAT_DESCRIPTION and",
+        "-- PREVIOUS_GTIDS until this flush logs a ROTATE to binlog.000003.",
+        "FLUSH BINARY LOGS;"),
+      txns = Nil, tail = Seq(0x04 -> rotateBody(4L, "binlog.000003"))),
+    RefFixture("16_xid", "binlog.000002",
+      sqlFile("binlog.000002", gtidMode = false,
+        "INSERT INTO `rustcdc` VALUES (1, 'cdc-1'); -- xid 852"),
+      Seq(insertTxn(852L, 1 -> "cdc-1"))),
+    RefFixture("19_table_map", "mysql-bin.000002",
+      sqlFile("mysql-bin.000002", gtidMode = false,
+        "INSERT INTO `rustcdc` VALUES (1, 'cdc-1'); -- xid 331",
+        "INSERT INTO `rustcdc` VALUES (2, 'cdc-2'); -- xid 357"),
+      Seq(insertTxn(331L, 1 -> "cdc-1"), insertTxn(357L, 2 -> "cdc-2"))),
+    RefFixture("30_write_rows_v2", "mysql-bin.000002",
+      sqlFile("mysql-bin.000002", gtidMode = false,
+        "INSERT INTO `rustcdc` VALUES (1, 'cdc-1'), (2, 'cdc-2'); -- xid 15"),
+      Seq(insertTxn(15L, 1 -> "cdc-1", 2 -> "cdc-2"))),
+    RefFixture("31_update_rows_v2", "mysql-bin.000001",
+      sqlFile("mysql-bin.000001", gtidMode = false,
+        s"$DropRef;",
+        s"$CreateWide;",
+        "INSERT INTO `rustcdc` VALUES (1, 'abc', -1, 300, -70000, 5000000000, 1.0, 2.0, 3.0); -- xid 24",
+        "UPDATE `rustcdc` SET `name` = 'xd', `num` = 4.0 WHERE `id` = 1; -- xid 25"),
+      Seq(
+        ddl(s"$DropRef /* generated by server */"),
+        ddl(CreateWide),
+        rowsTxn(24L, wideTableMap, 0x1e, genericRowsBody(RefWideTableId, 9,
+          Seq(wideRow("abc", 30000L)))),
+        rowsTxn(25L, wideTableMap, 0x1f, genericRowsBody(RefWideTableId, 9,
+          Seq(wideRow("abc", 30000L), wideRow("xd", 40000L)), update = true)))),
+    RefFixture("32_delete_rows_v2", "mysql-bin.000001",
+      sqlFile("mysql-bin.000001", gtidMode = false,
+        "INSERT INTO `rustcdc` VALUES (1, 'abcde'); -- xid 37",
+        "DELETE FROM `rustcdc` WHERE 1 = 1; -- xid 38"),
+      Seq(
+        insertTxn(37L, 1 -> "abcde"),
+        rowsTxn(38L, pairTableMap, 0x20,
+          genericRowsBody(RefTableId, 2, Seq(pairRow(1, "abcde")))))),
+    RefFixture("gtid_prev_gtid", "mysql-bin.000001",
+      sqlFile("mysql-bin.000001", gtidMode = true,
+        "-- gtid_executed was 3e11fa47-71ca-11e1-9e33-c80aa9429562:1-2",
+        "-- when mysql-bin.000001 opened (its PREVIOUS_GTIDS).",
+        "INSERT INTO `rustcdc` VALUES (1, 'cdc-1'); -- gtid :3, xid 49",
+        "INSERT INTO `rustcdc` VALUES (2, 'cdc-2'); -- gtid :4, xid 50"),
+      Seq(insertTxn(49L, 1 -> "cdc-1").copy(gno = 3L),
+        insertTxn(50L, 2 -> "cdc-2").copy(gno = 4L)),
+      executed = Seq(1L -> 3L)),
+    RefFixture("query", "mysql-bin.000001",
+      sqlFile("mysql-bin.000001", gtidMode = false, s"$DropRef;", s"$CreatePair;"),
+      Seq(ddl(s"$DropRef /* generated by server */"), ddl(CreatePair))))
+
+  private def ddl(sql: String): ServerTxn = ServerTxn(Seq(0x02 -> queryBody(RefSchema, sql)))
+
+  private def rowsTxn(
+      xid: Long, tableMap: Array[Byte], rowsType: Int, rows: Array[Byte]): ServerTxn =
+    ServerTxn(Seq(0x02 -> queryBody(RefSchema, "BEGIN"), 0x13 -> tableMap,
+      rowsType -> rows, 0x10 -> xidBody(xid)))
+
+  private def insertTxn(xid: Long, rows: (Int, String)*): ServerTxn =
+    rowsTxn(xid, pairTableMap, 0x1e, genericRowsBody(RefTableId, 2,
+      rows.map { case (id, name) => pairRow(id, name) }))
+
+  private def pairTableMap: Array[Byte] =
+    genericTableMapBody(RefTableId, RefSchema, Array(0x03, 0x0f),
+      Array(160.toByte, 0.toByte), RefSchema, _ == 1)
+
+  private def pairRow(id: Int, name: String): Array[Byte] = {
+    val n = name.getBytes("UTF-8")
+    ByteBuffer.allocate(4 + 1 + n.length).order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(id).put(n.length.toByte).put(n).array()
+  }
+
+  /** INT, VARCHAR(40), TINYINT, SMALLINT, MEDIUMINT, BIGINT, FLOAT,
+    * DOUBLE, DECIMAL(10,4); metadata: VARCHAR 160, FLOAT 4, DOUBLE 8,
+    * DECIMAL precision 10 and scale 4. */
+  private def wideTableMap: Array[Byte] =
+    genericTableMapBody(RefWideTableId, RefSchema,
+      Array(0x03, 0x0f, 0x01, 0x02, 0x09, 0x08, 0x04, 0x05, 0xf6),
+      Array(160, 0, 4, 8, 10, 4).map(_.toByte), RefSchema, _ != 0)
+
+  /** The one row of 31_update_rows_v2, (1, name, -1, 300, -70000,
+    * 5000000000, 1.0, 2.0, num / 10^4). */
+  private def wideRow(name: String, numUnscaled: Long): Array[Byte] = {
+    val n = name.getBytes("UTF-8")
+    val i24 = -70000
+    ByteBuffer.allocate(4 + 1 + n.length + 1 + 2 + 3 + 8 + 4 + 8 + 5)
+      .order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(1).put(n.length.toByte).put(n)
+      .put((-1).toByte).putShort(300.toShort)
+      .put((i24 & 0xff).toByte).put(((i24 >> 8) & 0xff).toByte)
+      .put(((i24 >> 16) & 0xff).toByte)
+      .putLong(5000000000L).putFloat(1.0f).putDouble(2.0)
+      .put(decimalBytes(10, 4, numUnscaled))
+      .array()
+  }
+
+  /** QUERY body as a MySQL 8.0 server logs a statement on `schema`:
+    * thread id, exec time, schema length, error code, then the status
+    * variables every statement carries (flags2, the 8.0 default
+    * sql_mode, catalog `std`, charset utf8mb4_0900_ai_ci for client,
+    * connection and server), the schema and the statement text.
+    */
+  private def queryBody(schema: String, sql: String): Array[Byte] = {
+    val db = schema.getBytes("UTF-8")
+    val text = sql.getBytes("UTF-8")
+    val status = ByteBuffer.allocate(26).order(ByteOrder.LITTLE_ENDIAN)
+      .put(0x00.toByte).putInt(0) // Q_FLAGS2_CODE
+      .put(0x01.toByte).putLong(1168113696L) // Q_SQL_MODE_CODE
+      .put(0x06.toByte).put(3.toByte).put("std".getBytes("UTF-8")) // Q_CATALOG_NZ_CODE
+      .put(0x04.toByte).putShort(255.toShort).putShort(255.toShort)
+      .putShort(255.toShort) // Q_CHARSET_CODE
+      .array()
+    ByteBuffer.allocate(13 + status.length + db.length + 1 + text.length)
+      .order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(8) // thread_id
+      .putInt(0) // exec_time
+      .put(db.length.toByte)
+      .putShort(0.toShort) // error_code
+      .putShort(status.length.toShort)
+      .put(status).put(db).put(0.toByte).put(text)
+      .array()
+  }
+
+  /** PREVIOUS_GTIDS body: the sid count, then per sid its uuid and
+    * half-open gno intervals (empty `executed`: no sid). */
+  private def previousGtidsBody(executed: Seq[(Long, Long)]): Array[Byte] = {
+    val nSids = if (executed.isEmpty) 0 else 1
+    val b = ByteBuffer.allocate(8 + nSids * (16 + 8) + 16 * executed.length)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    b.putLong(nSids)
+    if (nSids == 1) {
+      b.put(ServerSid); b.putLong(executed.length)
+      executed.foreach { case (start, end) => b.putLong(start); b.putLong(end) }
+    }
+    b.array()
+  }
+
+  /** GTID / ANONYMOUS_GTID body as MySQL 8.0.21 writes it: flags, sid
+    * (all zero for gno 0), gno, the logical clock (typecode 2,
+    * last_committed, sequence_number), the immediate commit
+    * timestamp (7 bytes, µs), the transaction length (length-encoded;
+    * this event with its CRC plus the `restLen` bytes after it) and
+    * the immediate server version.
+    */
+  private def gtid80Body(gno: Long, seq: Long, restLen: Int): Array[Byte] = {
+    val oneByteLen = 19 + 42 + 7 + 1 + 4 + 4 + restLen
+    val txnLen = if (oneByteLen < 251) oneByteLen else oneByteLen + 2
+    require(txnLen < 65536, "fixture transaction too long")
+    val b = ByteBuffer.allocate(42 + 7 + (if (txnLen < 251) 1 else 3) + 4)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    b.put(0.toByte) // flags
+    b.put(if (gno == 0) new Array[Byte](16) else ServerSid)
+    b.putLong(gno)
+    b.put(2.toByte) // logical timestamp typecode
+    b.putLong(seq - 1); b.putLong(seq) // last_committed, sequence_number
+    val commitUs = Ts * 1000000L
+    (0 until 7).foreach(i => b.put(((commitUs >> (8 * i)) & 0xff).toByte))
+    if (txnLen < 251) b.put(txnLen.toByte)
+    else { b.put(0xfc.toByte); b.putShort(txnLen.toShort) }
+    b.putInt(80021) // immediate_server_version
+    b.array()
+  }
+
+  private def rotateBody(position: Long, nextFile: String): Array[Byte] = {
+    val name = nextFile.getBytes("UTF-8")
+    ByteBuffer.allocate(8 + name.length).order(ByteOrder.LITTLE_ENDIAN)
+      .putLong(position).put(name).array()
   }
 
   /** JSON-column table: `gen.json (id INT, doc JSON)` — one

@@ -217,7 +217,10 @@ object BinlogScan {
 
   /** Expand path/glob options to concrete file paths, name-sorted —
     * binlog files rotate with lexicographically increasing suffixes
-    * (mysql-bin.000001, …), so name order IS commit order.
+    * (mysql-bin.000001, …), so name order IS commit order. A path that
+    * does not exist, or a glob that matches nothing, raises
+    * FileNotFoundException naming it; an existing empty directory
+    * lists as empty (a stream may tail a directory that starts empty).
     */
   def listFiles(options: Map[String, String]): Seq[String] = {
     val paths = options.get("paths")
@@ -230,6 +233,9 @@ object BinlogScan {
       val fs = hp.getFileSystem(conf)
       // glob first (handles plain paths too), then expand directories
       val globbed = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
+      if (globbed.isEmpty)
+        throw new java.io.FileNotFoundException(
+          s"binlog path does not exist or matches no file: $p")
       val stats = globbed.flatMap { s =>
         if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s)
       }

@@ -5,10 +5,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.binlog.{BinlogParser, BinlogSource}
 
-/** Parser + DSv2 source validated against the reference repo's
-  * binlog fixture files (tests/events/...; expectations mirrored
-  * from /root/reference/tests/test.rs assertions and the fixtures'
-  * sql.sql files).
+/** Parser + DSv2 source validated against the repo's binlog
+  * fixtures: the test resources `binlog/events/<fixture>/<file>`,
+  * eight MySQL 8.0.21 binlogs (CRC32 trailers) each beside the
+  * `sql.sql` it logs, written by
+  * [[graft.sources.binlog.BinlogGen.writeReferenceFixtures]].
+  * Fixture names and value assertions follow rust-cdc's
+  * tests/test.rs; literals that encode the fixtures' exact bytes
+  * (event counts, content hashes, log positions) derive from the
+  * parser-independent declaration in [[BinlogFixtureTable]].
   */
 class BinlogSpec extends AnyFunSuite {
 
@@ -18,7 +23,8 @@ class BinlogSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/tests/events"
+  private val fixtures = java.nio.file.Paths.get(
+    getClass.getResource("/binlog/events").toURI).toString
 
   private def parse(rel: String): Seq[BinlogParser.Decoded] = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$fixtures/$rel"))
@@ -645,8 +651,8 @@ class BinlogSpec extends AnyFunSuite {
 
   test("fixture content hash is pinned (batch DSv2 reader)") {
     val df = BinlogSource.events(spark, s"$fixtures/*/*")
-    assert(df.count() == 83)
-    assert(contentHash(df) == new java.math.BigDecimal("-117209207353835206634"))
+    assert(df.count() == 76)
+    assert(contentHash(df) == new java.math.BigDecimal("-36332968324090015693"))
   }
 
   test("pushdown-shaped subset content hash is pinned") {
@@ -670,9 +676,112 @@ class BinlogSpec extends AnyFunSuite {
       .start()
     try q.processAllAvailable() finally q.stop()
     assert(contentHash(spark.table(qn)) ==
-      new java.math.BigDecimal("-117209207353835206634"))
+      new java.math.BigDecimal("-36332968324090015693"))
     spark.sql(s"DROP VIEW IF EXISTS $qn")
     graft.cdc.CdcStream.releaseStreamResources(spark)
+  }
+
+  test("fixture declaration: the parser decodes each fixture to its declared events") {
+    BinlogFixtureTable.files.foreach { case (fixture, file) =>
+      val got = parse(s"$fixture/$file").map(e =>
+        (e.typeName, e.tableName, e.op, e.before, e.after, e.header.logPos, e.xid, e.query))
+      val declared = BinlogFixtureTable.rows.filter(_.fixture == fixture).map(r =>
+        (r.eventType, r.tableName, r.op, r.before, r.after, r.logPos, r.xid, r.query))
+      assert(got == declared, fixture)
+    }
+  }
+
+  test("fixture declaration derives the pinned counts, hashes and positions") {
+    import spark.implicits._
+    val declared = BinlogFixtureTable.rows
+      .map(r => (r.eventType, r.tableName, r.op, r.before, r.after, r.logPos))
+      .toDF("event_type", "table_name", "op", "before", "after", "log_pos")
+    // "fixture content hash is pinned", "streaming reader decodes
+    // identically to the batch reader"
+    assert(declared.count() == 76)
+    assert(contentHash(declared) == new java.math.BigDecimal("-36332968324090015693"))
+    // "pushdown-shaped subset content hash is pinned"
+    val writes = declared.filter(col("event_type") === "WRITE_ROWS_V2")
+      .agg(sum(xxhash64(col("event_type"), col("table_name"), col("op"))
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h"),
+        count(lit(1)).as("n")).collect()(0)
+    assert(writes.getLong(1) == 9)
+    assert(writes.getDecimal(0) == new java.math.BigDecimal("60743979769577694282"))
+    // "cdc_txn_assemble: fixture transactions have exact BEGIN/XID boundaries"
+    val txns = BinlogFixtureTable.transactions
+    assert(txns.filter(_.fixture == "19_table_map").map(t => (t.xid, t.beginPos, t.commitPos)) ==
+      Seq((331L, 310L, 443L), (357L, 597L, 730L)))
+    // ContentPinSpec "cdc_txn_assemble content hash is pinned": the
+    // hash over all the entry's columns
+    val assembled = txns
+      .map(t => (t.fixture, t.xid, t.beginPos, t.commitPos, t.nRowImages, t.nTables, t.nEvents))
+      .toDF("fixture", "txn_xid", "begin_pos", "commit_pos", "n_row_images", "n_tables", "n_events")
+    assert(assembled.count() == 10)
+    assert(assembled.agg(sum(xxhash64(assembled.columns.map(col): _*)
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).collect()(0).getDecimal(0) ==
+      new java.math.BigDecimal("23386758638519543653"))
+  }
+
+  test("committed fixtures are writeReferenceFixtures' bytes, every event CRC32-checked") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def tree(root: Path): Map[String, Array[Byte]] =
+      Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> Files.readAllBytes(p)).toMap
+    val committed = tree(Paths.get(fixtures))
+    val dir = Files.createTempDirectory("binlog_ref_")
+    graft.sources.binlog.BinlogGen.writeReferenceFixtures(dir.toString)
+    val written = tree(dir)
+    assert(written.keySet == committed.keySet)
+    written.foreach { case (rel, bytes) =>
+      assert(java.util.Arrays.equals(bytes, committed(rel)), s"$rel differs")
+    }
+    val binlogs = committed.filter { case (rel, _) => !rel.endsWith("sql.sql") }
+    assert(binlogs.keySet ==
+      BinlogFixtureTable.files.map { case (f, file) => s"$f/$file" }.toSet)
+    // events tile each file: size at header offset 9, log_pos (the
+    // event's end) at 13, CRC32 over header + body in the last 4 bytes
+    binlogs.foreach { case (rel, bytes) =>
+      val b = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      var pos = 4
+      while (pos < bytes.length) {
+        val size = b.getInt(pos + 9)
+        assert(b.getInt(pos + 13) == pos + size, s"$rel@$pos: log_pos")
+        val crc = new java.util.zip.CRC32
+        crc.update(bytes, pos, size - 4)
+        assert((b.getInt(pos + size - 4) & 0xffffffffL) == crc.getValue, s"$rel@$pos: CRC32")
+        pos += size
+      }
+      assert(pos == bytes.length, s"$rel: trailing bytes")
+    }
+  }
+
+  test("a missing binlog path is an error; an existing empty directory reads empty") {
+    import java.nio.file.Files
+    val missing = Files.createTempDirectory("binlog_missing_").resolve("absent").toString
+    def namesPath(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(missing)))
+    // a plain path, and a glob that matches nothing
+    Seq(missing, s"$missing/*/*").foreach { p =>
+      val e = intercept[Exception](BinlogSource.events(spark, p).count())
+      assert(namesPath(e), e.toString)
+    }
+    // a stream's listing
+    def stream(path: String) = spark.readStream.format("binlog").load(path)
+      .writeStream.format("memory").queryName(s"binlog_missing_${System.nanoTime()}")
+      .option("checkpointLocation",
+        Files.createTempDirectory("binlog_missing_ckpt_").toString)
+      .start()
+    val q = stream(missing)
+    val e = intercept[Exception] { try q.processAllAvailable() finally q.stop() }
+    assert(namesPath(e), e.toString)
+    // an existing empty directory lists as empty, batch and stream
+    val empty = Files.createTempDirectory("binlog_empty_").toString
+    assert(BinlogSource.events(spark, empty).count() == 0)
+    val tail = stream(empty)
+    try tail.processAllAvailable() finally tail.stop()
+    assert(spark.table(tail.name).count() == 0)
   }
 
   test("DSv2: spark.read.format(\"binlog\") over the fixture directory") {
@@ -700,11 +809,11 @@ class BinlogSpec extends AnyFunSuite {
         r.getAs[Long]("begin_pos"), r.getAs[Long]("commit_pos"),
         r.getAs[Long]("n_row_images"), r.getAs[Long]("n_events")))
     // 19_table_map: two committed txns, xids 331/357, one row image
-    // each, BEGIN strictly before commit (hand-read from the fixture
-    // via the parser's event listing).
+    // each, BEGIN strictly before commit (positions summed from the
+    // declared event sizes in BinlogFixtureTable).
     val tm = rows.filter(_._1 == "19_table_map").sortBy(_._2)
     assert(tm.map(t => (t._2, t._3, t._4)).toSeq ==
-      Seq((331L, 687L, 820L), (357L, 895L, 1028L)))
+      Seq((331L, 310L, 443L), (357L, 597L, 730L)))
     // every assembled txn: exactly BEGIN + TABLE_MAP(s) + row
     // event(s) + XID between its boundaries, at least one row image,
     // and the commit strictly after the begin
