@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. A short warm-up action runs first so JVM/
   * codegen startup cost doesn't land on an arbitrary first query.
@@ -75,33 +73,7 @@ object Bench {
       if (cacheDropMode == "noop") " (no root — timings ride whatever page cache the host accumulated)"
       else ""))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      (Runtime.getRuntime.availableProcessors() min 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // parallelismFirst stays at its default (true): an A/B across
-      // the 7 heaviest queries showed coalescing-to-advisory-size
-      // (the production-docs recommendation) is a wash-to-LOSS here —
-      // the small shuffles feeding shingle/gram stages are
-      // compute-bound, so fewer post-coalesce partitions serialize
-      // CPU work worth more than the saved task overhead
-      // (dedup_incremental 2.83→3.08s, text_dup_spans 1.84→2.18s).
-      .config("spark.ui.enabled", "false")
-      // the AppStatus/SQLAppStatus listeners run even with the UI off
-      // and by default retain ~1000 executions' plan graphs + job/
-      // stage/task rollups; over a 122-execution run that backlog
-      // inflated later queries 2-4× (measured: the same 5 queries
-      // steady at 4.6s alone vs 19.9s late in the full suite)
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "16")
-      .config("spark.ui.retainedStages", "32")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.appStateStore.asyncTracking.enable", "false")
-      .getOrCreate()
+    val spark = Spark.session()
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_ONLY=a,b,c restricts to a subset (local profiling)

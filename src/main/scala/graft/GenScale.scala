@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: replicate an existing testdata SF directory
@@ -152,15 +152,11 @@ object GenScale {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
     val dest = sys.env.getOrElse("SPARK_GRAFT_DEST", "bench-data/sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      // this plain spark.read.parquet infers every table, so a legacy
-      // TIMESTAMP(NANOS) events.ts needs the flag to read as a long
-      // (graft's own readers declare that schema instead: Tables0)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Spark.session("local[16]", 16, "graft-genscale")
+    // this plain spark.read.parquet infers every table, so a legacy
+    // TIMESTAMP(NANOS) events.ts needs the flag to read as a long
+    // (graft's own readers declare that schema instead: Tables0)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

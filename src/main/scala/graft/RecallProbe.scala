@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-replica recall probe for GenScale-scaled directories — the
@@ -113,15 +113,7 @@ object RecallProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "bench-data/sf1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      (Runtime.getRuntime.availableProcessors() min 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Spark.session()
     spark.sparkContext.setLogLevel("WARN")
     val r = measure(
       Tables.parallelized(Tables.documents(spark, sfDir)),

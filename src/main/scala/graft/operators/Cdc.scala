@@ -252,7 +252,7 @@ object Cdc {
 
   private def typeDecode(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val genDir = ensureGenerated("graft_binlog_typedecode_v2") { tmp =>
+    val genDir = ensureGenerated("graft_binlog_typedecode") { tmp =>
       graft.sources.binlog.BinlogGen.writeTypedFile(
         tmp.resolve("mysql-bin.000001").toString, n = TypeDecodeRows)
       graft.sources.binlog.BinlogGen.writeTemporalFile(
@@ -354,22 +354,31 @@ object Cdc {
   // this generates a deterministic binlog (size scaled to the SF) on
   // first use, then measures the distributed parse through the DSv2
   // source. 8 files → 8-way parallelism.
-  /** Ensure the benchmark binlogs exist (atomic: generate into a
-    * temp dir, rename into place, then drop a completion marker so a
-    * crashed/concurrent generation can never be half-read).
+  /** Short digest of the generators' class bytes (`BinlogGen` and
+    * this object). It is part of every corpus directory's name, so
+    * any edit to a generator writes a fresh corpus instead of reading
+    * a stale one left in the temp dir by an older build.
     */
-  /** Generate-once publish for a derived binlog corpus: write into a
-    * temp dir, stamp `_COMPLETE`, ATOMIC_MOVE into place. Losing the
-    * rename race to a concurrent generator is benign (the winner's
-    * output is identical); any other failure deletes the temp dir
-    * before rethrowing, so a crashed generation never leaks. Shared
-    * by the three generated-corpus entries (was three copies of this
-    * block that would have drifted).
+  private[graft] lazy val generatorDigest: String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    Seq(graft.sources.binlog.BinlogGen.getClass, getClass).foreach { c =>
+      val in = c.getResourceAsStream(s"/${c.getName.replace('.', '/')}.class")
+      try md.update(in.readAllBytes()) finally in.close()
+    }
+    md.digest().take(6).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** Generate-once publish for a derived binlog corpus, at
+    * `<tmpdir>/<name>_<digest>`: write into a temp dir, stamp
+    * `_COMPLETE`, ATOMIC_MOVE into place. Losing the rename race to a
+    * concurrent generator is benign (the winner's output is
+    * identical); any other failure deletes the temp dir before
+    * rethrowing, so a crashed generation never leaks.
     */
-  private def ensureGenerated(name: String)(
+  private[graft] def ensureGenerated(name: String, digest: String = generatorDigest)(
       write: java.nio.file.Path => Unit): String = {
     val genDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), name)
+      System.getProperty("java.io.tmpdir"), s"${name}_$digest")
     val marker = genDir.resolve("_COMPLETE")
     if (!java.nio.file.Files.exists(marker)) {
       // stale partial dir from a crashed/pre-marker generation;
@@ -865,7 +874,7 @@ object Cdc {
       math.min(RoutedGenFiles.toLong, nTxns / RoutedTables.size)).toInt
     val base = nTxns / genFiles
     val rem = (nTxns % genFiles).toInt
-    val genDir = ensureGenerated(s"graft_binlog_routed_v1_$nTxns") { tmp =>
+    val genDir = ensureGenerated(s"graft_binlog_routed_$nTxns") { tmp =>
       var firstTxn = 0L
       (1 to genFiles).foreach { f =>
         val count = (base + (if (f <= rem) 1 else 0)).toInt
@@ -1122,7 +1131,7 @@ object Cdc {
     // oracle counts
     val base = nTxns / ReplicaGenFiles
     val rem = (nTxns % ReplicaGenFiles).toInt
-    ensureGenerated(s"graft_binlog_replica_v3_$nTxns") { tmp =>
+    ensureGenerated(s"graft_binlog_replica_$nTxns") { tmp =>
       var firstGno = 1L
       (1 to ReplicaGenFiles).foreach { f =>
         val count = (base + (if (f <= rem) 1 else 0)).toInt
@@ -1138,7 +1147,7 @@ object Cdc {
   }
 
   private def ensureControlGenerated(): String =
-    ensureGenerated("graft_binlog_ctrl_v2") { tmp =>
+    ensureGenerated("graft_binlog_ctrl") { tmp =>
       graft.sources.binlog.BinlogGen.writeControlFile(
         tmp.resolve("mysql-bin.000001").toString, nRows = 10)
     }
@@ -1156,7 +1165,7 @@ object Cdc {
     * same bytes BinlogSpec reads from its test resources), written
     * once under the temp dir as `events/<fixture>/<file>`. */
   private def referenceFixtures(): String =
-    ensureGenerated("graft_binlog_fixtures_v1") { tmp =>
+    ensureGenerated("graft_binlog_fixtures") { tmp =>
       graft.sources.binlog.BinlogGen.writeReferenceFixtures(
         tmp.resolve("events").toString)
     } + "/events/*/*"

@@ -290,10 +290,10 @@ object TextAnalysis {
   //
   // Scale shape — ONE evaluation of the tokenize+explode subtree.
   // The first cut built c2/c1 as aggregates and joined the bigram
-  // stream back against them; graft.Explain --exec showed the final
-  // adaptive plan evaluated the explode subtree at two stages, ran
-  // the Generate 4x, and executed the c2 exchange twice with NO
-  // ReusedExchange (the r6 verdict's suspicion, confirmed at
+  // stream back against them; its final adaptive plan (what
+  // ProfileEntry's SPARK_GRAFT_EXPLAIN prints) evaluated the explode
+  // subtree at two stages, ran the Generate 4x, and executed the c2
+  // exchange twice with NO ReusedExchange (the r6 verdict's suspicion, confirmed at
   // runtime). This form is the dup_spans pattern instead: the bigram
   // stream is repartition(w1)'d ONCE, and both LM counts ride that
   // single exchange as window counts — n2 over (w1,w2), n1 over (w1)

@@ -215,12 +215,19 @@ object BinlogScan {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** Expand path/glob options to concrete file paths, name-sorted —
-    * binlog files rotate with lexicographically increasing suffixes
-    * (mysql-bin.000001, …), so name order IS commit order. A path that
-    * does not exist, or a glob that matches nothing, raises
-    * FileNotFoundException naming it; an existing empty directory
-    * lists as empty (a stream may tail a directory that starts empty).
+  /** MySQL's binlog file name: `<base>.<6+ digits>`. The index file,
+    * DDL scripts and markers that share a binlog directory never
+    * match. */
+  private val BinlogName = """[^/]+\.\d{6,}""".r
+
+  /** Expand path/glob options to concrete binlog file paths,
+    * name-sorted — binlog files rotate with lexicographically
+    * increasing suffixes (mysql-bin.000001, …), so name order IS
+    * commit order. Only names of MySQL's binlog form are kept. A path
+    * that does not exist, or a glob that matches nothing, raises
+    * FileNotFoundException naming it; an existing directory without
+    * binlog files lists as empty (a stream may tail a directory that
+    * starts empty).
     */
   def listFiles(options: Map[String, String]): Seq[String] = {
     val paths = options.get("paths")
@@ -239,7 +246,8 @@ object BinlogScan {
       val stats = globbed.flatMap { s =>
         if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s)
       }
-      stats.filter(_.isFile).map(_.getPath.toString)
+      stats.filter(s => s.isFile && BinlogName.matches(s.getPath.getName))
+        .map(_.getPath.toString)
     }.sorted
   }
 }
@@ -380,28 +388,26 @@ class BinlogPartitionReader(
       case other => throw new IllegalArgumentException(s"unknown column $other")
     }
   // the open stream behind `events` — closed by close() (Spark calls
-  // it after the scan) and defensively when the magic check fails
+  // it after the scan)
   private var in: org.apache.hadoop.fs.FSDataInputStream = _
 
   private lazy val events: Iterator[BinlogParser.Decoded] = {
     val hp = new Path(path)
     val fs = hp.getFileSystem(conf)
     in = fs.open(hp)
-    // silently skip non-binlog files (directory scans hit mixed content)
+    // a listed file is a binlog by name; one without the magic is an
+    // error, never an empty result
     val magic = new Array[Byte](4)
     val isBinlog =
       try { in.readFully(0, magic); magic.sameElements(BinlogParser.Magic) }
       catch { case _: java.io.EOFException => false }
-    if (!isBinlog) { in.close(); in = null; Iterator.empty }
-    else {
-      // STREAMING parse: O(event) task memory — the reader never
-      // holds the file's bytes or its full decoded row set, so 32
-      // concurrent 1 GiB-file tasks cost ~32 events of heap, not
-      // ~32 GiB of buffers
-      in.seek(0)
-      BinlogParser.parseStream(
-        new java.io.BufferedInputStream(in, 1 << 16), tableKeep).filter(keep)
-    }
+    if (!isBinlog) throw new java.io.IOException(s"not a binlog file (no binlog magic): $path")
+    // STREAMING parse: O(event) task memory — the reader never holds
+    // the file's bytes or its full decoded row set, so 32 concurrent
+    // 1 GiB-file tasks cost ~32 events of heap, not ~32 GiB of buffers
+    in.seek(0)
+    BinlogParser.parseStream(
+      new java.io.BufferedInputStream(in, 1 << 16), tableKeep).filter(keep)
   }
   private var current: BinlogParser.Decoded = _
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api._
@@ -8,13 +7,7 @@ import graft.api._
 /** The library surface (`import graft.api._`) on user-shaped tables —
   * not the test corpus — proving the operators are parametric.
   */
-class ApiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApiSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.binlog.{BinlogParser, BinlogSource}
@@ -15,13 +14,7 @@ import graft.sources.binlog.{BinlogParser, BinlogSource}
   * (event counts, content hashes, log positions) derive from the
   * parser-independent declaration in [[BinlogFixtureTable]].
   */
-class BinlogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   private val fixtures = java.nio.file.Paths.get(
     getClass.getResource("/binlog/events").toURI).toString
@@ -782,6 +775,43 @@ class BinlogSpec extends AnyFunSuite {
     val tail = stream(empty)
     try tail.processAllAvailable() finally tail.stop()
     assert(spark.table(tail.name).count() == 0)
+  }
+
+  test("only binlog-named files are planned; a listed file without the magic raises") {
+    import java.nio.file.Files
+    // events/*/* also matches each fixture's sql.sql
+    val glob = BinlogSource.events(spark, s"$fixtures/*/*")
+    assert(glob.rdd.getNumPartitions == 8)
+    val files = BinlogFixtureTable.files.map { case (fixture, file) => s"$fixtures/$fixture/$file" }
+    assert(files.size == 8)
+    val explicit = spark.read.format("binlog").load(files: _*)
+    assert(contentHash(glob) == contentHash(explicit))
+    // index, scripts and markers beside the binlogs are never read
+    val dir = Files.createTempDirectory("binlog_names_")
+    Seq("mysql-bin.index", "sql.sql", "_COMPLETE").foreach(n => Files.writeString(dir.resolve(n), "x"))
+    assert(BinlogSource.events(spark, dir.toString).count() == 0)
+    val garbage = dir.resolve("mysql-bin.000009")
+    Files.writeString(garbage, "not a binlog")
+    val e = intercept[Exception](BinlogSource.events(spark, dir.toString).count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("mysql-bin.000009"))), e.toString)
+  }
+
+  test("a generated corpus is keyed by the generators' digest") {
+    import java.nio.file.Files
+    val name = s"graft_gen_digest_${System.nanoTime()}"
+    var writes = 0
+    def gen(digest: String) = graft.operators.Cdc.ensureGenerated(name, digest) { tmp =>
+      writes += 1
+      Files.writeString(tmp.resolve("mysql-bin.000001"), digest)
+    }
+    val a = gen("aaaa")
+    assert(gen("aaaa") == a && writes == 1, "the same digest reuses the directory")
+    val b = gen("bbbb")
+    assert(b != a && writes == 2, "a new digest writes a new directory")
+    assert(Files.readString(java.nio.file.Paths.get(b, "mysql-bin.000001")) == "bbbb")
+    assert(graft.operators.Cdc.generatorDigest.matches("[0-9a-f]{12}"))
+    Seq(a, b).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("DSv2: spark.read.format(\"binlog\") over the fixture directory") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,65 +9,56 @@ import org.scalatest.funsuite.AnyFunSuite
   * executor, with NO Exchange in the plan. This spec proves the
   * property on the actual executed plan.
   */
-class BucketingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("graft_warehouse_").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      .config("spark.sql.ui.explainMode", "extended")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class BucketingSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 
   test("bucketed fact-fact join plans without any Exchange") {
-    // the suite may inherit an earlier session whose warehouse dir
-    // differs — clear both catalog entries and stale locations
-    for (t <- Seq("li_bucketed", "ord_bucketed")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      org.apache.commons.io.FileUtils.deleteQuietly(loc)
+    // force the sort-merge join path
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // the shared warehouse dir may hold these tables from an earlier
+      // run — clear both catalog entries and stale locations
+      for (t <- Seq("li_bucketed", "ord_bucketed")) {
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        val loc = new java.io.File(
+          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
+        org.apache.commons.io.FileUtils.deleteQuietly(loc)
+      }
+      Tables.lineitem(spark, sf)
+        .write.mode("overwrite")
+        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .saveAsTable("li_bucketed")
+      Tables.orders(spark, sf)
+        .write.mode("overwrite")
+        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .saveAsTable("ord_bucketed")
+
+      val joined = spark.table("li_bucketed")
+        .join(spark.table("ord_bucketed"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n"))
+
+      val plan = joined.queryExecution.executedPlan.toString
+      val joinExchanges = plan.linesIterator
+        .takeWhile(!_.contains("HashAggregate")) // ignore the final agg exchange
+        .count(_.contains("Exchange"))
+      assert(plan.contains("SortMergeJoin"), plan.take(2000))
+      // neither join input may shuffle: bucket layout IS the distribution
+      val exchangesBeforeJoinInputs = plan.linesIterator
+        .filter(l => l.contains("Exchange hashpartitioning(l_orderkey") ||
+          l.contains("Exchange hashpartitioning(o_orderkey"))
+        .size
+      assert(exchangesBeforeJoinInputs == 0,
+        s"join inputs shuffled despite bucketing:\n${plan.take(3000)}")
+
+      // and the result is still correct
+      val viaBuckets = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val direct = Tables.lineitem(spark, sf)
+        .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(viaBuckets == direct)
     }
-    Tables.lineitem(spark, sf)
-      .write.mode("overwrite")
-      .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable("li_bucketed")
-    Tables.orders(spark, sf)
-      .write.mode("overwrite")
-      .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable("ord_bucketed")
-
-    val joined = spark.table("li_bucketed")
-      .join(spark.table("ord_bucketed"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n"))
-
-    val plan = joined.queryExecution.executedPlan.toString
-    val joinExchanges = plan.linesIterator
-      .takeWhile(!_.contains("HashAggregate")) // ignore the final agg exchange
-      .count(_.contains("Exchange"))
-    assert(plan.contains("SortMergeJoin"), plan.take(2000))
-    // neither join input may shuffle: bucket layout IS the distribution
-    val exchangesBeforeJoinInputs = plan.linesIterator
-      .filter(l => l.contains("Exchange hashpartitioning(l_orderkey") ||
-        l.contains("Exchange hashpartitioning(o_orderkey"))
-      .size
-    assert(exchangesBeforeJoinInputs == 0,
-      s"join inputs shuffled despite bucketing:\n${plan.take(3000)}")
-
-    // and the result is still correct
-    val viaBuckets = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val direct = Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(viaBuckets == direct)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcSink, TxnLog}
@@ -17,13 +17,7 @@ import graft.cdc.{CdcSink, TxnLog}
   * (stats-less manifests, null keys, numeric keys where a string
   * compare would mis-prune).
   */
-class CdcPruneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcPruneSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -438,9 +432,7 @@ class CdcPruneSpec extends AnyFunSuite {
     // Epoch-micros stats are tz-independent; this runs the full
     // bootstrap → compact → localized merge cycle under the DST zone
     // and checks both the prune (files carried forward) and the fold.
-    val prev = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       val dir = Files.createTempDirectory("graft_prune_ts_").toString
       // 6000 keys at 1-minute spacing straddling 2026-11-01 08:30 UTC
       // (the PDT→PST transition minute)
@@ -480,7 +472,7 @@ class CdcPruneSpec extends AnyFunSuite {
       val rr = CdcSink.readRange(spark, dir, lo, hi)
       assert(rr.count() == 10)
       assert(rr.inputFiles.length < m1.entries.length)
-    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
   }
 
   test("readRange composes with AS-OF: pre-merge window, throw contract, empty version") {

@@ -2,18 +2,12 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcSink, Op, TxnLog}
 
-class CdcSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcSinkSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

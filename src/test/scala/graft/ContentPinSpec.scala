@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,14 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-pin is only legitimate after an INTENDED behavior change —
   * the new value must come with the spec run that justified it.
   */
-class ContentPinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ContentPinSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the training-corpus curation operators (SURVEY.md §2). */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 
@@ -373,12 +365,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("plan shapes: eval grams broadcast; packing windows stay sharded") {
-    // suites share the JVM session; BucketingSpec disables auto
-    // broadcast for its SMJ assertions — pin the default here
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, (10 * 1024 * 1024).toString)
-    try {
     val decon = run("cur_decontaminate")
     val dplan = decon.queryExecution.executedPlan.toString
     // the eval-set gram side must BROADCAST — a shuffled join here
@@ -390,7 +376,6 @@ class CurationSpec extends AnyFunSuite {
     // single-partition global window
     assert(pplan.contains("shard"), pplan)
     assert(!pplan.contains("SinglePartition"), pplan)
-    } finally spark.conf.set(key, prev)
   }
 
   test("cur_temperature_mix plans through the heap with a broadcast target join") {

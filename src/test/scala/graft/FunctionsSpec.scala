@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class FunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.001"
 
@@ -95,12 +88,13 @@ class FunctionsSpec extends AnyFunSuite {
     assert(messages(bad).exists(_.contains("cosine_sim expects 2 argument(s), got 1")),
       messages(bad).mkString(" | "))
 
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // same JVM returns the active session; registration still applies
+    // a new session has none of the temp functions `register` added:
+    // it resolves the function through the injected GraftExtensions
+    val ext = spark.newSession()
+    val Seq(temp, injected) = Seq(spark, ext).map(_.sessionState.functionRegistry
+      .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"))
+      .map(_.getSource))
+    assert(temp.contains("scala_udf") && injected.exists(_ != "scala_udf"), (temp, injected))
     assert(ext.sql("SELECT dot_product(array(1.0f), array(2.0f))").collect()
       .head.getDouble(0) == 2.0)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * computed word-3-gram Jaccard. Seeded pseudo-random corpora — a
   * failure reproduces exactly.
   */
-class IncrementalPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalPropertySpec extends AnyFunSuite with SharedSpark {
 
   private val IncBase = 1000L
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcSink, KafkaIngest}
@@ -19,13 +18,7 @@ case class KRec(
     event_type: String,
     value: Double)
 
-class KafkaIngestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KafkaIngestSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import graft.cdc.Offsets
   * exactly — same dense per-group numbering — while running at range-
   * shuffle width instead of one task per group.
   */
-class OffsetsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OffsetsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -29,7 +22,7 @@ class OffsetsSpec extends AnyFunSuite {
       // scatter the order key so input order ≠ group order
       ((col("id") * 7919L) % 100000L * 100 + col("id")).as("ord"),
       col("id").as("payload"))
-    val got = Offsets.densePerGroup(df, Seq("grp"), "ord", "off")
+    val got = Offsets.densePerGroup(df, Seq("grp"), "ord", "off", numPartitions = Some(8))
       .select("grp", "ord", "off")
     val w = Window.partitionBy(col("grp")).orderBy(col("ord"))
     val want = df.select(col("grp"), col("ord"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * perturbed replica at id + Stride — deterministic, so the measured
   * recalls are fixed numbers for this corpus, not statistics.
   */
-class RecallSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RecallSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.01"
 

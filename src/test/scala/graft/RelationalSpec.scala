@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 case class Line(l_returnflag: String, l_quantity: Double)
 
-class RelationalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RelationalSpec extends AnyFunSuite with SharedSpark {
 
   val sf = "/root/testdata/sf0.01"
 
@@ -79,16 +71,9 @@ class RelationalSpec extends AnyFunSuite {
       df.collect() // materialize so AQE finalizes the physical plan
       "BroadcastHashJoin".r.findAllIn(df.queryExecution.executedPlan.toString).length
     }
-    // suites share the JVM session — pin the threshold other specs
-    // may have disabled (BucketingSpec forces SMJ with -1)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, (10 * 1024 * 1024).toString)
-    try {
-      assert(bhjCount("q3_join_agg") >= 1, "q3 customer join should be BHJ at sf0.01")
-      assert(bhjCount("q13_in_subquery") >= 1, "q13 part semi join should be BHJ at sf0.01")
-      assert(bhjCount("q15_multi_join") >= 3, "q15 dims should be BHJ at sf0.01")
-    } finally spark.conf.set(key, prev)
+    assert(bhjCount("q3_join_agg") >= 1, "q3 customer join should be BHJ at sf0.01")
+    assert(bhjCount("q13_in_subquery") >= 1, "q13 part semi join should be BHJ at sf0.01")
+    assert(bhjCount("q15_multi_join") >= 3, "q15 dims should be BHJ at sf0.01")
   }
 
   test("typed Dataset API: case-class encoder aggregation matches untyped") {

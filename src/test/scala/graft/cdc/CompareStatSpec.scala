@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * both the truth (`a < b`, `a = b`) and the canonical strings in one
   * job, then require compareStat's sign to match on every pair.
   */
-class CompareStatSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompareStatSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -90,9 +83,7 @@ class CompareStatSpec extends AnyFunSuite {
     // inverted around the transition), which is exactly the wrong-
     // prune bug the epoch encoding exists to prevent. Encode under
     // the DST zone, compare, and require agreement with instant order.
-    val prev = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       // 2026-11-01 08:30:00 UTC = 01:30:00 PDT; +3600s = 01:30:00 PST
       val base = 1793521800000000L
       val pairs = Seq(
@@ -102,7 +93,7 @@ class CompareStatSpec extends AnyFunSuite {
       checkPairs(TimestampType, pairs.toDF("ua", "ub")
         .select(timestamp_micros(col("ua")).as("a"),
           timestamp_micros(col("ub")).as("b")))
-    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
   }
 
   test("legacy ISO-rendered date/timestamp stats degrade to None (no prune)") {

@@ -1,8 +1,9 @@
 package graft.cdc
 
+import graft.SharedSpark
 import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -17,13 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * offline, so this replay — which shares zero code with
   * [[DeltaLog]]'s writer — stands in for a cross-engine read.
   */
-class DeltaLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DeltaLogSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * eventsStreamSchema must fail fast with a clear error instead of
   * dispatching on one arbitrary footer.
   */
-class MixedUnitSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MixedUnitSpec extends AnyFunSuite with SharedSpark {
 
   private def writeOnePart(src: java.io.File, dest: java.io.File): Unit = {
     val part = src.listFiles().find(_.getName.endsWith(".parquet")).get
@@ -35,12 +28,13 @@ class MixedUnitSpec extends AnyFunSuite {
     // micros part: a real annotated TIMESTAMP(MICROS) column (the
     // testdata generator's format — Spark's own default is legacy
     // INT96, which is neither unit)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val micros = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
       1L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val mDir = scratch.resolve("m").toString
-    micros.coalesce(1).write.parquet(mDir)
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      micros.coalesce(1).write.parquet(mDir)
+    }
     // nanos-as-long part: plain INT64 ts (the old GenScale write-back)
     val nanos = Seq((2L, 1704067200000000000L, 2L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

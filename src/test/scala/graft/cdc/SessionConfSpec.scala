@@ -1,9 +1,10 @@
 package graft.cdc
 
+import graft.SharedSpark
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateful streams can run at once on one session without either
   * seeing the other's settings.
   */
-class SessionConfSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionConfSpec extends AnyFunSuite with SharedSpark {
 
   /** A small events table: µs timestamps spread over a few days, every
     * event type Changelog maps (signup/error/others), 40 users. */

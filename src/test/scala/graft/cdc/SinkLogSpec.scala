@@ -1,8 +1,9 @@
 package graft.cdc
 
+import graft.SharedSpark
 import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * invisible; and compaction must keep its every-10th-merge cadence,
   * read from the log alone.
   */
-class SinkLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SinkLogSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,7 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,14 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONE key lands within 2x of the uniform-key fold at the same row
   * count — the straggler a windowed fold would produce is absent.
   */
-class SkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewSpec extends AnyFunSuite with SharedSpark {
 
   /** Synthetic changelog: `hotFrac` of rows hit key "0", the rest
     * spread over `nKeys`; ~1/11 of events are deletes, offsets are
@@ -100,19 +94,13 @@ class SkewSpec extends AnyFunSuite {
     // genuinely does split the hot key's sort-merge partition —
     // demonstrated with the thresholds scaled to test data (the
     // defaults fire at 256 MB partitions).
-    val restore = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    withConf(
+        "spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256k",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val fact = changelog(2000000L, 100000L, hot = true)
       val dim = spark.range(0, 100000L)
         .select(col("id").cast("string").as("key"),
@@ -124,9 +112,6 @@ class SkewSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the hot join partition skewed:\n$plan")
-    } finally restore.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
