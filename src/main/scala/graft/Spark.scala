@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   *  - AQE with skew-join splitting on; the session time zone is UTC.
   *  - Dynamic partition overwrite, and the RocksDB state store for
   *    stateful streams.
-  *  - graft's SQL functions, both as session extensions (a
-  *    `newSession()` gets them too) and as temp functions.
+  *  - graft's SQL functions, as session extensions (a `newSession()`
+  *    gets them too).
   *  - The UI off, and a small driver-side status store. The AppStatus
   *    and SQLAppStatus listeners run even with the UI off, and by
   *    default retain about 1000 executions' plan graphs plus their
@@ -40,7 +40,7 @@ object Spark {
       master: String = s"local[$defaultCpus]",
       shufflePartitions: Int = defaultCpus,
       appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -58,7 +58,5 @@ object Spark {
       .config("spark.appStateStore.asyncTracking.enable", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    functions.register(s)
-    s
   }
 }

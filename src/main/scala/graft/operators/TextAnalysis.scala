@@ -290,9 +290,8 @@ object TextAnalysis {
   //
   // Scale shape — ONE evaluation of the tokenize+explode subtree.
   // The first cut built c2/c1 as aggregates and joined the bigram
-  // stream back against them; its final adaptive plan (what
-  // ProfileEntry's SPARK_GRAFT_EXPLAIN prints) evaluated the explode
-  // subtree at two stages, ran the Generate 4x, and executed the c2
+  // stream back against them; its final adaptive plan evaluated the
+  // explode subtree at two stages, ran the Generate 4x, and executed the c2
   // exchange twice with NO ReusedExchange (the r6 verdict's suspicion, confirmed at
   // runtime). This form is the dup_spans pattern instead: the bigram
   // stream is repartition(w1)'d ONCE, and both LM counts ride that

@@ -2,64 +2,44 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench hygiene guards (no Spark session needed). This VM degrades
-  * shuffle-heavy runs up to 4× as host-side page-cache state
-  * accumulates; the non-monotonicity guard is what stops a degraded
-  * run's numbers from being folded into the committed min-map.
-  */
+/** Bench's summary and map fold (no Spark session needed). */
 class BenchGuardSpec extends AnyFunSuite {
+  import Bench._
 
-  test("nonMonotone flags a later pass slower by >15%") {
-    // the canonical degraded-host signature: pass 3 blows up
-    assert(Bench.nonMonotone(Seq(78.0, 80.0, 272.0)))
-    // a mild wobble inside the 15% band is normal pass noise
-    assert(!Bench.nonMonotone(Seq(100.0, 90.0, 95.0)))
-    // strictly improving passes (cold → steady) are the healthy shape
-    assert(!Bench.nonMonotone(Seq(120.0, 85.0, 80.0)))
-    // just inside the band is NOT suspect, just past it is
-    assert(!Bench.nonMonotone(Seq(100.0, 114.9)))
-    assert(Bench.nonMonotone(Seq(100.0, 115.1)))
-    // degenerate inputs never flag
-    assert(!Bench.nonMonotone(Seq.empty))
-    assert(!Bench.nonMonotone(Seq(42.0)))
+  private val host = Host("sf0.01", 4, 4096)
+  private def pass(secs: Double) = Some((secs, Layers.map(_ -> secs).toMap))
+
+  test("a failed entry is listed under failed and kept out of every number") {
+    val m = summarize(host, Map(
+      "ok" -> Seq(pass(5.0), pass(2.0), pass(3.0), pass(4.0)),
+      "broken" -> Seq(pass(5.0), None, pass(0.1))))
+    assert(m.failed == Seq("broken"))
+    assert(m.entries.keySet == Set("ok"))
+    // pass 0 is the cold pass: it feeds neither the min nor the median
+    val ok = m.entries("ok")
+    assert(ok("cold_s") == 5.0 && ok("min_s") == 2.0 && ok("median_s") == 3.0)
+    assert(Layers.forall(f => ok(f) == 3.0))
   }
 
-  test("foldKey refuses a min-merge across conflicting artifact states") {
-    // existing map timed the BUILD (14 s), this run timed a cached
-    // HIT (0.07 s): different work — keep existing, flag the refusal
-    val (v, fromNew, art, refused) =
-      Bench.foldKey(Some(14.0), "build", Some(0.07), "hit")
-    assert(v == 14.0 && !fromNew && art == "build" && refused)
-    // and symmetrically
-    assert(Bench.foldKey(Some(0.07), "hit", Some(14.0), "build") ==
-      ((0.07, false, "hit", true)))
+  test("a same-shape map folds as a min of steady mins; this run's other fields win") {
+    def entry(cold: Double, min: Double, median: Double) =
+      Map("cold_s" -> cold, "min_s" -> min, "median_s" -> median) ++ Layers.map(_ -> 0.0)
+    val old = toJson(BenchMap(host, Map("a" -> entry(9.0, 1.0, 1.5), "b" -> entry(9.0, 4.0, 5.0),
+      "gone" -> entry(1.0, 1.0, 1.0)), Nil))
+    val run = summarize(host, Map("a" -> Seq(pass(3.0), pass(2.0), pass(2.0)),
+      "b" -> Seq(pass(3.0), pass(3.0), pass(3.0))))
+    val folded = fold(prior(Some(old), host).toOption.get, run).entries
+    assert(folded("a")("min_s") == 1.0 && folded("a")("median_s") == 2.0 && folded("a")("cold_s") == 3.0)
+    assert(folded("b")("min_s") == 3.0)
+    assert(folded("gone")("min_s") == 1.0)
+    assert(prior(None, host) == Right(None))
   }
 
-  test("foldKey min-folds when states agree, state travels with the min") {
-    assert(Bench.foldKey(Some(2.0), "hit", Some(1.5), "hit") ==
-      ((1.5, true, "hit", false)))
-    assert(Bench.foldKey(Some(1.0), "none", Some(3.0), "none") ==
-      ((1.0, false, "none", false)))
-    // ties go to the new run (fresher spread)
-    assert(Bench.foldKey(Some(2.0), "none", Some(2.0), "none") ==
-      ((2.0, true, "none", false)))
-  }
-
-  test("foldKey: legacy '?' state folds and inherits the known state") {
-    // pre-field map: unknown state must not block the fold, and the
-    // surviving entry picks up whatever state IS known
-    assert(Bench.foldKey(Some(5.0), "?", Some(1.0), "hit") ==
-      ((1.0, true, "hit", false)))
-    assert(Bench.foldKey(Some(1.0), "?", Some(5.0), "build") ==
-      ((1.0, false, "build", false)))
-    assert(Bench.foldKey(Some(5.0), "build", Some(1.0), "?") ==
-      ((1.0, true, "build", false)))
-  }
-
-  test("foldKey: one-sided keys pass through") {
-    assert(Bench.foldKey(Some(3.0), "build", None, "?") ==
-      ((3.0, false, "build", false)))
-    assert(Bench.foldKey(None, "?", Some(4.0), "hit") ==
-      ((4.0, true, "hit", false)))
+  test("a map of another host shape, or an untagged legacy map, is refused") {
+    val other = toJson(BenchMap(host.copy(cores = 32), Map.empty, Nil))
+    assert(prior(Some(other), host).left.exists(_.contains("Host(sf0.01,32,4096)")))
+    assert(prior(Some(toJson(BenchMap(host.copy(sf = "sf0.1"), Map.empty, Nil))), host).isLeft)
+    val legacy = """{"sf":"sf0.01","cold_reads":false,"best":{"q1_agg":0.5}}"""
+    assert(prior(Some(legacy), host) == Left("the map has no host tag"))
   }
 }

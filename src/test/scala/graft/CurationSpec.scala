@@ -319,30 +319,16 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
     // wall-clock bound only runs on a quiet host (GRAFT_TIMING_ASSERTS=1,
     // the SkewSpec precedent — an unconditional 30 s assert flaked the
     // whole suite at 40.1 s on a loaded host in r16).
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val m2000 =
-      try operators.Curation.bpeMerges(docs, "text", 2000).orderBy("rnd").collect()
-      finally {
-        // listener events are async; wait for the counter to go quiet
-        var last = -1
-        var spins = 0
-        while (jobCounter.get() != last && spins < 20) {
-          last = jobCounter.get(); spins += 1; Thread.sleep(100)
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val (m2000, jobs) = SparkJobs.during(spark) {
+      operators.Curation.bpeMerges(docs, "text", 2000).orderBy("rnd").collect()
+    }
     val secs = (System.nanoTime() - t0) / 1e9
-    info(f"R=2000 took $secs%.1f s in ${jobCounter.get()} jobs")
+    info(f"R=2000 took $secs%.1f s in ${jobs.size} jobs")
     assert(m2000.length == 2000)
     // word-freq aggregation + vocab-head collect + the result collect —
     // a handful of jobs; the old per-round design would log 2000+.
-    assert(jobCounter.get() <= 20, s"bpeMerges R=2000 launched ${jobCounter.get()} jobs")
+    assert(jobs.size <= 20, s"bpeMerges R=2000 launched ${jobs.size} jobs")
     if (sys.env.get("GRAFT_TIMING_ASSERTS").contains("1"))
       assert(secs < 30.0, f"R=2000 took $secs%.1f s")
     assert(m2000.exists(_.getAs[String]("merged").length >= 4))

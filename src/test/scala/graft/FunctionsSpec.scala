@@ -74,8 +74,11 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("SQL registration via functionRegistry and GraftExtensions") {
-    graft.functions.register(spark)
-    val r = spark.sql(
+    // registered on a session of its own, so the shared session keeps
+    // resolving through the injected GraftExtensions
+    val registered = spark.newSession()
+    graft.functions.register(registered)
+    val r = registered.sql(
       "SELECT cosine_sim(array(1.0f, 2.0f), array(1.0f, 2.0f)) AS c, " +
       "dot_product(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d").collect().head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
@@ -84,14 +87,14 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
     // inventing an argument
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    val bad = intercept[Exception](spark.sql("SELECT cosine_sim(array(1.0f))").collect())
+    val bad = intercept[Exception](registered.sql("SELECT cosine_sim(array(1.0f))").collect())
     assert(messages(bad).exists(_.contains("cosine_sim expects 2 argument(s), got 1")),
       messages(bad).mkString(" | "))
 
     // a new session has none of the temp functions `register` added:
     // it resolves the function through the injected GraftExtensions
     val ext = spark.newSession()
-    val Seq(temp, injected) = Seq(spark, ext).map(_.sessionState.functionRegistry
+    val Seq(temp, injected) = Seq(registered, ext).map(_.sessionState.functionRegistry
       .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"))
       .map(_.getSource))
     assert(temp.contains("scala_udf") && injected.exists(_ != "scala_udf"), (temp, injected))
@@ -101,7 +104,6 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
   test("sorted_intersect_count: codegen == interpreted, empty/null/dup/nullable-element contracts") {
     import spark.implicits._
-    graft.functions.register(spark)
     val df = Seq(
       ("both", Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)), // overlap 2
       ("disjoint", Seq(1L, 2L), Seq(3L, 4L)),
@@ -146,7 +148,6 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
   test("token counts: native scan == regex forms on adversarial and random strings") {
     import spark.implicits._
-    graft.functions.register(spark)
     val adversarial = Seq(
       "", " ", "  ", "\t\n\f\r", "a", " a", "a ", " a ",
       "a b", "  a  b  ", "abc123def", "123", "a1b2", "!!", "a!b",
@@ -251,7 +252,6 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
   test("compress_ratio: codegen == interpreted, orders quality correctly") {
     import spark.implicits._
-    graft.functions.register(spark)
     val prose = "the quick brown fox jumps over the lazy dog and keeps going with varied words"
     val boiler = "spam spam spam spam spam spam spam spam spam spam spam spam spam spam"
     val rows = Seq(("p", prose), ("b", boiler), ("e", "")).toDF("k", "t")

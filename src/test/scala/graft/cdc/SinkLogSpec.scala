@@ -207,20 +207,10 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
     batches.foreach(b => CdcSink.merge(spark, frame(b), dir))
     val hint = new Path(DeltaLog.logDir(dir), "_last_checkpoint")
     assert(fs.exists(hint))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val ((viaCheckpoint, offsets, versions), jobs) = graft.SparkJobs.during(spark) {
+      (TxnLog.current(fs, dir).get, CdcSink.committedOffsets(spark, dir), TxnLog.versions(fs, dir))
     }
-    spark.sparkContext.addSparkListener(listener)
-    val (viaCheckpoint, offsets, versions) =
-      try {
-        val r = (TxnLog.current(fs, dir).get, CdcSink.committedOffsets(spark, dir),
-          TxnLog.versions(fs, dir))
-        Thread.sleep(500) // listener events are async
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"resolving the current version ran ${jobs.get} Spark job(s)")
+    assert(jobs.isEmpty, s"resolving the current version ran ${jobs.size} Spark job(s)")
     assert(offsets == Map("bin.1" -> batches.flatten.filter(_._5 == "bin.1").map(_._3).max,
       "bin.2" -> batches.flatten.filter(_._5 == "bin.2").map(_._3).max))
     assert(viaCheckpoint.offsets == offsets)

@@ -10,28 +10,18 @@ Usage:
       /tmp/vout/oracle_sql.json /tmp/baseline_duckdb.json [passes]
 
 Run QUIET (no concurrent JVMs) — same contamination rules as
-graft.Bench. DuckDB uses all cores by default; thread count is
-recorded in the artifact.
+graft.Bench. DuckDB runs SPARK_GRAFT_CPUS threads (else nproc), the
+count graft.Bench runs Spark with; the artifact records it.
 """
-import sys, os, json, time, subprocess
+import sys, os, json, time
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def drop_caches():
-    """Mirror graft.Bench's default cold-read posture: each timed
-    window re-reads its parquet at disk speed. No-op without root.
-    Opt out with GRAFT_BASELINE_KEEP_CACHES=1 (warm protocol)."""
-    if os.environ.get("GRAFT_BASELINE_KEEP_CACHES") == "1":
-        return False
-    r = subprocess.run(
-        ["sh", "-c", "{ sync && echo 3 > /proc/sys/vm/drop_caches; } 2>/dev/null"])
-    return r.returncode == 0
-
-
 def main(sfdir, oracle_path, out_path, passes=3):
     con = duckdb.connect()
+    con.execute(f"SET threads = {int(os.environ.get('SPARK_GRAFT_CPUS') or len(os.sched_getaffinity(0)))}")
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
@@ -65,7 +55,6 @@ def main(sfdir, oracle_path, out_path, passes=3):
                 print(f"likework {name}: probe != full oracle, "
                       "keeping full-mine timing", file=sys.stderr)
 
-    cold = drop_caches()
     per_pass = []          # list of {name: sec} per pass
     fullmine_pass = []     # full-mine times for likework entries
     pass_totals = []
@@ -74,14 +63,10 @@ def main(sfdir, oracle_path, out_path, passes=3):
         fullmine = {}
         t_pass = time.monotonic()
         for name in names:
-            if cold:
-                drop_caches()   # outside the timed window, like graft.Bench
             if name in likework:
                 # artifact build is untimed (standing state), probe is timed
                 for stmt in likework[name]["setup"]:
                     con.execute(stmt)
-                if cold:
-                    drop_caches()
                 t0 = time.monotonic()
                 con.execute(likework[name]["query"]).fetchall()
                 times[name] = round(time.monotonic() - t0, 4)
@@ -103,7 +88,6 @@ def main(sfdir, oracle_path, out_path, passes=3):
         "version": duckdb.__version__,
         "threads": int(threads),
         "sf_dir": sfdir,
-        "cold_reads": cold,
         "passes": passes,
         "queries": len(names),
         "pass_totals": pass_totals,

@@ -1,6 +1,6 @@
 #!/bin/sh
-# Quick host-health probe: prints CPU-loop seconds and cold-read MB/s.
-# Quiet host reference (this sandbox): cpu ~0.55s, read >400 MB/s.
+# Quick host-health probe: prints CPU-loop seconds.
+# Quiet-host reference: cpu ~0.55s.
 python3 - <<'EOF'
 import time
 t0=time.time()
@@ -8,7 +8,3 @@ s=0
 for i in range(20_000_000): s+=i
 print(f"cpu_loop_s {time.time()-t0:.2f}")
 EOF
-f=/tmp/.host_probe_data
-[ -f $f ] || dd if=/dev/zero of=$f bs=1M count=512 conv=fdatasync 2>/dev/null
-sync; echo 3 > /proc/sys/vm/drop_caches 2>/dev/null
-dd if=$f of=/dev/null bs=1M 2>&1 | awk -F, '/copied/{print "read", $3}'
