@@ -1,8 +1,12 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Snapshot-table sink — the reference's Delta ingest re-expressed
   * over parquet + a Delta transaction log, `_delta_log/` ([[TxnLog]]
@@ -205,51 +209,91 @@ object CdcSink {
   }
 
   /** Incremental upsert merge: apply `changes` (a changelog batch)
-    * to the existing snapshot, rewriting only touched partitions.
-    * The new version carries the untouched partitions' files forward
-    * unchanged.
+    * to the existing snapshot, rewriting only the files it touches.
+    * The new version carries the untouched files forward unchanged.
+    *
+    * A batch is increment-sized by contract (bulk loads take
+    * [[writeSnapshot]]), so the merge first collects it, bounded at
+    * [[RefineMaxKeys]] + 1 rows. A batch that fits is decided on the
+    * driver: its [[BatchMeta]] and the file prune run no Spark job, and
+    * its rows go back into the plan as a local relation for the fold
+    * and the write. Such a merge runs the collect's jobs plus the
+    * write's. A larger batch is persisted instead and gets its
+    * [[BatchMeta]] from one ROLLUP pass ([[rollupMeta]]); everything
+    * after the metadata is shared.
     */
   def merge(
       spark: SparkSession,
-      changes0: DataFrame,
+      changes: DataFrame,
       tableDir: String,
-      partitionCol: Option[String] = None): Unit = {
-    val fs = fsFor(spark, tableDir)
-    val manifest = TxnLog.current(fs, tableDir)
-    if (manifest.isEmpty || manifest.get.entries.isEmpty) {
-      // bootstrap (or post-truncate repopulation — offsets merge in)
-      writeSnapshot(changes0, tableDir, partitionCol)
-      return
-    }
-    // a merge takes several actions over the batch (prune bounds /
-    // touched partitions and offsets, the write): cache the
-    // increment once instead of re-running its lineage per pass —
-    // batches are increment-sized by contract (bulk loads take
-    // writeSnapshot)
-    val changes = changes0.persist()
-    try mergeCached(spark, changes, tableDir, partitionCol, manifest.get, fs)
-    finally changes.unpersist()
-  }
+      partitionCol: Option[String] = None): Unit =
+    merge(spark, changes, tableDir, partitionCol, RefineMaxKeys)
 
-  private def mergeCached(
+  /** [[merge]] with the driver path's row bound as an argument: a
+    * bound of 0 sends every non-empty batch down the rollup path. */
+  private[cdc] def merge(
       spark: SparkSession,
       changes: DataFrame,
       tableDir: String,
       partitionCol: Option[String],
-      m: TxnLog.Manifest,
-      fs: FileSystem): Unit = {
-    // one metadata pass over the cached increment: key bounds,
-    // touched partitions and per-source offsets used to be THREE
-    // separate driver jobs (plus each one's AQE sub-jobs) over the
-    // same persisted batch — [[batchMeta]] fuses them into a single
-    // scan; every downstream decision sees the same numbers
+      driverMaxRows: Long): Unit = {
+    val fs = fsFor(spark, tableDir)
+    val read = DeltaLog.snapshot(fs, tableDir).filter(_.version >= 1)
+    if (read.forall(_.files.isEmpty)) {
+      // bootstrap (or post-truncate repopulation — offsets merge in)
+      writeSnapshot(changes, tableDir, partitionCol)
+      return
+    }
+    val m = read.get.manifest
     val keyType = changes.schema.fields
       .find(f => f.name == TxnLog.StatsKeyCol &&
         TxnLog.statsSupported(f.dataType))
       .map(_.dataType)
       .filter(kt => m.schema.fields
         .find(_.name == TxnLog.StatsKeyCol).map(_.dataType).contains(kt))
-    val meta = batchMeta(changes, partitionCol, keyType)
+    val rows = graftbridge.collectInternal(changes.limit((driverMaxRows + 1).toInt))
+    val (meta, (schema, entries)) =
+      if (rows.length <= driverMaxRows) {
+        val meta = driverMeta(spark, changes.schema, rows, partitionCol, keyType)
+        val keys = () => keyType.fold(Array.empty[Any]) { kt =>
+          val i = changes.schema.fieldIndex(TxnLog.StatsKeyCol)
+          rows.collect { case r if !r.isNullAt(i) => r.get(i, kt) }
+        }
+        val local = graftbridge.localFrame(spark, changes.schema, rows.toSeq)
+        (meta, rewrite(spark, local, tableDir, partitionCol, m, meta, keys))
+      } else {
+        // the merge takes several actions over the batch (metadata,
+        // the write): cache it once instead of re-running its lineage
+        val cached = changes.persist()
+        try {
+          val meta = rollupMeta(cached, partitionCol, keyType)
+          // asked for only when the bound is lowered below RefineMaxKeys
+          val keys = () => keyType.fold(Array.empty[Any]) { kt =>
+            graftbridge.collectInternal(cached.select(col(TxnLog.StatsKeyCol)).distinct())
+              .map(_.get(0, kt))
+          }
+          (meta, rewrite(spark, cached, tableDir, partitionCol, m, meta, keys))
+        } finally cached.unpersist()
+      }
+    val committed = DeltaLog.commit(fs, tableDir, m.version + 1, schema, entries,
+      meta.offsets, DeltaLog.MergeOp, read)
+    TxnLog.failpoint(TxnLog.Crash.AfterPublish)
+    if (committed.mergeCount % CompactEvery == 0) compact(spark, tableDir, partitionCol)
+  }
+
+  /** The shared part of a merge after its metadata: prune the files of
+    * manifest `m` against the batch, fold the touched ones with it and
+    * write the result. Returns the new version's schema and live files.
+    * `keys` gives the batch's non-null keys; only the per-key refine
+    * asks for them. */
+  private def rewrite(
+      spark: SparkSession,
+      changes: DataFrame,
+      tableDir: String,
+      partitionCol: Option[String],
+      m: TxnLog.Manifest,
+      meta: BatchMeta,
+      keys: () => Array[Any]): (StructType, Seq[TxnLog.Entry]) = {
     // Output files get exact per-file stats from their parquet footers
     // (row counts, and key ranges for footer-decodable key types — no
     // Spark job). Files left without a range inherit the FREE
@@ -260,7 +304,24 @@ object CdcSink {
       es.map(e => range.filter(_ => e.min.isEmpty).fold(e) { case (lo, hi) =>
         e.copy(min = Some(lo), max = Some(hi))
       })
-    val (schema, entries) = partitionCol match {
+    // touched files are read under the committed schema (a file that
+    // predates an evolved column reads it as null) and folded with the
+    // batch; allowMissingColumns both ways → the schema EVOLVES when
+    // the changelog gains columns (reference DDL propagation: ALTER
+    // TABLE ADD COLUMN flows into the table; dropped columns stay,
+    // null-filled)
+    def fold(pr: PruneSplit, part: Option[String]): (StructType, Seq[TxnLog.Entry]) = {
+      val unioned =
+        if (pr.touched.isEmpty) changes
+        else TxnLog.readEntries(spark, tableDir, pr.touched, m.schema)
+          .withColumn("op", lit(Op.Update))
+          .unionByName(changes, allowMissingColumns = true)
+      val merged = CdcApply.snapshot(unioned)
+      val entries = TxnLog.writeCommitDir(
+        merged, tableDir, part, m.version + 1, computeStats = false)
+      (unionSchema(m.schema, merged.schema), pr.untouched ++ withRange(entries, pr.commitRange))
+    }
+    partitionCol match {
       // an empty batch commits no file changes (it still counts as a
       // merge toward the compaction cadence)
       case _ if meta.nRows == 0 => (m.schema, m.entries)
@@ -268,69 +329,36 @@ object CdcSink {
         // unpartitioned: key-range-pruned merge. Files whose
         // [min,max] key range no batch key can hit are carried
         // forward untouched (Delta-style data skipping on the logged
-        // per-file stats); only intersecting files are read, folded
-        // with the batch, and rewritten. Stats-less files / key types
-        // and null-key batches degrade to everything-touched — a full
-        // rewrite, never a wrong prune. allowMissingColumns both ways
-        // → schema EVOLVES when the changelog gains columns
-        // (reference DDL propagation: ALTER TABLE ADD COLUMN flows
-        // into the table; dropped columns stay, null-filled).
-        val pr = splitByKeyRange(spark, changes, m.schema, m.entries, meta)
-        val unioned =
-          if (pr.touched.isEmpty) changes
-          else TxnLog.readEntries(spark, tableDir, pr.touched, m.schema)
-            .withColumn("op", lit(Op.Update))
-            .unionByName(changes, allowMissingColumns = true)
-        val merged = CdcApply.snapshot(unioned)
-        val entries = TxnLog.writeCommitDir(
-          merged, tableDir, None, m.version + 1, computeStats = false)
-        (unionSchema(m.schema, merged.schema), pr.untouched ++ withRange(entries, pr.commitRange))
+        // per-file stats). Stats-less files / key types and null-key
+        // batches degrade to everything-touched — a full rewrite,
+        // never a wrong prune.
+        fold(splitByKeyRange(spark, changes, m.schema, m.entries, meta, keys), None)
       case Some(p) =>
-        // touched partition values come from the fused metadata pass
-        // (the SMALL change batch's distinct partition set)
+        // first pruning level: the partition values the batch touches
         val touchedEsc = meta.touchedParts.getOrElse(Seq.empty).map(hivePartName).toSet
         val (partTouched, untouchedEntries) =
           m.entries.partition(_.partition.exists(touchedEsc.contains))
         // second pruning level: within the touched PARTITIONS, keep
         // files whose key range no batch key can hit (hot-partition
         // updates rewrite the files they intersect, not the whole
-        // partition value)
-        val pr = splitByKeyRange(spark, changes, m.schema, partTouched, meta)
-        // touched files read under the committed schema: a file that
-        // predates an evolved column reads it as null
-        val unioned = if (pr.touched.isEmpty) changes else {
-          TxnLog.readEntries(spark, tableDir, pr.touched, m.schema)
-            .withColumn("op", lit(Op.Update))
-            .unionByName(changes, allowMissingColumns = true)
-        }
-        val merged = CdcApply.snapshot(unioned)
-        val newEntries = TxnLog.writeCommitDir(
-          merged, tableDir, Some(p), m.version + 1, computeStats = false)
-        // emptied partitions simply have no files in the new version
-        (unionSchema(m.schema, merged.schema),
-          untouchedEntries ++ pr.untouched ++ withRange(newEntries, pr.commitRange))
+        // partition value); emptied partitions simply have no files
+        // in the new version
+        val (schema, entries) =
+          fold(splitByKeyRange(spark, changes, m.schema, partTouched, meta, keys), Some(p))
+        (schema, untouchedEntries ++ entries)
     }
-    val committed = TxnLog.commit(fs, tableDir, m.version + 1, schema, entries,
-      meta.offsets, DeltaLog.MergeOp)
-    TxnLog.failpoint(TxnLog.Crash.AfterPublish)
-    if (committed.mergeCount % CompactEvery == 0) compact(spark, tableDir, partitionCol)
   }
 
-  /** One-pass merge-batch metadata (guide §2.4 — fold sequential
-    * driver actions that scan the same frame). A merge needs three
-    * increment-sized metadata reads: the key bounds that drive file
-    * pruning ([[splitByKeyRange]]), the distinct partition values the
-    * batch touches, and the per-source max offsets the commit records
-    * next to the data. They used to run as three separate
-    * jobs over the persisted batch; one ROLLUP(source) aggregate
-    * computes all of them in a single scan — the rollup's grand-total
-    * row is EXACTLY the old bounds agg (same native-typed min/max then
-    * [[TxnLog.statExpr]] render), the per-source rows are exactly the
-    * old offsets groupBy, so every downstream decision and committed
-    * stat is bit-identical to the unfused form's. `collect_set` drops
-    * nulls, so a null partition value is re-added from its counted
-    * column (null partitions land in __HIVE_DEFAULT_PARTITION__ and
-    * must count as touched).
+  /** What a merge needs to know about its batch before it touches a
+    * file: the row count, the null-key count and the key bounds (which
+    * drive file pruning, [[splitByKeyRange]]), the partition values it
+    * touches, and the per-source max offsets the commit records next
+    * to the data. Key bounds are canonical stat strings
+    * ([[TxnLog.statExpr]]); `touchedParts` are the values as `collect`
+    * returns them, null included (null partitions land in
+    * __HIVE_DEFAULT_PARTITION__ and count as touched). The driver path
+    * ([[driverMeta]]) and the rollup path ([[rollupMeta]]) compute
+    * the same values.
     */
   private final case class BatchMeta(
       nRows: Long,
@@ -340,10 +368,75 @@ object CdcSink {
       touchedParts: Option[Seq[Any]],
       offsets: Map[String, Long])
 
-  private def batchMeta(
+  /** [[BatchMeta]] of a batch collected to the driver (Catalyst rows of
+    * `schema`), with no Spark job. Key bounds take Catalyst's ordering
+    * for the key type and render through [[TxnLog.statExpr]] evaluated
+    * on the driver, so the strings equal the rollup's byte for byte;
+    * partition values convert to external values first, as `collect`
+    * returns them, so [[hivePartName]] renders them the same way.
+    */
+  private def driverMeta(
+      spark: SparkSession,
+      schema: StructType,
+      rows: Array[InternalRow],
+      partitionCol: Option[String],
+      keyType: Option[DataType]): BatchMeta = {
+    def external(name: String): InternalRow => Any = {
+      val i = schema.fieldIndex(name)
+      val dt = schema(i).dataType
+      val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+      r => if (r.isNullAt(i)) null else toScala(r.get(i, dt))
+    }
+    val source: InternalRow => String =
+      if (schema.fieldNames.contains("source_file")) {
+        val v = external("source_file"); r => String.valueOf(v(r))
+      } else _ => "default"
+    val offset = external("offset")
+    val offsets = rows.foldLeft(Map.empty[String, Long]) { (acc, r) =>
+      offset(r) match {
+        case null => acc
+        case n: Number =>
+          val src = source(r)
+          acc.updated(src, acc.get(src).fold(n.longValue)(math.max(_, n.longValue)))
+      }
+    }
+    val (nullKeys, lo, hi) = keyType match {
+      case None => (0L, None, None)
+      case Some(kt) =>
+        val i = schema.fieldIndex(TxnLog.StatsKeyCol)
+        val ord = TypeUtils.getInterpretedOrdering(kt)
+        var (nulls, lo, hi) = (0L, null: Any, null: Any)
+        rows.foreach { r =>
+          if (r.isNullAt(i)) nulls += 1
+          else {
+            val k = r.get(i, kt)
+            if (lo == null || ord.lt(k, lo)) lo = k
+            if (hi == null || ord.gt(k, hi)) hi = k
+          }
+        }
+        val rendered = graftbridge.evalLocal(spark, StructType(Seq(StructField("k", kt))),
+            Seq(InternalRow(lo), InternalRow(hi)), TxnLog.statExpr(kt, col("k")))
+          .map(r => Option(r.getUTF8String(0)).map(_.toString))
+        (nulls, rendered(0), rendered(1))
+    }
+    val parts = partitionCol.map { p =>
+      val v = external(p)
+      rows.iterator.map(v).toSeq.distinct
+    }
+    BatchMeta(rows.length.toLong, nullKeys, lo, hi, parts, offsets)
+  }
+
+  /** [[BatchMeta]] of a batch too large for the driver, in one ROLLUP
+    * pass over the persisted batch: the grand-total row carries the
+    * count, key bounds (native-typed min/max, then
+    * [[TxnLog.statExpr]]) and partition set, the per-source rows the
+    * max offsets. `collect_set` drops nulls, so a null partition value
+    * is re-added from its counted column.
+    */
+  private def rollupMeta(
       changes: DataFrame,
       partitionCol: Option[String],
-      keyType: Option[org.apache.spark.sql.types.DataType]): BatchMeta = {
+      keyType: Option[DataType]): BatchMeta = {
     val src =
       if (changes.columns.contains("source_file")) col("source_file")
       else lit("default")
@@ -361,13 +454,13 @@ object CdcSink {
       .agg(grouping_id().as("_gid"), aggs: _*)
       .collect()
     val (totals, perSrc) = rows.partition(r => r.getLong(r.fieldIndex("_gid")) != 0L)
-    val offsets = perSrc.map(r =>
+    // a source whose offsets are all null records none
+    val offsets = perSrc.filterNot(r => r.isNullAt(r.fieldIndex("_moff"))).map(r =>
       String.valueOf(r.get(r.fieldIndex("_graft_src"))) ->
         r.getLong(r.fieldIndex("_moff"))).toMap
     totals.headOption match {
       // an empty batch produces no rollup rows at all (Expand over
-      // zero input rows) — the old plain agg returned a count=0 row;
-      // synthesize the same zeros
+      // zero input rows)
       case None =>
         BatchMeta(0L, 0L, None, None, partitionCol.map(_ => Seq.empty), Map.empty)
       case Some(t) =>
@@ -386,10 +479,12 @@ object CdcSink {
     }
   }
 
-  /** Batches with at most this many rows get per-key prune precision
-    * (a distinct + broadcast-stats join); larger batches prune at
-    * range level only — a bulk redelivery that spans the keyspace
-    * must not pay a distinct pass to learn it touches everything.
+  /** The largest batch a merge decides on the driver: up to this many
+    * rows it is collected ([[merge]]) and its keys refine the prune to
+    * exactly the files they land in; a larger batch takes the rollup
+    * path and prunes at range level only — a bulk redelivery that spans
+    * the keyspace must not pay a per-key pass to learn it touches
+    * everything.
     */
   private[cdc] val RefineMaxKeys = 200000L
 
@@ -404,23 +499,24 @@ object CdcSink {
       commitRange: Option[(String, String)])
 
   /** Split a version's live files into (touched, untouched) for a
-    * change batch using the per-file key-range stats. Stage 1 runs on
-    * the driver with a typed comparator over one cheap bounds agg;
-    * stage 2 (increment-sized batches that stage 1 already pruned)
-    * sharpens to exactly the files some batch key lands in. Every
-    * uncertainty degrades to touched — a full rewrite, never a wrong
-    * prune: stats-less files, unsupported key types, null-key
-    * batches, and key-type drift between the batch and the table
-    * (the stored stat strings were rendered under the TABLE's key
-    * type; comparing them under a different batch type would be
+    * change batch using the per-file key-range stats, on the driver.
+    * Stage 1 compares the batch's key bounds with each file's range;
+    * stage 2 (batches of at most [[RefineMaxKeys]] rows that stage 1
+    * already pruned) sharpens to exactly the files some batch key
+    * lands in. Every uncertainty degrades to touched — a full rewrite,
+    * never a wrong prune: stats-less files, unsupported key types,
+    * null-key batches, and key-type drift between the batch and the
+    * table (the stored stat strings were rendered under the TABLE's
+    * key type; comparing them under a different batch type would be
     * cross-type garbage).
     */
   private def splitByKeyRange(
       spark: SparkSession,
       changes: DataFrame,
-      tableSchema: org.apache.spark.sql.types.StructType,
+      tableSchema: StructType,
       entries: Seq[TxnLog.Entry],
-      meta: BatchMeta): PruneSplit = {
+      meta: BatchMeta,
+      keys: () => Array[Any]): PruneSplit = {
     val all = PruneSplit(entries, Seq.empty, None)
     val keyField = changes.schema.fields
       .find(f => f.name == TxnLog.StatsKeyCol && TxnLog.statsSupported(f.dataType))
@@ -434,9 +530,6 @@ object CdcSink {
     if (keyField.isEmpty || withStats.isEmpty ||
         !tableKeyType.contains(keyField.get.dataType)) return all
     val kt = keyField.get.dataType
-    val k = col(TxnLog.StatsKeyCol)
-    // bounds come precomputed from the caller's fused metadata pass
-    // ([[batchMeta]]) — same aggregate values the in-line agg produced
     def foldRanges(
         seed: Option[(String, String)],
         es: Seq[TxnLog.Entry]): Option[(String, String)] =
@@ -449,7 +542,6 @@ object CdcSink {
             if (cHi > 0) e.max.get else hi)
         }
       }
-    val nRows = meta.nRows
     if (meta.nullKeys > 0) {
       // null keys can hide in ANY file (ranges only witness non-null
       // keys), so every file is touched — but the OUTPUT's non-null
@@ -471,9 +563,8 @@ object CdcSink {
       return PruneSplit(entries, Seq.empty, commitRange)
     }
     val (bLo, bHi) = (meta.lo.get, meta.hi.get)
-    // stage 1 on the DRIVER (zero Spark jobs): a file survives iff
-    // its range intersects the batch's [min,max]; an uncomparable
-    // pair (NaN etc.) keeps the file touched
+    // stage 1: a file survives iff its range intersects the batch's
+    // [min,max]; an uncomparable pair (NaN etc.) keeps the file touched
     def intersects(e: TxnLog.Entry): Boolean = {
       val misses = for {
         c1 <- TxnLog.compareStat(kt, e.max.get, bLo) // file.max < batch.min
@@ -483,29 +574,30 @@ object CdcSink {
     }
     val (inRange, outOfRange) = withStats.partition(intersects)
     val touched =
-      // stage-2 refine only when it can actually prune something:
-      // with ≤1 surviving file the join job could at best turn 1
-      // file into 0 (a batch landing entirely in a stats gap — rare,
-      // and the false rewrite it avoids costs one file), so the
-      // per-merge fixed cost of a distinct+broadcast-join pass is
-      // not worth paying
-      if (outOfRange.isEmpty || nRows > RefineMaxKeys || inRange.length <= 1)
+      // stage 2 only when it can prune something: stage 1 showed
+      // locality (some file out of range) and more than one file is
+      // left; a batch over RefineMaxKeys prunes at range level only
+      if (outOfRange.isEmpty || meta.nRows > RefineMaxKeys || inRange.length <= 1)
         inRange
       else {
-        // stage 2: per-key precision — only when stage 1 already
-        // showed locality and the batch is increment-sized, so a
-        // scattered bulk redelivery never pays a distinct pass just
-        // to learn it touches everything
-        import spark.implicits._
-        val stats = inRange.map(e => (e.path, e.min.get, e.max.get))
-          .toDF("_p", "_min", "_max")
-        val touchedPaths = changes.select(k.as("_k")).distinct()
-          .join(broadcast(stats),
-            col("_k").between(TxnLog.statDecode(kt, col("_min")),
-              TxnLog.statDecode(kt, col("_max"))))
-          .select("_p").distinct()
-          .collect().map(_.getString(0)).toSet
-        inRange.filter(e => touchedPaths(e.path))
+        // stage 2: a file stays touched iff some batch key lies in
+        // its [min, max], decoded to the key type ([[TxnLog.statDecode]]
+        // on the driver) — a binary search of the sorted keys per
+        // file. A bound that decodes to null keeps its file touched.
+        val ord = TypeUtils.getInterpretedOrdering(kt)
+        val sorted = keys().sorted(ord)
+        val bounds = graftbridge.evalLocal(spark, StructType(Seq(StructField("s", StringType))),
+            inRange.flatMap(e => Seq(e.min.get, e.max.get))
+              .map(s => InternalRow(UTF8String.fromString(s))),
+            TxnLog.statDecode(kt, col("s")))
+          .map(r => if (r.isNullAt(0)) null else r.get(0, kt))
+        inRange.indices.filter { i =>
+          val (lo, hi) = (bounds(2 * i), bounds(2 * i + 1))
+          lo == null || hi == null || {
+            val j = sorted.search(lo)(ord).insertionPoint
+            j < sorted.length && ord.lteq(sorted(j), hi)
+          }
+        }.map(inRange)
       }
     val touchedSet = touched.map(_.path).toSet
     val allTouched = touched ++ statless
@@ -555,7 +647,8 @@ object CdcSink {
     * inside [[TxnLog.writeCommitDir]] — a skew-hot partition value
     * compacts through ceil(n/target) parallel tasks, never one giant
     * single-task file; unpartitioned tables repartition to
-    * ceil(rows/target) output files.
+    * ceil(rows/target) output files, and a one-file table is read and
+    * written by one task, with no shuffle.
     */
   def compact(
       spark: SparkSession,
@@ -597,6 +690,9 @@ object CdcSink {
                 // sub-files disjoint too, not just the range tasks
                 snap.repartitionByRange(parts, col(TxnLog.StatsKeyCol))
                   .sortWithinPartitions(TxnLog.StatsKeyCol)
+              // one output file needs no shuffle: one task reads the
+              // table and writes it
+              case _ if parts == 1 => snap.coalesce(1)
               case _ => snap.repartition(parts)
             }
         }

@@ -171,7 +171,7 @@ object DeltaLog {
     def manifest: TxnLog.Manifest = {
       val keyType = schema.fields.find(_.name == TxnLog.StatsKeyCol).map(_.dataType)
       TxnLog.Manifest(version, schemaJson,
-        files.iterator.map { case (k, a) => entryOf(k, a.stats, keyType) }.toSeq,
+        files.iterator.map { case (k, a) => entryOf(k, a, keyType) }.toSeq,
         txns, mergeCount)
     }
   }
@@ -309,7 +309,9 @@ object DeltaLog {
     * current state: removes for dropped files, adds for new files or
     * files whose stats changed, metaData when the schema changed, a
     * txn per source whose offset advanced (offsets are monotone per
-    * source: a batch from source B never moves source A's). Returns
+    * source: a batch from source B never moves source A's). `read` is
+    * the state the caller already resolved (None resolves it here); a
+    * writer that committed since then still fails the publish. Returns
     * the committed state.
     */
   private[cdc] def commit(
@@ -319,8 +321,9 @@ object DeltaLog {
       schema: StructType,
       entries: Seq[TxnLog.Entry],
       offsets: Map[String, Long],
-      operation: String): Snapshot = {
-    val prev = snapshot(fs, tableDir)
+      operation: String,
+      read: Option[Snapshot] = None): Snapshot = {
+    val prev = read.orElse(snapshot(fs, tableDir))
     val prevVersion = prev.map(_.version).getOrElse(-1L)
     if (prevVersion >= version)
       throw new java.util.ConcurrentModificationException(
@@ -355,12 +358,17 @@ object DeltaLog {
     entries.foreach { e =>
       val stats = statsJson(e, schema)
       if (!base.files.get(e.path).exists(_.stats == stats)) {
-        val st = fs.getFileStatus(new Path(tableDir, e.path))
+        val (size, mtime) =
+          if (e.size > 0) (e.size, e.modificationTime)
+          else {
+            val st = fs.getFileStatus(new Path(tableDir, e.path))
+            (st.getLen, st.getModificationTime)
+          }
         actions += JObject("add" -> JObject(List(
           "path" -> JString(encodePath(e.path)),
           "partitionValues" -> JObject(),
-          "size" -> JInt(BigInt(st.getLen)),
-          "modificationTime" -> JInt(BigInt(st.getModificationTime)),
+          "size" -> JInt(BigInt(size)),
+          "modificationTime" -> JInt(BigInt(mtime)),
           "dataChange" -> JBool(true)) ::: stats.map(s => "stats" -> JString(s)).toList))
       }
     }
@@ -404,16 +412,18 @@ object DeltaLog {
   }
 
   /** A live file as a [[TxnLog.Entry]]: the partition fragment comes
-    * from the file's `__gp=` directory, the key range and row count
-    * from its stats, mapped back to graft's canonical stat strings
-    * (the inverse of [[statsJson]]). A bound that does not decode is
-    * dropped — the file then never prunes, which is always sound.
+    * from the file's `__gp=` directory, size and modification time
+    * from its add action, the key range and row count from its stats,
+    * mapped back to graft's canonical stat strings (the inverse of
+    * [[statsJson]]). A bound that does not decode is dropped — the
+    * file then never prunes, which is always sound.
     */
-  private def entryOf(key: String, stats: Option[String], keyType: Option[DataType]): TxnLog.Entry = {
+  private def entryOf(key: String, a: AddFile, keyType: Option[DataType]): TxnLog.Entry = {
     val part = key.split('/').find(_.startsWith(TxnLog.PartDirCol + "="))
       .map(_.substring(TxnLog.PartDirCol.length + 1))
-    stats.map(JsonMethods.parse(_)) match {
-      case None => TxnLog.Entry(key, part)
+    val plain = TxnLog.Entry(key, part, size = a.size, modificationTime = a.modificationTime)
+    a.stats.map(JsonMethods.parse(_)) match {
+      case None => plain
       case Some(js) =>
         def bound(name: String): Option[String] = for {
           kt <- keyType
@@ -435,7 +445,7 @@ object DeltaLog {
           case JInt(n) => Some(n.toLong)
           case _ => None
         }
-        TxnLog.Entry(key, part, bound("minValues"), bound("maxValues"), rows)
+        plain.copy(min = bound("minValues"), max = bound("maxValues"), rows = rows)
     }
   }
 

@@ -80,13 +80,11 @@ object Listeners {
       q.awaitTermination()
       CdcStream.releaseStreamResources(s)
       // accumulator values land with task completion (synchronous by
-      // awaitTermination); listener events ride the async bus — wait
-      // (bounded) until the driver plane catches up to the executors
-      val seen: Long = acc.value.longValue
-      val deadline = System.currentTimeMillis() + 30000
-      while (listener.rows(qn) < seen && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      Seq(("driver", listener.rows(qn)), ("executor", seen))
+      // awaitTermination); listener events ride the async bus, and
+      // every progress event is posted by now — drain the bus (bounded)
+      // so the driver plane has seen them all
+      org.apache.spark.sql.graftbridge.drainListenerBus(s, 30000L)
+      Seq(("driver", listener.rows(qn)), ("executor", acc.value.longValue))
         .toDF("plane", "n_rows").orderBy("plane")
     } finally s.streams.removeListener(listener)
   }

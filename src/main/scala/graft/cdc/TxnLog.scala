@@ -46,13 +46,18 @@ object TxnLog {
     * table has no stats-able key column, the file's keys are all
     * null, or the file was committed without stats — all read as
     * "cannot prune, always rewrite" (conservative, never wrong).
+    * `size` and `modificationTime` are the file's status as its add
+    * action records it (0 when unknown): [[readEntries]] builds its
+    * file index from them instead of asking the filesystem.
     */
   final case class Entry(
       path: String,
       partition: Option[String],
       min: Option[String] = None,
       max: Option[String] = None,
-      rows: Option[Long] = None)
+      rows: Option[Long] = None,
+      size: Long = 0L,
+      modificationTime: Long = 0L)
 
   /** A committed version: its schema, live files, per-source
     * committed offsets and the number of merges committed so far. */
@@ -62,7 +67,7 @@ object TxnLog {
       entries: Seq[Entry],
       offsets: Map[String, Long] = Map.empty,
       mergeCount: Long = 0L) {
-    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
   /** Test-only failpoints, each simulating a process crash at one step
@@ -269,7 +274,8 @@ object TxnLog {
     }
     failpoint(Crash.AfterDataWrite)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listParquet(fs, dest)
+    val statuses = listParquet(fs, dest)
+    val files = statuses.map(_.getPath)
     // Per-file row count and key-range stats (partitioned tables
     // prune first on the partition value, then on these within
     // touched partitions). The common key types' ranges decode from
@@ -293,14 +299,15 @@ object TxnLog {
         case Some(kt) => fileKeyStats(spark, dest, kt)
         case None => Map.empty
       }
-    files.map { f =>
+    statuses.map { st =>
+      val f = st.getPath
       val rel = relativize(new Path(tableDir), f)
       val part = rel.split('/')
         .find(_.startsWith(PartDirCol + "="))
         .map(_.substring(PartDirCol.length + 1))
-      stats.get((part, f.getName)) match {
-        case Some((lo, hi, n)) => Entry(rel, part, lo, hi, Some(n))
-        case None => Entry(rel, part)
+      val e = Entry(rel, part, size = st.getLen, modificationTime = st.getModificationTime)
+      stats.get((part, f.getName)).fold(e) { case (lo, hi, n) =>
+        e.copy(min = lo, max = hi, rows = Some(n))
       }
     }
   }
@@ -552,12 +559,12 @@ object TxnLog {
       .toMap
   }
 
-  private def listParquet(fs: FileSystem, dir: Path): Seq[Path] = {
-    val out = Seq.newBuilder[Path]
+  private def listParquet(fs: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) out += f.getPath
+      if (f.getPath.getName.endsWith(".parquet")) out += f
     }
     out.result()
   }
@@ -589,14 +596,26 @@ object TxnLog {
     * committed `schema` (its [[Manifest.schema]]). The log already
     * knows the schema, so no footer-inference job runs before the
     * scan; a column a file predates reads as null (schema evolution
-    * is reconciled from the log, not from footers).
+    * is reconciled from the log, not from footers). It also knows each
+    * file's size and modification time, so the scan's file index
+    * starts from them: no file is listed or stat'ed (Spark would list
+    * more than 32 paths in a job of its own). Only an entry without a
+    * recorded size is looked up.
     */
   def readEntries(
       spark: SparkSession,
       tableDir: String,
       entries: Seq[Entry],
-      schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(entries.map(e => new Path(tableDir, e.path).toString): _*)
+      schema: StructType): DataFrame = {
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val paths = entries.map(e => fs.makeQualified(new Path(root, e.path)))
+    lazy val blockSize = fs.getDefaultBlockSize(root)
+    val known = entries.zip(paths).collect { case (e, p) if e.size > 0 =>
+      p -> new org.apache.hadoop.fs.FileStatus(e.size, false, 1, blockSize, e.modificationTime, p)
+    }.toMap
+    org.apache.spark.sql.graftbridge.parquetScan(spark, schema, paths, known)
+  }
 
   /** Remove commit directories the current version does not reference
     * (crashed commits, superseded versions) and temp files left in the
