@@ -3,7 +3,7 @@ package graft.cdc
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming upsert — the live half of the reference's
   * ingest loop (rust-cdc `src/delta/mod.rs:124-155`
@@ -107,7 +107,7 @@ object CdcStream extends org.apache.spark.internal.Logging {
     * other's live sink mid-stream.
     */
   private[graft] def dropStaleSinks(s: SparkSession, queryName: String): Unit = {
-    val base = queryName.replaceAll("_\\d+$", "")
+    val base = graft.Scratch.base(queryName)
     val live = s.streams.active.flatMap(q => Option(q.name)).toSet
     s.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name != queryName && !live(t.name) &&
@@ -279,9 +279,26 @@ object CdcStream extends org.apache.spark.internal.Logging {
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
 
-  /** Serializes runToParquetSink's wipe-and-run per base query name. */
-  private val ssjBaseLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
+  /** Runs a stream to completion (AvailableNow) in a [[graft.Scratch]]
+    * generation of `queryName`: `writer` gets the generation's `out`
+    * dir, and the stream checkpoints to its `ckpt` dir. Returns the
+    * `out` dir. `s` is the session the stream runs on. Its stream
+    * resources are released even when a batch fails: a leaked
+    * registration defers the cleanup of every later query.
+    */
+  private[graft] def runAvailableNow(s: SparkSession, queryName: String)(
+      writer: String => DataStreamWriter[_]): String =
+    try graft.Scratch.run(queryName) { gen =>
+      val out = gen.resolve("out").toString
+      registerStreamingSession(s)
+      writer(out)
+        .queryName(queryName)
+        .option("checkpointLocation", gen.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      out
+    } finally releaseStreamResources(s)
 
   /** Run a streaming frame to completion (AvailableNow) through a
     * PARQUET file sink and return a batch frame over the sink — the
@@ -292,64 +309,17 @@ object CdcStream extends org.apache.spark.internal.Logging {
     * The stream runs on `out`'s own session (a stateful operator's
     * [[streamSession]] clone); the result is read back on `s`.
     *
-    * Per-BASE-query scratch root, pruned on entry: invocations carry
-    * nanoTime-suffixed names (fresh checkpoint by design), so temp
-    * sink + checkpoint dirs would otherwise accumulate a full output
-    * per bench pass. The prune-and-run is serialized per base under a
-    * JVM lock — without it a concurrent same-base invocation
-    * (parallel suites share the JVM) could delete an ACTIVE run's
-    * sink and checkpoint mid-stream. The prune RETAINS the newest
-    * previous generation rather than wiping the root: the lock can't
-    * stop a parallel thread from still holding the PREVIOUS
-    * invocation's lazy frame over its out_ dir, and consuming it
-    * after a same-base re-run would hit FileNotFound against a wiped
-    * root. One generation of grace closes that race (disk stays
-    * bounded at 2 generations per base); a reader two generations
-    * stale is outside any plausible interleaving of the suites that
-    * share this JVM.
+    * Sink and checkpoint live in one [[graft.Scratch]] generation of
+    * the query's base name: invocations carry nanoTime-suffixed names
+    * (a fresh checkpoint by design), and the scratch policy keeps a
+    * base's disk at two generations however often it runs.
     */
-  private def runInPrunedScratch(
-      s: SparkSession,
-      queryName: String)(run: (String, String) => Unit): String = {
-    val base = queryName.replaceAll("_\\d+$", "")
-    val scratchRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ssj", base)
-    val sinkDir = ssjBaseLocks.computeIfAbsent(base, _ => new Object)
-      .synchronized {
-        java.nio.file.Files.createDirectories(scratchRoot)
-        val kids = Option(scratchRoot.toFile.listFiles()).getOrElse(Array.empty)
-        Seq("out_", "ckpt_").foreach { prefix =>
-          kids.filter(_.getName.startsWith(prefix))
-            .sortBy(-_.lastModified())
-            .drop(1) // keep the newest previous generation
-            .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-        }
-        val dir = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "out_").toString
-        run(dir, java.nio.file.Files
-          .createTempDirectory(scratchRoot, "ckpt_").toString)
-        dir
-      }
-    releaseStreamResources(s)
-    sinkDir
-  }
-
   private[graft] def runToParquetSink(
       s: SparkSession,
       queryName: String,
       out: DataFrame): DataFrame = {
-    val sinkDir = runInPrunedScratch(out.sparkSession, queryName) { (dir, ckpt) =>
-      registerStreamingSession(out.sparkSession)
-      val q = out.writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .queryName(queryName)
-        .option("path", dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val sinkDir = runAvailableNow(out.sparkSession, queryName)(dir =>
+      out.writeStream.outputMode(OutputMode.Append).format("parquet").option("path", dir))
     // Explicit schema: an empty stream commits ZERO data files and
     // schema inference would throw; with the stream's own schema the
     // read yields an empty frame instead.
@@ -373,21 +343,13 @@ object CdcStream extends org.apache.spark.internal.Logging {
       queryName: String,
       out: DataFrame,
       mode: OutputMode): DataFrame = {
-    val sinkDir = runInPrunedScratch(out.sparkSession, queryName) { (dir, ckpt) =>
-      registerStreamingSession(out.sparkSession)
+    val sinkDir = runAvailableNow(out.sparkSession, queryName) { dir =>
       val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
         if (mode == OutputMode.Complete())
           // the whole state every batch — idempotent by definition
           batch.write.mode("overwrite").parquet(dir)
         else writeBatchSubdir(dir)(batch, batchId)
-      val q = out.writeStream
-        .outputMode(mode)
-        .foreachBatch(writeBatch)
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      out.writeStream.outputMode(mode).foreachBatch(writeBatch)
     }
     readBatchSubdirs(s, out.schema, sinkDir)
   }
@@ -433,21 +395,13 @@ object CdcStream extends org.apache.spark.internal.Logging {
       source: DataFrame)
       (score: DataFrame => DataFrame)
       (admit: DataFrame => DataFrame): DataFrame = {
-    val sinkDir = runInPrunedScratch(s, queryName) { (dir, ckpt) =>
-      registerStreamingSession(s)
+    val sinkDir = runAvailableNow(s, queryName) { dir =>
       val writeBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
         val scored = score(batch)
         try writeBatchSubdir(dir)(admit(scored), batchId)
         finally scored.unpersist()
       }
-      val q = source.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch(writeBatch)
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      source.writeStream.outputMode(OutputMode.Append).foreachBatch(writeBatch)
     }
     // Output schema from the transforms applied to an empty batch —
     // an empty stream commits zero data files (runToParquetSink
@@ -489,7 +443,9 @@ object CdcStream extends org.apache.spark.internal.Logging {
     * Structured Streaming query. The trigger plays the role of
     * `IngestOptions.allowed_latency` / `max_messages_per_batch`:
     * each micro-batch is one flush, merged transactionally per
-    * partition, with offsets committed after data.
+    * partition, with offsets committed after data. The checkpoint
+    * lives in a [[graft.Scratch]] generation of `queryName`, fresh
+    * per call, so each call reads the whole source.
     */
   def ingestInto(
       s: SparkSession,
@@ -499,18 +455,10 @@ object CdcStream extends org.apache.spark.internal.Logging {
       queryName: String = "cdc_ingest"): Unit = {
     val stream = Changelog.canonicalize(
       eventsStream(s, dir))
-    registerStreamingSession(s)
-    val q = stream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cdc_ingest_ckpt_").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    runAvailableNow(s, queryName)(_ =>
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         CdcSink.merge(batch.sparkSession, batch, tableDir, partitionCol)
-      }
-      .start()
-    q.awaitTermination()
-    releaseStreamResources(s)
+      })
   }
 
   /** Stream-stream interval join: each 'click' joined to the same

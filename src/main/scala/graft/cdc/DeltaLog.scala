@@ -542,16 +542,28 @@ object DeltaLog {
     if (!fs.rename(hintTmp, hintTarget)) fs.delete(hintTmp, false)
   }
 
+  private[graft] val CheckpointCacheSize = 16
+
   /** The last checkpoint read per log dir, with the (path, length,
     * modification time) of its files. A checkpoint never changes once
     * renamed into place, and every merge and lookup resolves the
     * current version through it: decoding the parquet costs ~1.5 ms
     * on a 4-core host, a status check ~20 µs. A newer checkpoint, or a
     * table recreated at the same path, changes the identity and is
-    * read afresh.
+    * read afresh. The cache holds the [[CheckpointCacheSize]] most
+    * recently read tables: a process that makes a table per run (a
+    * suite timer's sink entries) would otherwise keep every table's
+    * decoded snapshot for its whole life, and a live table is read on
+    * every merge, so it stays cached.
     */
-  private val checkpoints =
-    new java.util.concurrent.ConcurrentHashMap[Path, (Seq[(String, Long, Long)], Snapshot)]()
+  private val checkpoints = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Path, (Seq[(String, Long, Long)], Snapshot)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Path, (Seq[(String, Long, Long)], Snapshot)]): Boolean =
+        size > CheckpointCacheSize
+    })
+
+  private[graft] def cachedCheckpoints: Int = checkpoints.size
 
   /** The state `_last_checkpoint` points at, read on the driver. The
     * hint is best-effort by spec: a torn or stale hint (a missing

@@ -70,15 +70,7 @@ object Listeners {
       val keys = Changelog.canonicalize(
         CdcStream.eventsStream(s, dir))
         .select(col("key")).as[String]
-      CdcStream.registerStreamingSession(s)
-      val q = foreachEvent[String](keys, _ => acc.add(1))
-        .queryName(qn)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cdc_listen_ckpt_").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      CdcStream.releaseStreamResources(s)
+      CdcStream.runAvailableNow(s, qn)(_ => foreachEvent[String](keys, _ => acc.add(1)))
       // accumulator values land with task completion (synchronous by
       // awaitTermination); listener events ride the async bus, and
       // every progress event is posted by now — drain the bus (bounded)

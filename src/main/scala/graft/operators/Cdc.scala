@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.QueryDef._
 import graft.cdc._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -373,7 +373,10 @@ object Cdc {
     * `_COMPLETE`, ATOMIC_MOVE into place. Losing the rename race to a
     * concurrent generator is benign (the winner's output is
     * identical); any other failure deletes the temp dir before
-    * rethrowing, so a crashed generation never leaks.
+    * rethrowing, so a crashed generation never leaks. A publish
+    * prunes the name's other digests to the newest one: the scratch
+    * policy's one generation of grace ([[graft.Scratch.keepNewest]]),
+    * so two builds running side by side keep each other's corpus.
     */
   private[graft] def ensureGenerated(name: String, digest: String = generatorDigest)(
       write: java.nio.file.Path => Unit): String = {
@@ -395,6 +398,9 @@ object Cdc {
         java.nio.file.Files.writeString(tmp.resolve("_COMPLETE"), "ok")
         java.nio.file.Files.move(tmp, genDir,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        val family = java.util.regex.Pattern.quote(name) + "_[^_]+"
+        graft.Scratch.keepNewest(genDir.getParent.toFile.listFiles().toSeq
+          .filter(f => f.getName.matches(family) && f.toPath != genDir))
       } catch {
         // ANY failure cleans the temp dir (a generator crash must not
         // leak fixture dirs across runs); only the lost publish race
@@ -440,11 +446,12 @@ object Cdc {
   // content-pinned in ContentPinSpec.
   private def controlEvents(s: SparkSession, dir: String): DataFrame = {
     val genDir = ensureControlGenerated()
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_ctrl_tbl_").toString
     val ev = graft.sources.binlog.BinlogSource.events(s, genDir)
-    CdcSink.deadLetter(ev, tableDir, col("event_type") === "INCIDENT")
-    val dlq = s.read.parquet(CdcSink.dlqDir(tableDir))
+    val dlq = Scratch.run("cdc_control_events") { gen =>
+      val tableDir = gen.resolve("table").toString
+      CdcSink.deadLetter(ev, tableDir, col("event_type") === "INCIDENT")
+      s.read.parquet(CdcSink.dlqDir(tableDir))
+    }
     val summary = ev.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         max(col("next_binlog")).as("heartbeat_ident"))
@@ -507,126 +514,116 @@ object Cdc {
     // O(events × 65), linear in the stream
     val step = math.max(7L, (nTxns - bound) / 64)
     val genDir = ensureReplicaGenerated(nTxns)
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_replica_tbl_").toString
-    // built as contiguous-range partitions (prefix spans + one tail
-    // partition) rather than a filtered single range: the bootstrap
-    // below derives keys monotonically from gno, so this layout IS
-    // the range-clustering the sink wants — zero-shuffle bulk import.
-    // Partition count is sized to the FILE target so partitions are
-    // the file plan (a first cut at 32 slices splintered into ~5×
-    // the files once maxRecordsPerFile sub-split them, and the extra
-    // per-file open cost showed up directly in the cold merges/reads)
-    val fileTarget = math.max(1000L, nTxns * ReplicaRowsPerTxn / 32)
-    val prefixParts = math.max(1L,
-      (bound * ReplicaRowsPerTxn + fileTarget - 1) / fileTarget).toInt
-    val executedGnos = s.range(1, bound + 1, 1, prefixParts).toDF("gno")
-      .unionAll(s.range(bound + 1, nTxns + 1, 1, 1).toDF("gno")
-        .filter((col("gno") - bound) % step === 3))
-    val intervals = GtidSet.intervals(
-        executedGnos.withColumn("server_id", lit(1L)), "server_id", "gno")
-      .select(col("gno_start"), col("gno_end")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // bootstrap: the replica's table already holds the executed epoch
-    val bootstrap = executedGnos
-      .select(col("gno"),
-        explode(sequence(lit(1), lit(ReplicaRowsPerTxn))).as("j"))
-      .select(
-        ((col("gno") - 1) * ReplicaRowsPerTxn + col("j")).as("key"),
-        lit("c").as("op"), col("gno").as("offset"),
-        concat(lit("row-"),
-          ((col("gno") - 1) * ReplicaRowsPerTxn + col("j"))
-            .cast("string")).as("title"),
-        lit(0L).as("epoch"), lit("bootstrap").as("source_file"))
-    // range-clustered bootstrap with ZERO shuffle (the 100 TB load
-    // shape): keys derive monotonically from gno and executedGnos is
-    // already contiguous-range partitioned, so each partition's rows
-    // come out key-ascending and key-disjoint by construction — the
-    // pre-clustered bulk import skips the dedup agg AND the
-    // sample+range exchange writeSnapshotClustered would pay to
-    // rediscover this exact layout (measured ~3-4 s of the entry's
-    // cold window at sf0.1). Key-disjoint sorted files mean each
-    // replay merge rewrites only the files its contiguous gno range
-    // touches, and the post-loop resume-point lookup has stats to
-    // prune against. The record ceiling carries one-txn slack over
-    // the file target: range slices are even only to ±1 gno, and a
-    // partition a few rows over the exact target must not splinter a
-    // 5-row remainder file.
-    CdcSink.writeSnapshotPreClustered(bootstrap, tableDir,
-      targetRecordsPerFile = fileTarget + ReplicaRowsPerTxn)
-    // resume: stream every file; per micro-batch assemble + skip + merge
     val qn = s"cdc_replica_loop_${System.nanoTime()}"
-    CdcStream.registerStreamingSession(s)
-    val q = s.readStream.format("binlog").load(genDir)
-      .writeStream.queryName(qn)
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("cdc_replica_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val iv = broadcast(intervals.toDF("gno_start", "gno_end"))
-        // txn assembly: every event takes the xid of its nearest
-        // FOLLOWING XID in file order (files hold whole txns, and
-        // micro-batch offsets are file-granular — no split txns).
-        // Expressed as a RUNNING min over descending log_pos — the
-        // [currentRow, unboundedFollowing] spelling hits Spark's
-        // UnboundedFollowingWindowFunctionFrame, which rebuilds the
-        // aggregate per row: O(rows²) per file and the whole entry's
-        // wall-clock at sf0.1+; the running frame is O(rows)
-        val wTxn = Window.partitionBy("file").orderBy(col("log_pos").desc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val rows = batch
-          .withColumn("txn_gno",
-            min(when(col("event_type") === "XID", col("xid"))).over(wTxn))
-          .filter(col("event_type") === "WRITE_ROWS_V2")
-        val live = rows.join(iv,
-          col("txn_gno").between(col("gno_start"), col("gno_end")),
-          "left_anti")
-        // ONE json parse per row image: two get_json_object calls
-        // each re-parse the document (no codegen CSE across JSON path
-        // expressions) — at sf10 that is 15M double-parses on the
-        // entry's hot path
-        val changes = live
-          .withColumn("__a", from_json(col("after"),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("col_0",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("col_1",
-                org.apache.spark.sql.types.StringType)))))
-          .select(
-            col("__a.col_0").cast("long").as("key"),
-            lit("c").as("op"),
-            (regexp_extract(col("file"), "mysql-bin\\.(\\d+)", 1)
-              .cast("long") * 1000000000L + col("log_pos")).as("offset"),
-            col("__a.col_1").as("title"),
-            lit(1L).as("epoch"),
-            col("file").as("source_file"))
-        CdcSink.merge(ss, changes, tableDir, None)
-      }
-      .start()
-    // release even when a micro-batch fails: a leaked streaming-
-    // session registration defers terminated-query/state-store
-    // cleanup for every later query in this session
-    try q.awaitTermination()
-    finally CdcStream.releaseStreamResources(s)
-    // resume-point lookup through the stat-pruned read path (the
-    // reference replica answers "did txn N land?" from its store;
-    // here it opens only the files whose key range covers the probe,
-    // not the table): gno bound+1 is the first REPLAYED txn — it is
-    // outside the executed set by construction ((1 % step) != 3) —
-    // so its rows must all carry the resumed epoch
-    val probe = CdcSink.readRange(s, tableDir,
-      (bound * ReplicaRowsPerTxn + 1).toString,
-      ((bound + 1) * ReplicaRowsPerTxn).toString)
-      .groupBy("epoch").agg(count(lit(1)).as("n")).collect()
-    require(probe.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
-      Seq((1L, ReplicaRowsPerTxn.toLong)),
-      s"resume-point lookup at gno ${bound + 1} returned " +
-        s"${probe.mkString(",")} — expected $ReplicaRowsPerTxn rows all epoch 1")
-    CdcSink.read(s, tableDir)
-      .select(col("key").as("id"), col("title"), col("epoch"))
-      .orderBy("id")
+    Scratch.run(qn) { gen =>
+      val tableDir = gen.resolve("table").toString
+      // built as contiguous-range partitions (prefix spans + one tail
+      // partition) rather than a filtered single range: the bootstrap
+      // below derives keys monotonically from gno, so this layout IS
+      // the range-clustering the sink wants — zero-shuffle bulk import.
+      // Partition count is sized to the FILE target so partitions are
+      // the file plan (a first cut at 32 slices splintered into ~5×
+      // the files once maxRecordsPerFile sub-split them, and the extra
+      // per-file open cost showed up directly in the cold merges/reads)
+      val fileTarget = math.max(1000L, nTxns * ReplicaRowsPerTxn / 32)
+      val prefixParts = math.max(1L,
+        (bound * ReplicaRowsPerTxn + fileTarget - 1) / fileTarget).toInt
+      val executedGnos = s.range(1, bound + 1, 1, prefixParts).toDF("gno")
+        .unionAll(s.range(bound + 1, nTxns + 1, 1, 1).toDF("gno")
+          .filter((col("gno") - bound) % step === 3))
+      val intervals = GtidSet.intervals(
+          executedGnos.withColumn("server_id", lit(1L)), "server_id", "gno")
+        .select(col("gno_start"), col("gno_end")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      // bootstrap: the replica's table already holds the executed epoch
+      val bootstrap = executedGnos
+        .select(col("gno"),
+          explode(sequence(lit(1), lit(ReplicaRowsPerTxn))).as("j"))
+        .select(
+          ((col("gno") - 1) * ReplicaRowsPerTxn + col("j")).as("key"),
+          lit("c").as("op"), col("gno").as("offset"),
+          concat(lit("row-"),
+            ((col("gno") - 1) * ReplicaRowsPerTxn + col("j"))
+              .cast("string")).as("title"),
+          lit(0L).as("epoch"), lit("bootstrap").as("source_file"))
+      // range-clustered bootstrap with ZERO shuffle (the 100 TB load
+      // shape): keys derive monotonically from gno and executedGnos is
+      // already contiguous-range partitioned, so each partition's rows
+      // come out key-ascending and key-disjoint by construction — the
+      // pre-clustered bulk import skips the dedup agg AND the
+      // sample+range exchange writeSnapshotClustered would pay to
+      // rediscover this exact layout (measured ~3-4 s of the entry's
+      // cold window at sf0.1). Key-disjoint sorted files mean each
+      // replay merge rewrites only the files its contiguous gno range
+      // touches, and the post-loop resume-point lookup has stats to
+      // prune against. The record ceiling carries one-txn slack over
+      // the file target: range slices are even only to ±1 gno, and a
+      // partition a few rows over the exact target must not splinter a
+      // 5-row remainder file.
+      CdcSink.writeSnapshotPreClustered(bootstrap, tableDir,
+        targetRecordsPerFile = fileTarget + ReplicaRowsPerTxn)
+      // resume: stream every file; per micro-batch assemble + skip + merge
+      CdcStream.runAvailableNow(s, qn)(_ => s.readStream.format("binlog").load(genDir)
+        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          val ss = batch.sparkSession
+          import ss.implicits._
+          val iv = broadcast(intervals.toDF("gno_start", "gno_end"))
+          // txn assembly: every event takes the xid of its nearest
+          // FOLLOWING XID in file order (files hold whole txns, and
+          // micro-batch offsets are file-granular — no split txns).
+          // Expressed as a RUNNING min over descending log_pos — the
+          // [currentRow, unboundedFollowing] spelling hits Spark's
+          // UnboundedFollowingWindowFunctionFrame, which rebuilds the
+          // aggregate per row: O(rows²) per file and the whole entry's
+          // wall-clock at sf0.1+; the running frame is O(rows)
+          val wTxn = Window.partitionBy("file").orderBy(col("log_pos").desc)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+          val rows = batch
+            .withColumn("txn_gno",
+              min(when(col("event_type") === "XID", col("xid"))).over(wTxn))
+            .filter(col("event_type") === "WRITE_ROWS_V2")
+          val live = rows.join(iv,
+            col("txn_gno").between(col("gno_start"), col("gno_end")),
+            "left_anti")
+          // ONE json parse per row image: two get_json_object calls
+          // each re-parse the document (no codegen CSE across JSON path
+          // expressions) — at sf10 that is 15M double-parses on the
+          // entry's hot path
+          val changes = live
+            .withColumn("__a", from_json(col("after"),
+              org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("col_0",
+                  org.apache.spark.sql.types.StringType),
+                org.apache.spark.sql.types.StructField("col_1",
+                  org.apache.spark.sql.types.StringType)))))
+            .select(
+              col("__a.col_0").cast("long").as("key"),
+              lit("c").as("op"),
+              (regexp_extract(col("file"), "mysql-bin\\.(\\d+)", 1)
+                .cast("long") * 1000000000L + col("log_pos")).as("offset"),
+              col("__a.col_1").as("title"),
+              lit(1L).as("epoch"),
+              col("file").as("source_file"))
+          CdcSink.merge(ss, changes, tableDir, None)
+        })
+      // resume-point lookup through the stat-pruned read path (the
+      // reference replica answers "did txn N land?" from its store;
+      // here it opens only the files whose key range covers the probe,
+      // not the table): gno bound+1 is the first REPLAYED txn — it is
+      // outside the executed set by construction ((1 % step) != 3) —
+      // so its rows must all carry the resumed epoch
+      val probe = CdcSink.readRange(s, tableDir,
+        (bound * ReplicaRowsPerTxn + 1).toString,
+        ((bound + 1) * ReplicaRowsPerTxn).toString)
+        .groupBy("epoch").agg(count(lit(1)).as("n")).collect()
+      require(probe.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
+        Seq((1L, ReplicaRowsPerTxn.toLong)),
+        s"resume-point lookup at gno ${bound + 1} returned " +
+          s"${probe.mkString(",")} — expected $ReplicaRowsPerTxn rows all epoch 1")
+      CdcSink.read(s, tableDir)
+        .select(col("key").as("id"), col("title"), col("epoch"))
+        .orderBy("id")
+    }
   }
 
   private val replicaLoopSql = {
@@ -653,6 +650,30 @@ object Cdc {
        |FROM rws ORDER BY id""".stripMargin
   }
 
+  /** The set-up the half-snapshot sink entries share (cdc_delta_read,
+    * cdc_sink, cdc_time_travel, cdc_snapshot_diff, cdc_compaction):
+    * the changelog up to its middle offset bootstraps a table (the
+    * first commit), the rest merges into it (the second). A
+    * `partitioned` table is partitioned by `part`, the key mod 8:
+    * stable per key, so a pruned merge is exact. The table lives in a
+    * [[graft.Scratch]] generation of `name`; returns its dir.
+    */
+  private def halfSnapshotTable(
+      s: SparkSession, dir: String, name: String, partitioned: Boolean): String = {
+    val changes = Changelog.fromEvents(s, dir)
+      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
+    val (log, part) =
+      if (partitioned) (changes.withColumn("part", pmod(col("key").cast("long"), lit(8))), Some("part"))
+      else (changes, None)
+    val mid = log.agg(max("offset")).head.getLong(0) / 2
+    Scratch.run(name) { gen =>
+      val tableDir = gen.resolve("table").toString
+      CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, part)
+      CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, part)
+      tableDir
+    }
+  }
+
   // --- cdc_delta_read: cross-engine read through the _delta_log -----
   // The interop proof in the inventory: a sink table built by
   // bootstrap + merge is re-opened through DeltaLog.read — the
@@ -663,13 +684,7 @@ object Cdc {
   // the read path any foreign engine would take on graft's tables
   // (and graft on theirs).
   private def deltaRead(s: SparkSession, dir: String): DataFrame = {
-    val log = Changelog.fromEvents(s, dir)
-      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
-    val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_delta_q_").toString
-    CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, None)
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, None)
+    val tableDir = halfSnapshotTable(s, dir, "cdc_delta_read", partitioned = false)
     DeltaLog.read(s, tableDir)
       .select(col("key"), col("offset").as("last_offset"),
         col("event_type"), col("value"))
@@ -699,28 +714,29 @@ object Cdc {
       col("o_orderkey").as("offset"),
       col("o_totalprice").cast("decimal(18,2)").cast("double").as("value"),
       lit("bin.1").as("source_file"))
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_prune_q_").toString
-    // one agg pass serves both the clustered-write target and the cut
-    val nmk = orders.agg(count(lit(1)), max("o_orderkey")).head
-    val (n, cut) = (nmk.getLong(0), nmk.getLong(1) / 100)
-    // bootstrap lands range-clustered WITH stats in one pass (r18):
-    // the old writeSnapshot → compact pair paid a second full
-    // read+rewrite of the table just to earn the key-disjoint layout
-    // writeSnapshotClustered produces directly (guide §2.4 — the
-    // clustering and the snapshot share one exchange)
-    CdcSink.writeSnapshotClustered(w1, tableDir,
-      targetRecordsPerFile = math.max(1000L, n / 16))
-    val w2 = orders
-      .filter(col("o_orderkey") <= cut && col("o_orderkey") % 4 === 0)
-      .select(
-        format_string("k%012d", col("o_orderkey")).as("key"),
-        when(col("o_orderkey") % 8 === 4, lit("d")).otherwise(lit("u")).as("op"),
-        (col("o_orderkey") + 1000000000L).as("offset"),
-        (-col("o_totalprice")).cast("decimal(18,2)").cast("double").as("value"),
-        lit("bin.2").as("source_file"))
-    CdcSink.merge(s, w2, tableDir, None)
-    CdcSink.read(s, tableDir).select("key", "value").orderBy("key")
+    Scratch.run("cdc_merge_pruned") { gen =>
+      val tableDir = gen.resolve("table").toString
+      // one agg pass serves both the clustered-write target and the cut
+      val nmk = orders.agg(count(lit(1)), max("o_orderkey")).head
+      val (n, cut) = (nmk.getLong(0), nmk.getLong(1) / 100)
+      // bootstrap lands range-clustered WITH stats in one pass (r18):
+      // the old writeSnapshot → compact pair paid a second full
+      // read+rewrite of the table just to earn the key-disjoint layout
+      // writeSnapshotClustered produces directly (guide §2.4 — the
+      // clustering and the snapshot share one exchange)
+      CdcSink.writeSnapshotClustered(w1, tableDir,
+        targetRecordsPerFile = math.max(1000L, n / 16))
+      val w2 = orders
+        .filter(col("o_orderkey") <= cut && col("o_orderkey") % 4 === 0)
+        .select(
+          format_string("k%012d", col("o_orderkey")).as("key"),
+          when(col("o_orderkey") % 8 === 4, lit("d")).otherwise(lit("u")).as("op"),
+          (col("o_orderkey") + 1000000000L).as("offset"),
+          (-col("o_totalprice")).cast("decimal(18,2)").cast("double").as("value"),
+          lit("bin.2").as("source_file"))
+      CdcSink.merge(s, w2, tableDir, None)
+      CdcSink.read(s, tableDir).select("key", "value").orderBy("key")
+    }
   }
 
   private val mergePrunedSql =
@@ -761,51 +777,52 @@ object Cdc {
       col("o_orderkey").as("offset"),
       col("o_totalprice").cast("decimal(18,2)").cast("double").as("value"),
       lit("bin.1").as("source_file"))
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_lookup_q_").toString
-    // one agg pass serves both the clustered-write target and the bounds
-    val nmk = orders.agg(count(lit(1)), max("o_orderkey")).head
-    val (n, mk) = (nmk.getLong(0), nmk.getLong(1))
-    // bootstrap lands range-clustered WITH stats in one pass (r18) —
-    // same fold as cdc_merge_pruned: writeSnapshot → compact paid a
-    // second full read+rewrite for the layout the clustered write
-    // produces directly
-    CdcSink.writeSnapshotClustered(w1, tableDir,
-      targetRecordsPerFile = math.max(1000L, n / 16))
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val preVersion = TxnLog.current(fs, tableDir).get.version
-    val cut = mk / 100
-    val w2 = orders
-      .filter(col("o_orderkey") <= cut && col("o_orderkey") % 4 === 0)
-      .select(
-        format_string("k%012d", col("o_orderkey")).as("key"),
-        when(col("o_orderkey") % 8 === 4, lit("d")).otherwise(lit("u")).as("op"),
-        (col("o_orderkey") + 1000000000L).as("offset"),
-        (-col("o_totalprice")).cast("decimal(18,2)").cast("double").as("value"),
-        lit("bin.2").as("source_file"))
-    CdcSink.merge(s, w2, tableDir, None)
-    // window [mk/200, mk/100 + mk/200] straddles the touched (<= cut)
-    // and untouched keyspace
-    val lo = f"k${mk / 200}%012d"
-    val hi = f"k${cut + mk / 200}%012d"
-    val ranged = CdcSink.readRange(s, tableDir, lo, hi)
-    // the physical claim, asserted in-entry: the window covers ~1.5%
-    // of the keyspace of a range-compacted table, so the pruned read
-    // must open strictly fewer files than the manifest lists.
-    // inputFiles is the METADATA-level opened-file count — a
-    // post-filter input_file_name() would only count files with
-    // surviving rows and pass even if manifest pruning degraded to
-    // keep-everything (the row filter alone confines survivors)
-    val scanned = ranged.inputFiles.length
-    val nEntries = TxnLog.current(fs, tableDir).get.entries.length
-    require(scanned < nEntries,
-      s"point lookup opened $scanned of $nEntries files — stats pruned nothing")
-    val post = ranged
-      .select(lit("post").as("state"), col("key"), col("value"))
-    val pre = CdcSink.readRange(s, tableDir, lo, hi, asOf = Some(preVersion))
-      .select(lit("pre").as("state"), col("key"), col("value"))
-    post.unionAll(pre).orderBy("state", "key")
+    Scratch.run("cdc_point_lookup") { gen =>
+      val tableDir = gen.resolve("table").toString
+      // one agg pass serves both the clustered-write target and the bounds
+      val nmk = orders.agg(count(lit(1)), max("o_orderkey")).head
+      val (n, mk) = (nmk.getLong(0), nmk.getLong(1))
+      // bootstrap lands range-clustered WITH stats in one pass (r18) —
+      // same fold as cdc_merge_pruned: writeSnapshot → compact paid a
+      // second full read+rewrite for the layout the clustered write
+      // produces directly
+      CdcSink.writeSnapshotClustered(w1, tableDir,
+        targetRecordsPerFile = math.max(1000L, n / 16))
+      val fs = new org.apache.hadoop.fs.Path(tableDir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val preVersion = TxnLog.current(fs, tableDir).get.version
+      val cut = mk / 100
+      val w2 = orders
+        .filter(col("o_orderkey") <= cut && col("o_orderkey") % 4 === 0)
+        .select(
+          format_string("k%012d", col("o_orderkey")).as("key"),
+          when(col("o_orderkey") % 8 === 4, lit("d")).otherwise(lit("u")).as("op"),
+          (col("o_orderkey") + 1000000000L).as("offset"),
+          (-col("o_totalprice")).cast("decimal(18,2)").cast("double").as("value"),
+          lit("bin.2").as("source_file"))
+      CdcSink.merge(s, w2, tableDir, None)
+      // window [mk/200, mk/100 + mk/200] straddles the touched (<= cut)
+      // and untouched keyspace
+      val lo = f"k${mk / 200}%012d"
+      val hi = f"k${cut + mk / 200}%012d"
+      val ranged = CdcSink.readRange(s, tableDir, lo, hi)
+      // the physical claim, asserted in-entry: the window covers ~1.5%
+      // of the keyspace of a range-compacted table, so the pruned read
+      // must open strictly fewer files than the manifest lists.
+      // inputFiles is the METADATA-level opened-file count — a
+      // post-filter input_file_name() would only count files with
+      // surviving rows and pass even if manifest pruning degraded to
+      // keep-everything (the row filter alone confines survivors)
+      val scanned = ranged.inputFiles.length
+      val nEntries = TxnLog.current(fs, tableDir).get.entries.length
+      require(scanned < nEntries,
+        s"point lookup opened $scanned of $nEntries files — stats pruned nothing")
+      val post = ranged
+        .select(lit("post").as("state"), col("key"), col("value"))
+      val pre = CdcSink.readRange(s, tableDir, lo, hi, asOf = Some(preVersion))
+        .select(lit("pre").as("state"), col("key"), col("value"))
+      post.unionAll(pre).orderBy("state", "key")
+    }
   }
 
   private val pointLookupSql =
@@ -886,98 +903,89 @@ object Cdc {
         }
       }
     }
-    val tableDirs = RoutedTables.map { case (_, name) =>
-      name -> java.nio.file.Files
-        .createTempDirectory(s"cdc_multi_${name}_").toString
-    }
     val qn = s"cdc_multi_table_${System.nanoTime()}"
-    CdcStream.registerStreamingSession(s)
-    // the subscription rides SOURCE OPTIONS (the Kafka-subscribe
-    // idiom): Spark applies no Catalyst pushdown to streaming DSv2
-    // scans, so a DataFrame filter would run only after the reader
-    // materialized every event — the options drop foreign tables'
-    // rows inside the reader (row decode gated in the parser),
-    // control events pass for txn boundaries
-    val q = s.readStream.format("binlog")
-      .option("subscribe.databases", "gen")
-      .option("subscribe.tables", RoutedTables.map(_._2).mkString(","))
-      .load(genDir)
-      .writeStream.queryName(qn)
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("cdc_multi_ckpt_").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        // residual re-check of the subscription (reference
-        // MatchStrategy semantics) — the heavy lifting happened in
-        // the reader via the subscribe.* options above; this keeps
-        // the routing correct even against a source without the
-        // option contract
-        val rows = batch
-          .filter(graft.cdc.MatchStrategy.matchesCols(
-            col("schema_name"), col("table_name"),
-            Seq("gen"), RoutedTables.map(_._2)) &&
-            col("event_type") === "WRITE_ROWS_V2")
-          .withColumn("__a", from_json(col("after"),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("col_0",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("col_1",
-                org.apache.spark.sql.types.StringType)))))
-          .select(col("table_name"),
-            col("__a.col_0").cast("long").as("key"),
-            lit("c").as("op"),
-            (regexp_extract(col("file"), "mysql-bin\\.(\\d+)", 1)
-              .cast("long") * 1000000000L + col("log_pos")).as("offset"),
-            col("__a.col_1").as("title"),
-            col("file").as("source_file"))
-          // one routed batch feeds N per-table merges — persist so the
-          // parse + json decode run once, not once per table
-          .persist()
-        // the N per-table merges are INDEPENDENT jobs over disjoint
-        // sinks (each its own dir + txn log): submit them from a
-        // small thread pool so each merge's straggler tail
-        // back-fills with the next table's tasks instead of idling
-        // 31 cores (guide §2.6 overlap; job-description locality is
-        // thread-local so the UI stays attributable). Sequential
-        // form measured ~3 merge windows of pure stage floor per
-        // micro-batch at sf0.1.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          tableDirs.size)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val merges = tableDirs.map { case (name, tdir) =>
-            scala.concurrent.Future {
-              CdcSink.merge(ss,
-                rows.filter(col("table_name") === name).drop("table_name"),
-                tdir, None)
+    Scratch.run(qn) { gen =>
+      val tableDirs = RoutedTables.map { case (_, name) => name -> gen.resolve(name).toString }
+      // the subscription rides SOURCE OPTIONS (the Kafka-subscribe
+      // idiom): Spark applies no Catalyst pushdown to streaming DSv2
+      // scans, so a DataFrame filter would run only after the reader
+      // materialized every event — the options drop foreign tables'
+      // rows inside the reader (row decode gated in the parser),
+      // control events pass for txn boundaries
+      CdcStream.runAvailableNow(s, qn)(_ => s.readStream.format("binlog")
+        .option("subscribe.databases", "gen")
+        .option("subscribe.tables", RoutedTables.map(_._2).mkString(","))
+        .load(genDir)
+        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          val ss = batch.sparkSession
+          // residual re-check of the subscription (reference
+          // MatchStrategy semantics) — the heavy lifting happened in
+          // the reader via the subscribe.* options above; this keeps
+          // the routing correct even against a source without the
+          // option contract
+          val rows = batch
+            .filter(graft.cdc.MatchStrategy.matchesCols(
+              col("schema_name"), col("table_name"),
+              Seq("gen"), RoutedTables.map(_._2)) &&
+              col("event_type") === "WRITE_ROWS_V2")
+            .withColumn("__a", from_json(col("after"),
+              org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("col_0",
+                  org.apache.spark.sql.types.StringType),
+                org.apache.spark.sql.types.StructField("col_1",
+                  org.apache.spark.sql.types.StringType)))))
+            .select(col("table_name"),
+              col("__a.col_0").cast("long").as("key"),
+              lit("c").as("op"),
+              (regexp_extract(col("file"), "mysql-bin\\.(\\d+)", 1)
+                .cast("long") * 1000000000L + col("log_pos")).as("offset"),
+              col("__a.col_1").as("title"),
+              col("file").as("source_file"))
+            // one routed batch feeds N per-table merges — persist so the
+            // parse + json decode run once, not once per table
+            .persist()
+          // the N per-table merges are INDEPENDENT jobs over disjoint
+          // sinks (each its own dir + txn log): submit them from a
+          // small thread pool so each merge's straggler tail
+          // back-fills with the next table's tasks instead of idling
+          // 31 cores (guide §2.6 overlap; job-description locality is
+          // thread-local so the UI stays attributable). Sequential
+          // form measured ~3 merge windows of pure stage floor per
+          // micro-batch at sf0.1.
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            tableDirs.size)
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.fromExecutorService(pool)
+          try {
+            val merges = tableDirs.map { case (name, tdir) =>
+              scala.concurrent.Future {
+                CdcSink.merge(ss,
+                  rows.filter(col("table_name") === name).drop("table_name"),
+                  tdir, None)
+              }
             }
-          }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(merges),
-            scala.concurrent.duration.Duration.Inf)
-          ()
-        } finally { pool.shutdown(); rows.unpersist() }
+            scala.concurrent.Await.result(
+              scala.concurrent.Future.sequence(merges),
+              scala.concurrent.duration.Duration.Inf)
+            ()
+          } finally { pool.shutdown(); rows.unpersist() }
+        })
+      // per-table offset commits: every rotated file holds every
+      // table's txns (the generator shrinks the file count so
+      // round-robin puts ≥1 txn per table in each file), so each
+      // sink must have committed an offset for each file
+      val nFiles = new java.io.File(genDir).listFiles()
+        .count(_.getName.startsWith("mysql-bin"))
+      tableDirs.foreach { case (name, tdir) =>
+        val offs = CdcSink.committedOffsets(s, tdir)
+        require(offs.size == nFiles,
+          s"$name committed offsets for ${offs.size} of $nFiles files")
       }
-      .start()
-    try q.awaitTermination()
-    finally CdcStream.releaseStreamResources(s)
-    // per-table offset commits: every rotated file holds every
-    // table's txns (the generator shrinks the file count so
-    // round-robin puts ≥1 txn per table in each file), so each
-    // sink must have committed an offset for each file
-    val nFiles = new java.io.File(genDir).listFiles()
-      .count(_.getName.startsWith("mysql-bin"))
-    tableDirs.foreach { case (name, tdir) =>
-      val offs = CdcSink.committedOffsets(s, tdir)
-      require(offs.size == nFiles,
-        s"$name committed offsets for ${offs.size} of $nFiles files")
+      tableDirs.map { case (name, tdir) =>
+        CdcSink.read(s, tdir)
+          .select(lit(name).as("table_name"), col("key"), col("title"))
+      }.reduce(_ unionAll _).orderBy("table_name", "key")
     }
-    tableDirs.map { case (name, tdir) =>
-      CdcSink.read(s, tdir)
-        .select(lit(name).as("table_name"), col("key"), col("title"))
-    }.reduce(_ unionAll _).orderBy("table_name", "key")
   }
 
   private val multiTableSql = {
@@ -1247,14 +1255,7 @@ object Cdc {
   // merge is exact. Result table must equal the one-shot snapshot —
   // the oracle is the plain latest-per-key SQL.
   private def cdcSink(s: SparkSession, dir: String): DataFrame = {
-    val log = Changelog.fromEvents(s, dir)
-      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
-      .withColumn("part", pmod(col("key").cast("long"), lit(8)))
-    val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_sink_q_").toString
-    CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, Some("part"))
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, Some("part"))
+    val tableDir = halfSnapshotTable(s, dir, "cdc_sink", partitioned = true)
     CdcSink.read(s, tableDir)
       .select(col("key"), col("offset").as("last_offset"),
         col("event_type"), col("value"))
@@ -1269,12 +1270,15 @@ object Cdc {
   // --- cdc_ingest: streaming foreachBatch ingest == batch snapshot ---
   // The full reference loop (source → buffer → flush-to-table) as a
   // Structured Streaming query: each micro-batch is one flush, merged
-  // into the CdcSink table with offsets committed after data.
+  // into the CdcSink table with offsets committed after data. Table
+  // and checkpoint share one scratch generation.
   private def cdcIngest(s: SparkSession, dir: String): DataFrame = {
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_ingest_q_").toString
-    CdcStream.ingestInto(s, dir, tableDir,
-      queryName = s"cdc_ingest_${System.nanoTime()}")
+    val qn = s"cdc_ingest_${System.nanoTime()}"
+    val tableDir = Scratch.run(qn) { gen =>
+      val table = gen.resolve("table").toString
+      CdcStream.ingestInto(s, dir, table, queryName = qn)
+      table
+    }
     CdcSink.read(s, tableDir)
       .select(col("key"), col("offset").as("last_offset"),
         col("event_type"), col("value"))
@@ -1300,15 +1304,8 @@ object Cdc {
   private def binlogStream(s: SparkSession, dir: String): DataFrame = {
     val qn = s"cdc_binlog_stream_${System.nanoTime()}"
     CdcStream.dropStaleSinks(s, qn)
-    CdcStream.registerStreamingSession(s)
-    val q = s.readStream.format("binlog")
-      .load(referenceFixtures())
-      .writeStream.format("memory").queryName(qn)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("binlog_stream_ckpt_").toString)
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); CdcStream.releaseStreamResources(s) }
+    CdcStream.runAvailableNow(s, qn)(_ =>
+      s.readStream.format("binlog").load(referenceFixtures()).writeStream.format("memory"))
     s.table(qn)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct(col("file")).as("n_files"))
@@ -1387,10 +1384,12 @@ object Cdc {
       .select("topic", "partition", "offset", "key", "op", "event_type", "value")
       .persist()
     try {
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("cdc_kafka_q_").toString
-      KafkaIngest.ingest(s, topic.filter(col("partition") < 2), tableDir)
-      KafkaIngest.ingest(s, topic, tableDir) // full redelivery + the rest
+      val tableDir = Scratch.run("cdc_kafka_ingest") { gen =>
+        val table = gen.resolve("table").toString
+        KafkaIngest.ingest(s, topic.filter(col("partition") < 2), table)
+        KafkaIngest.ingest(s, topic, table) // full redelivery + the rest
+        table
+      }
       // the read's lineage is the committed parquet, not `topic` —
       // localCheckpoint is unnecessary; unpersist after the read plan
       // is built is safe
@@ -1478,13 +1477,7 @@ object Cdc {
   // reading AS OF v1 must equal the prefix-bounded snapshot — the
   // oracle replays the changelog with the same offset cutoff.
   private def timeTravel(s: SparkSession, dir: String): DataFrame = {
-    val log = Changelog.fromEvents(s, dir)
-      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
-    val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_tt_q_").toString
-    CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, None)
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, None)
+    val tableDir = halfSnapshotTable(s, dir, "cdc_time_travel", partitioned = false)
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val bootstrapVersion = TxnLog.versions(fs, tableDir).head
@@ -1515,13 +1508,7 @@ object Cdc {
   // replays the changelog with and without the version cutoff and
   // must land on identical verdicts.
   private def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    val log = Changelog.fromEvents(s, dir)
-      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
-    val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_diff_q_").toString
-    CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, None)
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, None)
+    val tableDir = halfSnapshotTable(s, dir, "cdc_snapshot_diff", partitioned = false)
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val versions = TxnLog.versions(fs, tableDir)
@@ -1577,14 +1564,7 @@ object Cdc {
   // read must still equal the plain latest-per-key fold. File-count
   // and version-retention effects are asserted in CdcSinkSpec.
   private def compaction(s: SparkSession, dir: String): DataFrame = {
-    val log = Changelog.fromEvents(s, dir)
-      .select(col("key"), col("op"), col("offset"), col("event_type"), col("value"))
-      .withColumn("part", pmod(col("key").cast("long"), lit(8)))
-    val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_compact_q_").toString
-    CdcSink.writeSnapshot(log.filter(col("offset") <= mid), tableDir, Some("part"))
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, Some("part"))
+    val tableDir = halfSnapshotTable(s, dir, "cdc_compaction", partitioned = true)
     CdcSink.compact(s, tableDir, Some("part"))
     CdcSink.read(s, tableDir)
       .select(col("key"), col("offset").as("last_offset"),
@@ -1674,17 +1654,18 @@ object Cdc {
         col("value"), col("props"))
       .withColumn("part", pmod(col("key").cast("long"), lit(8)))
     val mid = log.agg(max("offset")).head.getLong(0) / 2
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("cdc_evo_q_").toString
-    CdcSink.writeSnapshot(
-      log.filter(col("offset") <= mid).drop("props"), tableDir, Some("part"))
-    CdcSink.applyDdl(s,
-      Ddl.parse("ALTER TABLE snap ADD COLUMN props VARCHAR"), tableDir, Some("part"))
-    CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, Some("part"))
-    CdcSink.read(s, tableDir)
-      .select(col("key"), col("offset").as("last_offset"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy("key")
+    Scratch.run("cdc_schema_evolution") { gen =>
+      val tableDir = gen.resolve("table").toString
+      CdcSink.writeSnapshot(
+        log.filter(col("offset") <= mid).drop("props"), tableDir, Some("part"))
+      CdcSink.applyDdl(s,
+        Ddl.parse("ALTER TABLE snap ADD COLUMN props VARCHAR"), tableDir, Some("part"))
+      CdcSink.merge(s, log.filter(col("offset") > mid), tableDir, Some("part"))
+      CdcSink.read(s, tableDir)
+        .select(col("key"), col("offset").as("last_offset"),
+          col("event_type"), col("value"), col("props"))
+        .orderBy("key")
+    }
   }
 
   private val schemaEvolutionSql =

@@ -1631,27 +1631,14 @@ object Curation extends org.apache.spark.internal.Logging {
   // and freq carried through so the folded chain doubles as the
   // encode table) and must land on identical totals.
   // ---------------------------------------------------------------
-  private val encodeMergeCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]]
-
   /** Learned merges for `dir`, collected once per (session, dir) —
     * R bounded rows across the driver (PQ-seeds precedent). */
   private[graft] def learnedMerges(
-      s: SparkSession, dir: String): Seq[(String, String)] = {
-    val perSession = encodeMergeCache.synchronized {
-      var m = encodeMergeCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]
-        encodeMergeCache.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, _ =>
+      s: SparkSession, dir: String): Seq[(String, String)] =
+    SessionCache.value(s, s"cur:bpe:merges:$dir")(
       bpeMerges(Tables.documents(s, dir).select(col("text")), "text", BpeRounds)
         .orderBy("rnd").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq)
-  }
 
   /** Per-doc BPE encoding stats using `merges` (training order). */
   def bpeEncodeStats(docs: DataFrame, merges: Seq[(String, String)],

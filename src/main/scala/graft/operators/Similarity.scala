@@ -498,7 +498,7 @@ object Similarity {
     // centroid training runs several short jobs over the table — the
     // plain scan avoids re-paying the parallelize exchange per job;
     // the one-pass assignment below does want it
-    val centroids = cachedMatrix(s, s"ivf|cent|$dir|$maxTrainRows")(
+    val centroids = SessionCache.value(s, s"sim:ivf:cent:$dir:$maxTrainRows")(
       trainCentroids(Tables.embeddings(s, dir), maxTrainRows))
     val indexed = SessionCache.get(s, s"sim:ivf:idx:$dir:$maxTrainRows",
       Tables.parallelized(Tables.embeddings(s, dir))
@@ -607,29 +607,9 @@ object Similarity {
   // artifacts stand in for the bucketed index tables a 100 TB
   // deployment keeps on storage.
   // -----------------------------------------------------------------
-  private val centroidCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]]
-
-  /** Driver-side float-matrix artifacts (centroids, seed residuals),
-    * built once per (session, key) — |Cells|-bounded rows across the
-    * driver (PQ-seeds precedent). */
-  private def cachedMatrix(s: SparkSession, key: String)(
-      build: => Array[Array[Float]]): Array[Array[Float]] = {
-    val perSession = centroidCache.synchronized {
-      var m = centroidCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]
-        centroidCache.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(key, _ => build)
-  }
-
   /** Day-1 centroids for `dir`, trained once per (session, dir). */
   private def cachedDay1Centroids(s: SparkSession, dir: String): Array[Array[Float]] =
-    cachedMatrix(s, s"day1|$dir")(
+    SessionCache.value(s, s"sim:ivf:cent:day1:$dir")(
       trainCentroids(Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 0)))
 
   private def indexMaintain(s: SparkSession, dir: String): DataFrame = {
@@ -1108,7 +1088,7 @@ object Similarity {
   // |probed-cell candidates| only.
   // -----------------------------------------------------------------
   private def ivfPqCentroids(s: SparkSession, dir: String): Array[Array[Float]] =
-    cachedMatrix(s, s"ivfpq|cent|$dir")(
+    SessionCache.value(s, s"sim:ivfpq:cent:$dir")(
       trainCentroids(Tables.embeddings(s, dir)))
 
   private def centMatCol(centroids: Array[Array[Float]]): Column =
@@ -1134,7 +1114,7 @@ object Similarity {
   private def ivfPqSeeds(
       s: SparkSession, dir: String,
       centroids: Array[Array[Float]]): Array[Array[Float]] =
-    cachedMatrix(s, s"ivfpq|seeds|$dir") {
+    SessionCache.value(s, s"sim:ivfpq:seeds:$dir") {
       // codebooks train on the bounded sample (identity at test SFs;
       // ≤2^16 rows at any scale — the same contract as the coarse
       // quantizer's trainCentroids): Lloyd cost stays

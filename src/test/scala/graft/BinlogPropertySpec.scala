@@ -14,7 +14,7 @@ import graft.sources.binlog.{BinlogGen, BinlogParser}
   * fixtures in BinlogSpec pin known bytes; this suite walks the value
   * space.
   */
-class BinlogPropertySpec extends AnyFunSuite {
+class BinlogPropertySpec extends AnyFunSuite with SharedSpark {
 
   // ---- wire encoders (test-side, independent of the parser) -------
 
@@ -90,7 +90,7 @@ class BinlogPropertySpec extends AnyFunSuite {
     // packed-BCD decode; walk the (precision, scale, unscaled) space
     // including negatives, -0.xx magnitudes, zero, and scale 0
     import org.scalacheck.{Gen, Prop}
-    val dir = java.nio.file.Files.createTempDirectory("binlogdecprop").toString
+    val dir = tempDir("binlogdecprop").toString
     var fileNo = 0
     val gen = for {
       intg <- Gen.choose(0, 9)
@@ -216,7 +216,7 @@ class BinlogPropertySpec extends AnyFunSuite {
     } yield (t, dt, ts, bit, js, s1, s2)
 
     var fileNo = 0
-    val dir = java.nio.file.Files.createTempDirectory("graft_prop_")
+    val dir = tempDir("graft_prop_")
     val prop = forAll(Gen.nonEmptyListOf(genRow).map(_.take(5))) { rows =>
       // table: TIME2, DATETIME2, TIMESTAMP2, BIT(n), JSON,
       // VARCHAR(300) [u16 len], VARCHAR(100) [u8 len]

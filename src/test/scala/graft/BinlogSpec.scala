@@ -115,7 +115,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("subscribe.* source options drop foreign tables at the reader, keep control events") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_sub_")
+    val dir = tempDir("binlog_sub_")
     BinlogGen.writeRoutedFile(dir.resolve("mysql-bin.000001").toString,
       Seq(70L -> "t_a", 71L -> "t_b", 72L -> "t_c"),
       firstTxn = 0L, nTxns = 9, rowsPerTxn = 2)
@@ -147,7 +147,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
       .load(s"$dir/*")
       .writeStream.format("memory").queryName(qn)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("binlog_sub_ckpt_").toString)
+        tempDir("binlog_sub_ckpt_").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     val st = spark.table(qn).collect()
@@ -207,7 +207,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("generator round-trip: written binlog parses back exactly") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_gen_")
+    val dir = tempDir("binlog_gen_")
     val f = dir.resolve("mysql-bin.000001").toString
     BinlogGen.writeFile(f, nRows = 1234, rowsPerEvent = 100)
     val events = BinlogParser.parseFile(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
@@ -226,7 +226,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   test("randomized round-trip: 30 seeded shapes parse back exactly") {
     import graft.sources.binlog.BinlogGen
     val rnd = new scala.util.Random(20260812L) // fixed seed: deterministic
-    val dir = java.nio.file.Files.createTempDirectory("binlog_fuzz_")
+    val dir = tempDir("binlog_fuzz_")
     (1 to 30).foreach { i =>
       val nRows = 1 + rnd.nextInt(500)
       val perEvent = 1 + rnd.nextInt(nRows)
@@ -249,7 +249,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("DSv2 reader: early termination (limit) closes the stream cleanly") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_limit_")
+    val dir = tempDir("binlog_limit_")
     BinlogGen.writeFile(dir.resolve("mysql-bin.000001").toString, 5000, 50)
     // limit(1) stops the scan long before the file is exhausted —
     // the streaming reader must hand resource cleanup to close()
@@ -264,7 +264,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("parseStream: chunk-starved stream decodes identically to parseFile") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_stream_")
+    val dir = tempDir("binlog_stream_")
     val f = dir.resolve("mysql-bin.000001").toString
     BinlogGen.writeFile(f, 200, rowsPerEvent = 7)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
@@ -324,7 +324,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     assert(BinlogParser.parseStream(stream(900L << 20, 2 << 20)).toSeq.isEmpty)
     // an intact event BEFORE the hostile header still parses
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_hostile_")
+    val dir = tempDir("binlog_hostile_")
     val f = dir.resolve("mysql-bin.000001").toString
     BinlogGen.writeFile(f, 3, rowsPerEvent = 1)
     val good = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
@@ -336,7 +336,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("typed round-trip: BIT/ENUM/SET/DATE decode without misalignment") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_typed_")
+    val dir = tempDir("binlog_typed_")
     val f = dir.resolve("mysql-bin.000001").toString
     BinlogGen.writeTypedFile(f, n = 300)
     val events = BinlogParser.parseFile(
@@ -355,7 +355,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("temporal2 fractions, JSON/GEOMETRY payloads, legacy temporals decode exactly") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_temporal_")
+    val dir = tempDir("binlog_temporal_")
     val f = dir.resolve("mysql-bin.000001").toString
     BinlogGen.writeTemporalFile(f, n = 5)
     val events = BinlogParser.parseFile(
@@ -387,7 +387,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("user_var round-trip: string/int/real/null values decode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_uservar_")
+    val dir = tempDir("graft_uservar_")
     val path = s"$dir/mysql-bin.000001"
     graft.sources.binlog.BinlogGen.writeUserVarFile(path, Seq(
       "greeting" -> Some("hello world"),
@@ -401,7 +401,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("latin1 charset metadata: non-ASCII bytes round-trip, v1 events named") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_latin1_")
+    val dir = tempDir("graft_latin1_")
     val path = s"$dir/mysql-bin.000001"
     // café/München carry latin1 bytes (0xE9, 0xFC) that are NOT valid
     // UTF-8 sequences — a UTF-8-assuming decoder garbles them
@@ -469,7 +469,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("json columns decode JSONB payloads to queryable JSON text") {
     import scala.collection.immutable.ListMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonb_")
+    val dir = tempDir("graft_jsonb_")
     val path = s"$dir/mysql-bin.000001"
     graft.sources.binlog.BinlogGen.writeJsonFile(path, Seq(
       ListMap("id" -> 7, "name" -> "café", "tags" -> Seq("a", "b"),
@@ -501,7 +501,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("v1 rows events decode row images byte-identically to v2") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_v1rows_")
+    val dir = tempDir("graft_v1rows_")
     graft.sources.binlog.BinlogGen.writeV1File(s"$dir/v1-bin.000001", 25)
     graft.sources.binlog.BinlogGen.writeV2TwinFile(s"$dir/v2-bin.000001", 25)
     def rowsOf(p: String) = BinlogParser.parseFile(
@@ -525,7 +525,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("gbk + utf16 charset metadata: CJK and fixed-width columns round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cjk_")
+    val dir = tempDir("graft_cjk_")
     val path = s"$dir/mysql-bin.000001"
     // GBK bytes for 数据库 (0xCA/0xFD/0xBE/0xDD/0xBF/0xE2) are not
     // valid UTF-8; UTF-16BE has NUL high bytes that a UTF-8 decode
@@ -568,7 +568,6 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("end-to-end CDC: binlog fixtures → changelog → sink snapshot") {
-    import java.nio.file.Files
     // 32_delete fixture: INSERT (1,'abcde') then DELETE where 1=1 —
     // the materialized snapshot for that table must be EMPTY.
     val delEvents = BinlogSource.events(spark, s"$fixtures/32_delete_rows_v2/*")
@@ -577,7 +576,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
         get_json_object(coalesce(col("after"), col("before")), "$.col_0").as("key"),
         col("log_pos").as("offset"),
         get_json_object(coalesce(col("after"), col("before")), "$.col_1").as("title"))
-    val delDir = Files.createTempDirectory("binlog_e2e_del_").toString
+    val delDir = tempDir("binlog_e2e_del_").toString
     graft.cdc.CdcSink.writeSnapshot(delEvents, delDir)
     assert(graft.cdc.CdcSink.read(spark, delDir).count() == 0,
       "deleted row survived the snapshot")
@@ -589,7 +588,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
         get_json_object(col("after"), "$.col_0").as("key"),
         col("log_pos").as("offset"),
         get_json_object(col("after"), "$.col_1").as("title"))
-    val insDir = Files.createTempDirectory("binlog_e2e_ins_").toString
+    val insDir = tempDir("binlog_e2e_ins_").toString
     graft.cdc.CdcSink.writeSnapshot(insEvents, insDir)
     val rows = graft.cdc.CdcSink.read(spark, insDir).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[String]("title")).toMap
@@ -598,7 +597,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming: readStream.format(\"binlog\") tails rotated files") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("binlog_stream_")
+    val dir = tempDir("binlog_stream_")
     Files.copy(Paths.get(s"$fixtures/30_write_rows_v2/mysql-bin.000002"),
       dir.resolve("mysql-bin.000001"), StandardCopyOption.REPLACE_EXISTING)
 
@@ -606,7 +605,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     val q = spark.readStream.format("binlog").load(dir.toString)
       .writeStream.format("memory").queryName(qn)
       .option("checkpointLocation",
-        Files.createTempDirectory("binlog_ckpt_").toString)
+        tempDir("binlog_ckpt_").toString)
       .start()
     q.processAllAvailable()
     val n1 = spark.table(qn).count()
@@ -665,7 +664,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     val q = spark.readStream.format("binlog").load(s"$fixtures/*/*")
       .writeStream.format("memory").queryName(qn)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("binlog_hash_ckpt_").toString)
+        tempDir("binlog_hash_ckpt_").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     assert(contentHash(spark.table(qn)) ==
@@ -722,7 +721,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
       Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
         .map(p => root.relativize(p).toString -> Files.readAllBytes(p)).toMap
     val committed = tree(Paths.get(fixtures))
-    val dir = Files.createTempDirectory("binlog_ref_")
+    val dir = tempDir("binlog_ref_")
     graft.sources.binlog.BinlogGen.writeReferenceFixtures(dir.toString)
     val written = tree(dir)
     assert(written.keySet == committed.keySet)
@@ -750,8 +749,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("a missing binlog path is an error; an existing empty directory reads empty") {
-    import java.nio.file.Files
-    val missing = Files.createTempDirectory("binlog_missing_").resolve("absent").toString
+    val missing = tempDir("binlog_missing_").resolve("absent").toString
     def namesPath(e: Throwable): Boolean =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains(missing)))
@@ -764,13 +762,13 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     def stream(path: String) = spark.readStream.format("binlog").load(path)
       .writeStream.format("memory").queryName(s"binlog_missing_${System.nanoTime()}")
       .option("checkpointLocation",
-        Files.createTempDirectory("binlog_missing_ckpt_").toString)
+        tempDir("binlog_missing_ckpt_").toString)
       .start()
     val q = stream(missing)
     val e = intercept[Exception] { try q.processAllAvailable() finally q.stop() }
     assert(namesPath(e), e.toString)
     // an existing empty directory lists as empty, batch and stream
-    val empty = Files.createTempDirectory("binlog_empty_").toString
+    val empty = tempDir("binlog_empty_").toString
     assert(BinlogSource.events(spark, empty).count() == 0)
     val tail = stream(empty)
     try tail.processAllAvailable() finally tail.stop()
@@ -787,7 +785,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     val explicit = spark.read.format("binlog").load(files: _*)
     assert(contentHash(glob) == contentHash(explicit))
     // index, scripts and markers beside the binlogs are never read
-    val dir = Files.createTempDirectory("binlog_names_")
+    val dir = tempDir("binlog_names_")
     Seq("mysql-bin.index", "sql.sql", "_COMPLETE").foreach(n => Files.writeString(dir.resolve(n), "x"))
     assert(BinlogSource.events(spark, dir.toString).count() == 0)
     val garbage = dir.resolve("mysql-bin.000009")
@@ -807,11 +805,16 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
     }
     val a = gen("aaaa")
     assert(gen("aaaa") == a && writes == 1, "the same digest reuses the directory")
+    Thread.sleep(50) // "newest" is by modification time: keep the generations apart
     val b = gen("bbbb")
     assert(b != a && writes == 2, "a new digest writes a new directory")
     assert(Files.readString(java.nio.file.Paths.get(b, "mysql-bin.000001")) == "bbbb")
+    Thread.sleep(50)
+    val c = gen("cccc")
+    assert(!Files.exists(java.nio.file.Paths.get(a)), "a third digest prunes the first")
+    assert(Files.exists(java.nio.file.Paths.get(b)), "the newest other digest stays")
     assert(graft.operators.Cdc.generatorDigest.matches("[0-9a-f]{12}"))
-    Seq(a, b).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    Seq(b, c).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("DSv2: spark.read.format(\"binlog\") over the fixture directory") {
@@ -858,7 +861,7 @@ class BinlogSpec extends AnyFunSuite with SharedSpark {
 
   test("control events decode typed: STOP, IGNORABLE, INCIDENT number+message, HEARTBEAT ident") {
     import graft.sources.binlog.BinlogGen
-    val dir = java.nio.file.Files.createTempDirectory("binlog_ctrl_").toString
+    val dir = tempDir("binlog_ctrl_").toString
     BinlogGen.writeControlFile(s"$dir/mysql-bin.000001", nRows = 5)
     val ev = BinlogSource.events(spark, dir).collect()
     // mirrors rust-cdc src/mysql/event/mod.rs:287,301-338: 0x03 STOP,

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,7 +28,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
       .withColumn("source_file", lit("bin.1"))
 
   test("manifest entries carry per-file key min/max on unpartitioned writes") {
-    val dir = Files.createTempDirectory("graft_prune_stats_").toString
+    val dir = tempDir("graft_prune_stats_").toString
     CdcSink.writeSnapshot(
       strLog(("a", "c", 1, 1.0), ("m", "c", 2, 2.0), ("z", "c", 3, 3.0)), dir)
     val m = TxnLog.current(fs, dir).get
@@ -60,14 +59,14 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
         assert(e.rows.contains(r.getLong(2)), s"${e.path}: rows ${e.rows}")
       }
     }
-    val dirS = Files.createTempDirectory("graft_footer_s_").toString
+    val dirS = tempDir("graft_footer_s_").toString
     CdcSink.writeSnapshot(spark.range(0, 5000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
       lit("bin.1").as("source_file")), dirS)
     CdcSink.compact(spark, dirS, None, targetRecordsPerFile = 1000L)
     check(dirS)
-    val dirI = Files.createTempDirectory("graft_footer_i_").toString
+    val dirI = tempDir("graft_footer_i_").toString
     CdcSink.writeSnapshot(spark.range(0, 5000).select(
       (col("id") * 7 % 5000).cast("int").as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -76,7 +75,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     check(dirI)
     // double keys take the SCAN path (footer decode gap) — stats must
     // still appear and match
-    val dirD = Files.createTempDirectory("graft_footer_d_").toString
+    val dirD = tempDir("graft_footer_d_").toString
     CdcSink.writeSnapshot(spark.range(0, 2000).select(
       (col("id").cast("double") / 8).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -85,7 +84,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("localized delivery rewrites only intersecting files after range compaction") {
-    val dir = Files.createTempDirectory("graft_prune_merge_").toString
+    val dir = tempDir("graft_prune_merge_").toString
     // 10k keys k00000..k09999; compact at 1000/file → ~10 key-disjoint files
     val base = spark.range(0, 10000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
@@ -122,7 +121,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("deletes prune the same way and drop the key") {
-    val dir = Files.createTempDirectory("graft_prune_del_").toString
+    val dir = tempDir("graft_prune_del_").toString
     val base = spark.range(0, 3000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -141,7 +140,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("numeric keys compare typed, not as strings (9 vs 10 trap)") {
-    val dir = Files.createTempDirectory("graft_prune_num_").toString
+    val dir = tempDir("graft_prune_num_").toString
     // int keys 0..2999 → 3 range files [0,999][1000,1999][2000,2999].
     // Key 9's file has min="0", max="999": a STRING compare says
     // "9" > "999" is false... but "9" > "10" would wrongly place 9
@@ -179,7 +178,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("append-pattern merges: increments inherit a commit range and stop being rewritten") {
-    val dir = Files.createTempDirectory("graft_prune_append_").toString
+    val dir = tempDir("graft_prune_append_").toString
     CdcSink.writeSnapshot(
       strLog(("a1", "c", 1, 1.0), ("a2", "c", 2, 2.0)), dir)
     val m0 = TxnLog.current(fs, dir).get
@@ -214,7 +213,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     // double keys have no exact footer decoding: the increment takes
     // the commit-level range (batch bounds ∪ touched ranges) and its
     // row count from the footer, and no stats scan job runs
-    val dir = Files.createTempDirectory("graft_prune_dbl_").toString
+    val dir = tempDir("graft_prune_dbl_").toString
     CdcSink.writeSnapshot(spark.range(0, 100).select(
       (col("id").cast("double") / 8).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -232,7 +231,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("null batch keys degrade to a full (never wrong) merge") {
-    val dir = Files.createTempDirectory("graft_prune_null_").toString
+    val dir = tempDir("graft_prune_null_").toString
     CdcSink.writeSnapshot(
       strLog(("a", "c", 1, 1.0), ("b", "c", 2, 2.0)), dir)
     val batch = Seq((Option.empty[String], "c", 3L, 3.0), (Some("a"), "u", 4L, 10.0))
@@ -246,7 +245,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("partitioned tables prune at two levels: partition value, then file range") {
-    val dir = Files.createTempDirectory("graft_prune_part_").toString
+    val dir = tempDir("graft_prune_part_").toString
     // two partitions × 4000 DISTINCT keys (per-partition prefix — the
     // sink's LWW folds per key, so shared keys would supersede each
     // other); compact at 1000/file → ~4 range files per value
@@ -297,8 +296,8 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     // after every commit (legacy full-rewrite path) — must read back
     // identically after every single merge
     val rnd = new scala.util.Random(20260815L)
-    val prunedDir = Files.createTempDirectory("graft_prune_eqA_").toString
-    val legacyDir = Files.createTempDirectory("graft_prune_eqB_").toString
+    val prunedDir = tempDir("graft_prune_eqA_").toString
+    val legacyDir = tempDir("graft_prune_eqB_").toString
     def stripStats(dir: String): Unit = {
       val m = TxnLog.current(fs, dir).get
       TxnLog.commit(fs, dir, m.version + 1, m.schema,
@@ -363,9 +362,9 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
       // late update for one key: snapshot semantics (latest offset
       // wins) must apply before clustering
       .unionAll(strLog(("k00042", "u", 99999L, -42.0)))
-    val dirC = Files.createTempDirectory("graft_snapclust_").toString
+    val dirC = tempDir("graft_snapclust_").toString
     CdcSink.writeSnapshotClustered(log, dirC, targetRecordsPerFile = 1000L)
-    val dirP = Files.createTempDirectory("graft_snapplain_").toString
+    val dirP = tempDir("graft_snapplain_").toString
     CdcSink.writeSnapshot(log, dirP)
     CdcSink.compact(spark, dirP, None, targetRecordsPerFile = 1000L)
     def rows(d: String) = CdcSink.read(spark, d)
@@ -389,7 +388,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("readRange opens only intersecting files and is exact regardless") {
-    val dir = Files.createTempDirectory("graft_prune_read_").toString
+    val dir = tempDir("graft_prune_read_").toString
     val base = spark.range(0, 5000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -412,7 +411,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     assert(scanned <= expected,
       s"read $scanned files, stats said $expected intersect")
     // int keys: typed bounds (string compare would misplace "9")
-    val dirI = Files.createTempDirectory("graft_prune_readi_").toString
+    val dirI = tempDir("graft_prune_readi_").toString
     CdcSink.writeSnapshot(spark.range(0, 3000).select(
       col("id").cast("int").as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -433,7 +432,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     // bootstrap → compact → localized merge cycle under the DST zone
     // and checks both the prune (files carried forward) and the fold.
     withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
-      val dir = Files.createTempDirectory("graft_prune_ts_").toString
+      val dir = tempDir("graft_prune_ts_").toString
       // 6000 keys at 1-minute spacing straddling 2026-11-01 08:30 UTC
       // (the PDT→PST transition minute)
       val t0 = 1793521800000000L - 3000L * 60000000L
@@ -476,7 +475,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("readRange composes with AS-OF: pre-merge window, throw contract, empty version") {
-    val dir = Files.createTempDirectory("graft_prune_asof_").toString
+    val dir = tempDir("graft_prune_asof_").toString
     val base = spark.range(0, 3000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -526,7 +525,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
     // shape) are made on purpose: each merge's new files are
     // republished without stats, and mid-stream half of all entries.
     val rnd = new scala.util.Random(20260815L)
-    val dir = Files.createTempDirectory("graft_prune_rreq_").toString
+    val dir = tempDir("graft_prune_rreq_").toString
     val boot = spark.range(0, 4000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -599,7 +598,7 @@ class CdcPruneSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("stats-less (legacy) manifests fall back to a full merge") {
-    val dir = Files.createTempDirectory("graft_prune_legacy_").toString
+    val dir = tempDir("graft_prune_legacy_").toString
     CdcSink.writeSnapshot(
       strLog(("a", "c", 1, 1.0), ("b", "c", 2, 2.0)), dir)
     // republish the manifest with stats stripped — the pre-stats format

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   private def table(dir: String): DataFrame = CdcSink.read(spark, dir)
 
   test("writeSnapshotPreClustered trusts the caller's layout: key-disjoint files with stats, zero extra exchange") {
-    val dir = Files.createTempDirectory("graft_sink_pre_").toString
+    val dir = tempDir("graft_sink_pre_").toString
     // contiguous-range partitions with long keys ascending within and
     // disjoint across — the loader-controlled bulk-import contract
     val snap = spark.range(0, 4000, 1, 4).toDF("key")
@@ -53,7 +52,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("writeSnapshot + merge: upsert, delete, idempotent re-merge") {
-    val dir = Files.createTempDirectory("graft_sink_").toString
+    val dir = tempDir("graft_sink_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, partitionCol = Some("part"))
@@ -77,7 +76,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("merge only rewrites touched partitions") {
-    val dir = Files.createTempDirectory("graft_sink_prune_").toString
+    val dir = tempDir("graft_sink_prune_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, partitionCol = Some("part"))
@@ -96,7 +95,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("merge handles null and escape-needing partition values") {
-    val dir = Files.createTempDirectory("graft_sink_nullpart_").toString
+    val dir = tempDir("graft_sink_nullpart_").toString
     val withNull = Seq(("a", "c", 1L, null.asInstanceOf[String], 1.0),
       ("b", "c", 2L, "p 2", 2.0)) // space needs Hive path escaping
       .toDF("key", "op", "offset", "part", "value")
@@ -118,7 +117,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("commit offsets from different sources merge, not overwrite") {
-    val dir = Files.createTempDirectory("graft_sink_multisrc_").toString
+    val dir = tempDir("graft_sink_multisrc_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 100, "p1", 1.0)), dir, None)
     val fromOtherSource = Seq(("z", "c", 7L, "p1", 9.9))
       .toDF("key", "op", "offset", "part", "value")
@@ -133,7 +132,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
     // (batchMeta); this pins the per-source rows (offsets per source
     // from a single batch) and the null-key degrade path (everything
     // touched, commit range still folds non-null batch ∪ file ranges)
-    val dir = Files.createTempDirectory("graft_sink_meta_").toString
+    val dir = tempDir("graft_sink_meta_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p1", 2.0)), dir, None)
     val batch = Seq(
@@ -157,7 +156,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("dead letter queue captures and removes bad records") {
-    val dir = Files.createTempDirectory("graft_sink_dlq_").toString
+    val dir = tempDir("graft_sink_dlq_").resolve("table").toString
     val batch = changelog(("a", "c", 1, "p1", 1.0), ("bad", "c", 2, "p1", -1.0))
     val clean = CdcSink.deadLetter(batch, dir, isBad = col("value") < 0)
     assert(clean.count() == 1)
@@ -166,7 +165,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("DLQ survives merges and compaction (sibling dir)") {
-    val dir = Files.createTempDirectory("graft_sink_dlqsafe_").toString
+    val dir = tempDir("graft_sink_dlqsafe_").resolve("table").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, None)
     CdcSink.deadLetter(changelog(("bad", "c", 2, "p1", -1.0)), dir, col("value") < 0)
       .count() // materialize the DLQ write
@@ -179,7 +178,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("partitioned merge keeps evolved columns on later merges") {
-    val dir = Files.createTempDirectory("graft_sink_pevolve_").toString
+    val dir = tempDir("graft_sink_pevolve_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, Some("part"))
@@ -197,7 +196,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("streaming ingest lands on the batch snapshot") {
-    val dir = Files.createTempDirectory("graft_ingest_").toString
+    val dir = tempDir("graft_ingest_").toString
     graft.cdc.CdcStream.ingestInto(spark, "/root/testdata/sf0.001", dir,
       queryName = s"ingest_${System.nanoTime()}")
     val viaStream = table(dir)
@@ -212,7 +211,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("merge evolves schema when the changelog gains a column") {
-    val dir = Files.createTempDirectory("graft_sink_evolve_").toString
+    val dir = tempDir("graft_sink_evolve_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, None)
     // DDL added a column upstream: new batch carries `extra`
     val evolved = changelog(("b", "c", 2, "p1", 2.0))
@@ -226,7 +225,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("every 10th merge compacts to one live file and vacuums") {
-    val dir = Files.createTempDirectory("graft_sink_compact_").toString
+    val dir = tempDir("graft_sink_compact_").toString
     CdcSink.writeSnapshot(changelog(("k0", "c", 0, "p1", 0.0)), dir, None)
     (1 to CdcSink.CompactEvery).foreach { i =>
       CdcSink.merge(spark, changelog((s"k$i", "c", i.toLong, "p1", i.toDouble)), dir, None)
@@ -246,7 +245,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("compaction sub-splits a skew-hot partition into size-bounded files") {
-    val dir = Files.createTempDirectory("graft_sink_skew_").toString
+    val dir = tempDir("graft_sink_skew_").toString
     // hot partition p1: 10,000 rows; cold p2: 10 rows — the shape
     // that used to serialize p1 into ONE write task and one file
     def rows(n: Long, part: String, pfx: String, off: Long): DataFrame =
@@ -292,7 +291,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   test("compaction sub-splits tables carrying map columns (unhashable salt)") {
     // Spark's hash() rejects MapType — the sub-split salt must route
     // around map columns instead of failing the whole compaction
-    val dir = Files.createTempDirectory("graft_sink_map_").toString
+    val dir = tempDir("graft_sink_map_").toString
     val rows = spark.range(0, 3000).select(
       concat(lit("k"), col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), lit("p1").as("part"),
@@ -307,7 +306,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("crash between data write and manifest publish loses nothing") {
-    val dir = Files.createTempDirectory("graft_sink_crash_").toString
+    val dir = tempDir("graft_sink_crash_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, Some("part"))
@@ -368,7 +367,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
       val q = Listeners.foreachEvent[Long](stream, _ => counter.add(1))
         .queryName(qn)
         .option("checkpointLocation",
-          Files.createTempDirectory("listener_ckpt_").toString)
+          tempDir("listener_ckpt_").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -386,7 +385,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
 
   /** 3,000 string keys compacted into key-disjoint files of at most 500 rows. */
   private def compactedTable(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix).toString
+    val dir = tempDir(prefix).toString
     CdcSink.writeSnapshot(spark.range(0, 3000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), lit("p1").as("part"), col("id").cast("double").as("value"),
@@ -442,7 +441,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("unpartitioned merge works end-to-end") {
-    val dir = Files.createTempDirectory("graft_sink_flat_").toString
+    val dir = tempDir("graft_sink_flat_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, None)
     CdcSink.merge(spark, changelog(("a", "d", 2, "p1", 0.0), ("z", "c", 3, "p1", 7.0)), dir, None)
     val keys = table(dir).select("key").collect().map(_.getString(0)).toSet
@@ -450,7 +449,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("mergeWithDdl: interleaved DDL applies in offset order around data") {
-    val root = Files.createTempDirectory("graft_sink_ddlmix_").toString
+    val root = tempDir("graft_sink_ddlmix_").toString
     val dir = s"$root/t1"
     // offsets: insert a@1, b@2 | TRUNCATE@3 | insert z@4 | RENAME TO t9@5
     val batch = Seq(
@@ -471,7 +470,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
 
   test("schema evolution end-to-end: DDL stream drives the snapshot table") {
     import graft.cdc.Ddl
-    val root = Files.createTempDirectory("graft_sink_ddl_").toString
+    val root = tempDir("graft_sink_ddl_").toString
     val dir = s"$root/t1"
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)), dir, None)
 
@@ -526,7 +525,7 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("time travel: readVersion pins historical table states") {
-    val dir = Files.createTempDirectory("graft_tt_").toString
+    val dir = tempDir("graft_tt_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)), dir, None)
     CdcSink.merge(spark,

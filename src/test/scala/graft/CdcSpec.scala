@@ -146,7 +146,7 @@ class CdcSpec extends AnyFunSuite with SharedSpark {
     val qn = s"ttl_evict_${System.nanoTime()}"
     val q = upserts.writeStream.outputMode("update").format("memory").queryName(qn)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ttl_ckpt_").toString)
+        tempDir("ttl_ckpt_").toString)
       .start()
 
     // batch 1: a live row and a delete tombstone — both land in state
@@ -211,7 +211,7 @@ class CdcSpec extends AnyFunSuite with SharedSpark {
     // when cdc_stream_dedup "ran" in 0.15s. eventsStream must
     // dispatch on the actual layout and read the same rows either way.
     import org.apache.spark.sql.functions._
-    val dirLayout = java.nio.file.Files.createTempDirectory("graft_layout_").toString
+    val dirLayout = tempDir("graft_layout_").toString
     spark.read.parquet(s"$sf/events.parquet")
       .repartition(3).write.parquet(s"$dirLayout/events.parquet")
     val flat = CdcStream.streamingDedup(spark, sf, s"lay_flat_${System.nanoTime()}")
@@ -243,7 +243,7 @@ class CdcSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("not-yet-existing events.parquet starts an empty stream, not an error") {
-    val emptyDir = java.nio.file.Files.createTempDirectory("graft_empty_").toString
+    val emptyDir = tempDir("graft_empty_").toString
     val out = CdcStream.streamingDedup(spark, emptyDir, s"empty_${System.nanoTime()}")
     assert(out.count() == 0)
   }
@@ -252,7 +252,7 @@ class CdcSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions._
     // clicks only: the interval join can never match, the parquet sink
     // commits zero data files, and the read must not throw
-    val dir = java.nio.file.Files.createTempDirectory("graft_clicks_").toString
+    val dir = tempDir("graft_clicks_").toString
     spark.read.parquet(s"$sf/events.parquet")
       .filter(col("event_type") === "click")
       .write.parquet(s"$dir/events.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcSink, KafkaIngest}
@@ -28,7 +27,7 @@ class KafkaIngestSpec extends AnyFunSuite with SharedSpark {
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   test("batch ingest: per-partition offsets commit monotonically") {
-    val dir = Files.createTempDirectory("kafka_batch_").toString
+    val dir = tempDir("kafka_batch_").toString
     val d1 = Seq(
       KRec("t", 0, 0, "a", "c", "signup", 1.0),
       KRec("t", 0, 1, "a", "u", "click", 2.0),
@@ -54,8 +53,8 @@ class KafkaIngestSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("streaming ingest resumes across restart without re-applying") {
-    val dir = Files.createTempDirectory("kafka_stream_").toString
-    val ckpt = Files.createTempDirectory("kafka_ckpt_").toString
+    val dir = tempDir("kafka_stream_").toString
+    val ckpt = tempDir("kafka_ckpt_").toString
 
     val in1 = MemoryStream[KRec]
     val q1 = KafkaIngest.ingestStream(in1.toDF, dir, s"kingest_${System.nanoTime()}")
@@ -78,7 +77,7 @@ class KafkaIngestSpec extends AnyFunSuite with SharedSpark {
     // replay
     val in2 = MemoryStream[KRec]
     val q2 = KafkaIngest.ingestStream(in2.toDF, dir, s"kingest_${System.nanoTime()}")
-      .option("checkpointLocation", Files.createTempDirectory("kafka_ckpt2_").toString)
+      .option("checkpointLocation", tempDir("kafka_ckpt2_").toString)
       .start()
     in2.addData(
       KRec("t", 0, 0, "a", "c", "signup", 1.0),

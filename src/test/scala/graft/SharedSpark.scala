@@ -7,7 +7,8 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   * forked JVM, so a conf one suite leaves set is what every later
   * suite runs with. A spec scopes a conf with [[withConf]]; a suite
   * that leaves the shared conf changed fails in its own report (its
-  * `afterAll` names each changed key, then restores it).
+  * `afterAll` names each changed key, then restores it). A spec's
+  * scratch dirs come from [[tempDir]], and `afterAll` deletes them.
   */
 trait SharedSpark extends BeforeAndAfterAll { this: Suite =>
 
@@ -21,6 +22,15 @@ trait SharedSpark extends BeforeAndAfterAll { this: Suite =>
     try body finally confs.foreach { case (k, _) => reset(k, before.get(k)) }
   }
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh dir under the temp dir, deleted in `afterAll`. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
   private def reset(key: String, value: Option[String]): Unit = value match {
     case Some(v) => spark.conf.set(key, v)
     case None => spark.conf.unset(key)
@@ -29,6 +39,7 @@ trait SharedSpark extends BeforeAndAfterAll { this: Suite =>
   override protected def afterAll(): Unit =
     try super.afterAll()
     finally {
+      tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
       val initial = SharedSpark.initialConf
       val now = spark.conf.getAll
       val changed = (now.keySet ++ initial.keySet).filter(k => now.get(k) != initial.get(k))

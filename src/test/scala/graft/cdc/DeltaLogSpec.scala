@@ -1,7 +1,6 @@
 package graft.cdc
 
 import graft.SharedSpark
-import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -119,7 +118,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   // ------------------------------------------------------------------
 
   test("version 0 carries protocol(1,2) + metaData with the table schema") {
-    val dir = Files.createTempDirectory("graft_delta_").toString
+    val dir = tempDir("graft_delta_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, Some("part"))
     implicit val fmt: Formats = DefaultFormats
     val v0 = readJsonActions(new Path(dir, f"_delta_log/${0L}%020d.json"))
@@ -138,7 +137,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("action replay reconstructs every graft version, incl. removes + evolution") {
-    val dir = Files.createTempDirectory("graft_delta_").toString
+    val dir = tempDir("graft_delta_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, Some("part"))
@@ -177,7 +176,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("checkpoint at the 10-commit cadence + _last_checkpoint discovery") {
-    val dir = Files.createTempDirectory("graft_delta_").toString
+    val dir = tempDir("graft_delta_").toString
     CdcSink.writeSnapshot(changelog(("k0", "c", 1, "p1", 0.0)), dir, Some("part"))
     (1 to 11).foreach { i =>
       CdcSink.merge(spark,
@@ -222,7 +221,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     // graft reader must union ALL parts (protocol/metaData/adds can
     // land in different parts) and must treat a missing part as a
     // stale hint (degrade to JSON replay), never serve partial state.
-    val dir = Files.createTempDirectory("graft_delta_mp_").toString
+    val dir = tempDir("graft_delta_mp_").toString
     CdcSink.writeSnapshot(changelog(("k0", "c", 1, "p1", 0.0)), dir, Some("part"))
     (1 to 11).foreach { i =>
       CdcSink.merge(spark,
@@ -279,7 +278,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("DeltaLog.read/readVersion (library reader) agree with TxnLog and the replay") {
-    val dir = Files.createTempDirectory("graft_delta_").toString
+    val dir = tempDir("graft_delta_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)),
       dir, Some("part"))
@@ -304,7 +303,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     // physically hold only (key, value); the partition column p lives
     // in partitionColumns + each add's partitionValues (incl. a JSON
     // null for the null-partition file).
-    val dir = Files.createTempDirectory("foreign_delta_").toString
+    val dir = tempDir("foreign_delta_").toString
     def writeFile(name: String, rows: Seq[(String, Double)]): Unit =
       rows.toDF("key", "value").coalesce(1).write.parquet(s"$dir/.stage_$name")
     def promote(name: String): Unit = {
@@ -356,7 +355,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     assert(DeltaLog.encodePath("p=a b/f.parquet") == "p=a%20b/f.parquet")
     assert(DeltaLog.decodePath("p=a%20b/f.parquet") == "p=a b/f.parquet")
     assert(DeltaLog.decodePath("part-0001.parquet") == "part-0001.parquet")
-    val dir = Files.createTempDirectory("foreign_delta_enc_").toString
+    val dir = tempDir("foreign_delta_enc_").toString
     def writeFile(rel: String, rows: Seq[(String, Double)]): Unit = {
       val stage = s"$dir/.stage"
       rows.toDF("key", "value").coalesce(1).write.mode("overwrite").parquet(stage)
@@ -420,7 +419,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     // Path(parent, child), which re-parses 'a' as a scheme —
     // HADOOP-14829 — so the misclassified-as-absolute bug could never
     // even reach the filesystem error before this fix.)
-    val dir = Files.createTempDirectory("foreign_delta_colon_").toString
+    val dir = tempDir("foreign_delta_colon_").toString
     val schemaJson = StructType.fromDDL("key string, value double").json
       .replace("\"", "\\\"")
     val log = new Path(dir, "_delta_log")
@@ -443,7 +442,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     // checkpoint starts AFTER it and never sees that add — reading
     // correct rows proves the checkpoint branch (incl. its
     // partitionValues decode) was taken, not the JSON replay.
-    val dir = Files.createTempDirectory("foreign_delta_ck_").toString
+    val dir = tempDir("foreign_delta_ck_").toString
     def writeFile(name: String, rows: Seq[(String, Double)]): Unit = {
       rows.toDF("key", "value").coalesce(1).write.parquet(s"$dir/.stage_$name")
       val staged = fs.listStatus(new Path(s"$dir/.stage_$name"))
@@ -512,7 +511,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   test("add actions carry public-format stats (numRecords + key min/max)") {
     implicit val fmt: Formats = DefaultFormats
     // string keys → minValues/maxValues as JSON strings
-    val dir = Files.createTempDirectory("graft_delta_stats_").toString
+    val dir = tempDir("graft_delta_stats_").toString
     CdcSink.writeSnapshot(
       changelog(("a", "c", 1, "p1", 1.0), ("m", "c", 2, "p1", 2.0),
         ("z", "c", 3, "p2", 3.0)), dir)
@@ -533,7 +532,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     assert(mins.min == "a" && maxs.max == "z")
 
     // numeric keys → stats values as JSON numbers, not strings
-    val dirN = Files.createTempDirectory("graft_delta_statsn_").toString
+    val dirN = tempDir("graft_delta_statsn_").toString
     CdcSink.writeSnapshot(
       Seq((7, "c", 1L, 1.0), (1900, "c", 2L, 2.0))
         .toDF("key", "op", "offset", "value")
@@ -555,7 +554,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("vacuum keeps the delta log; current version stays readable through it") {
-    val dir = Files.createTempDirectory("graft_delta_").toString
+    val dir = tempDir("graft_delta_").toString
     CdcSink.writeSnapshot(changelog(("a", "c", 1, "p1", 1.0)), dir, Some("part"))
     CdcSink.merge(spark, changelog(("a", "u", 2, "p1", 5.0)), dir, Some("part"))
     TxnLog.vacuum(fs, dir)

@@ -25,7 +25,7 @@ class MergePathSpec extends AnyFunSuite with SharedSpark {
 
   /** 3,000 string keys in key-disjoint files of at most 500 rows. */
   private def compactedTable(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix).toString
+    val dir = tempDir(prefix).toString
     CdcSink.writeSnapshot(spark.range(0, 3000).select(
       format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
       col("id").as("offset"), col("id").cast("double").as("value"),
@@ -40,7 +40,7 @@ class MergePathSpec extends AnyFunSuite with SharedSpark {
     val local = keys.zipWithIndex
       .map { case (k, i) => (k, "u", 9000L + i, -1.0, "bin.1") }
       .toDF("key", "op", "offset", "value", "source_file")
-    val dir = Files.createTempDirectory("graft_merge_batch_").toString
+    val dir = tempDir("graft_merge_batch_").toString
     local.repartition(4).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     assert(scan.rdd.getNumPartitions == 4)
@@ -93,7 +93,7 @@ class MergePathSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("job counts: a read of 40 log entries runs no job outside a SQL execution") {
-    val dir = Files.createTempDirectory("graft_merge_read40_").toString
+    val dir = tempDir("graft_merge_read40_").toString
     CdcSink.writeSnapshotPreClustered(spark.range(0, 400, 1, 40).select(
       col("id").as("key"), lit("c").as("op"), col("id").as("offset"),
       lit("bin.1").as("source_file")), dir, targetRecordsPerFile = 10L)
@@ -198,7 +198,7 @@ class MergePathSpec extends AnyFunSuite with SharedSpark {
     test(s"the driver path and the rollup path commit the same table and log: ${c.name}") {
       val (boot, merges) = frames(c, 20261019L + ci)
       val partCol = c.part.map(_._1)
-      val base = Files.createTempDirectory("graft_merge_eq_")
+      val base = tempDir("graft_merge_eq_")
       val seedDir = base.resolve("seed").toString
       CdcSink.writeSnapshot(boot, seedDir, partCol)
       CdcSink.compact(spark, seedDir, partCol, targetRecordsPerFile = 12L)

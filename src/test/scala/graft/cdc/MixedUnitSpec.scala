@@ -20,11 +20,11 @@ class MixedUnitSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("a landing dir mixing nanos-as-long and micros parts fails fast at setup") {
-    val root = java.nio.file.Files.createTempDirectory("mixed_unit_").toFile
+    val root = tempDir("mixed_unit_").toFile
     val eventsDir = new java.io.File(root, "events.parquet")
     eventsDir.mkdirs()
     import spark.implicits._
-    val scratch = java.nio.file.Files.createTempDirectory("mixed_scratch_")
+    val scratch = tempDir("mixed_scratch_")
     // micros part: a real annotated TIMESTAMP(MICROS) column (the
     // testdata generator's format — Spark's own default is legacy
     // INT96, which is neither unit)
@@ -46,12 +46,12 @@ class MixedUnitSpec extends AnyFunSuite with SharedSpark {
       Tables0.eventsStreamSchema(spark, root.toString))
     assert(e.getMessage.contains("mixes timestamp units"), e.getMessage)
     // homogeneous dirs still dispatch cleanly
-    val onlyMicros = java.nio.file.Files.createTempDirectory("only_micros_").toFile
+    val onlyMicros = tempDir("only_micros_").toFile
     val omDir = new java.io.File(onlyMicros, "events.parquet"); omDir.mkdirs()
     writeOnePart(new java.io.File(mDir), omDir)
     assert(Tables0.eventsStreamSchema(spark, onlyMicros.toString) ==
       Tables0.eventsSchemaMicros)
-    val onlyNanos = java.nio.file.Files.createTempDirectory("only_nanos_").toFile
+    val onlyNanos = tempDir("only_nanos_").toFile
     val onDir = new java.io.File(onlyNanos, "events.parquet"); onDir.mkdirs()
     writeOnePart(new java.io.File(nDir), onDir)
     assert(Tables0.eventsStreamSchema(spark, onlyNanos.toString) ==
@@ -95,7 +95,7 @@ class MixedUnitSpec extends AnyFunSuite with SharedSpark {
     val flag = "spark.sql.legacy.parquet.nanosAsLong"
     val s = spark.newSession()
     assert(s.conf.get(flag, "false") == "false")
-    val dir = java.nio.file.Files.createTempDirectory("true_nanos_").toFile
+    val dir = tempDir("true_nanos_").toFile
     val base = 1704067200L * 1000000000L // 2024-01-01T00:00:00Z in nanos
     writeTrueNanosEvents(dir, Seq(
       (1L, base + 123456789L, 7L, "signup", 1.5),

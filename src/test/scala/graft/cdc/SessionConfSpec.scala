@@ -19,7 +19,7 @@ class SessionConfSpec extends AnyFunSuite with SharedSpark {
   /** A small events table: µs timestamps spread over a few days, every
     * event type Changelog maps (signup/error/others), 40 users. */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("session_conf_").toString
+    val dir = tempDir("session_conf_").toString
     spark.range(2000).select(
         col("id").as("event_id"),
         expr("cast(timestamp_micros(1704067200000000 + id * 211000000) as timestamp_ntz)")
@@ -50,7 +50,7 @@ class SessionConfSpec extends AnyFunSuite with SharedSpark {
       "windowedAgg" -> (() => CdcStream.windowedAgg(s, dir,
         s"conf_window_${System.nanoTime()}", statePartitions = Some(3)).count()),
       "ingestInto" -> (() => CdcStream.ingestInto(s, dir,
-        java.nio.file.Files.createTempDirectory("conf_ingest_").toString,
+        tempDir("conf_ingest_").toString,
         queryName = s"conf_ingest_${System.nanoTime()}")),
       "Listeners.probe" -> (() => Listeners.probe(s, dir).count()))
     ops.foreach { case (name, op) =>
@@ -60,13 +60,12 @@ class SessionConfSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  /** The numbered partition dirs under the newest checkpoint's
-    * `state/0` for one base query name. */
+  /** The numbered partition dirs under `state/0` of the newest
+    * scratch generation's checkpoint for one base query name. */
   private def statePartitionsOf(base: String): Int = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_ssj/$base")
-    val ckpt = root.listFiles().filter(_.getName.startsWith("ckpt_"))
-      .maxBy(_.lastModified())
-    new java.io.File(ckpt, "state/0").listFiles()
+    val gen = graft.Scratch.root.resolve(base).toFile.listFiles()
+      .filter(_.getName.startsWith("g_")).maxBy(_.lastModified())
+    new java.io.File(gen, "ckpt/state/0").listFiles()
       .count(f => f.isDirectory && f.getName.forall(_.isDigit))
   }
 

@@ -1,7 +1,6 @@
 package graft.cdc
 
 import graft.SharedSpark
-import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.json4s._
@@ -73,7 +72,7 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
     * and after each merge. */
   private lazy val baseline: IndexedSeq[State] = {
     val (boot, batches) = stream(Seed, Merges)
-    val dir = Files.createTempDirectory("graft_log_base_").toString
+    val dir = tempDir("graft_log_base_").toString
     CdcSink.writeSnapshot(frame(boot), dir)
     state(dir) +: batches.map { b => CdcSink.merge(spark, frame(b), dir); state(dir) }.toIndexedSeq
   }
@@ -82,7 +81,7 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
     * resume by re-merging batch k and finish the stream. */
   private def crashRun(at: TxnLog.Crash.Value, k: Int): Unit = {
     val (boot, batches) = stream(Seed, Merges)
-    val dir = Files.createTempDirectory("graft_log_crash_").toString
+    val dir = tempDir("graft_log_crash_").toString
     CdcSink.writeSnapshot(frame(boot), dir)
     batches.zipWithIndex.foreach { case (b, i0) =>
       val i = i0 + 1
@@ -132,7 +131,7 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
 
   test("two writers commit the same version: the second throws and changes nothing") {
     val (boot, _) = stream(Seed, 0)
-    val dir = Files.createTempDirectory("graft_log_race_").toString
+    val dir = tempDir("graft_log_race_").toString
     CdcSink.writeSnapshot(frame(boot), dir)
     val m = TxnLog.current(fs, dir).get
     def write(key: String, value: Double) = TxnLog.writeCommitDir(
@@ -172,7 +171,7 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("compaction fires on every 10th merge, counted in the log; the root holds only the log and commit dirs") {
-    val dir = Files.createTempDirectory("graft_log_cadence_").toString
+    val dir = tempDir("graft_log_cadence_").toString
     def batch(i: Int, n: Int): DataFrame =
       (0 until n).map(j => (s"k${i}_$j", "c", i * 100L + j, j.toDouble, s"p${j % 3}", "bin.1"))
         .toDF("key", "op", "offset", "value", "part", "source_file")
@@ -201,7 +200,7 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("checkpoint and JSON replay resolve the same version, stats and offsets included; no Spark job") {
-    val dir = Files.createTempDirectory("graft_log_ckpt_").toString
+    val dir = tempDir("graft_log_ckpt_").toString
     val (boot, batches) = stream(Seed, 2 * CdcSink.CompactEvery + 3)
     CdcSink.writeSnapshot(frame(boot), dir)
     batches.foreach(b => CdcSink.merge(spark, frame(b), dir))
