@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Snapshot-table sink — the reference's Delta ingest re-expressed
@@ -34,10 +34,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    together, so the committed offsets never run ahead of the data
   *    and a crash loses both or neither. Re-merging a batch is still
   *    a no-op upsert, so recovery is simply re-merging it;
+  *  - file layout follows two rules, chosen by the writer and
+  *    written as given by [[TxnLog.writeCommitDir]]: an increment
+  *    (snapshot write, merge, DDL rewrite) writes one task per
+  *    partition value ([[byValue]]); a full-table write (compaction,
+  *    clustered bootstrap) writes ceil(rows / target) key-range
+  *    clustered tasks per partition value ([[sizedLayout]]), so a
+  *    skew-hot value writes in parallel. No file exceeds
+  *    [[TxnLog.TargetRecordsPerFile]] records;
   *  - every [[CompactEvery]]-th merge (counted in the log's
-  *    commitInfo) compacts accumulated small files into size-targeted
-  *    ones (≤ [[TxnLog.TargetRecordsPerFile]] records; a skew-hot
-  *    partition value sub-splits across parallel tasks) and vacuums
+  *    commitInfo) compacts accumulated small files and vacuums
   *    crashed/superseded commit dirs;
   *  - undecodable records are appended to a dead-letter directory
   *    (`IngestOptions.dlq_table_uri`).
@@ -73,8 +79,8 @@ object CdcSink {
     * on an impossible string→type cast.
     *
     * `asOf` composes the pruned read with time travel: the range is
-    * evaluated against THAT version's files and stats,
-    * with [[TxnLog.readVersion]]'s contract — a vacuumed or
+    * evaluated against THAT version's files and stats. Either version
+    * resolves through [[TxnLog.resolve]]: a vacuumed or
     * never-committed version throws rather than silently serving a
     * different state of the data.
     */
@@ -92,38 +98,17 @@ object CdcSink {
           k.between(TxnLog.statDecode(t, lit(lo)), TxnLog.statDecode(t, lit(hi)))
         case _ => k.cast("string").between(lo, hi)
       }
-    val manifest = asOf match {
-      case Some(v) => Some(TxnLog.manifestAt(fs, tableDir, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"txnlog: version $v of $tableDir is not readable (never " +
-            s"committed, or vacuumed; retained: " +
-            s"${TxnLog.versions(fs, tableDir).mkString(",")})")))
-      case None => TxnLog.current(fs, tableDir)
-    }
-    manifest match {
-      case Some(m) if m.entries.nonEmpty =>
-        val kt = m.schema.fields
-          .find(_.name == TxnLog.StatsKeyCol).map(_.dataType)
-        def overlaps(e: TxnLog.Entry): Boolean =
-          (for {
-            t <- kt
-            eLo <- e.min; eHi <- e.max
-            c1 <- TxnLog.compareStat(t, eHi, lo) // file.max < lo
-            c2 <- TxnLog.compareStat(t, eLo, hi) // file.min > hi
-          } yield !(c1 < 0 || c2 > 0)).getOrElse(true)
-        val live = m.entries.filter(overlaps)
-        if (live.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-        else TxnLog.readEntries(spark, tableDir, live, m.schema).filter(rowFilter(kt))
-      case Some(m) => // committed but empty version (e.g. post-truncate)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      case None =>
-        val full = read(spark, tableDir)
-        full.filter(rowFilter(
-          full.schema.fields.find(_.name == TxnLog.StatsKeyCol).map(_.dataType)))
-    }
+    val m = TxnLog.resolve(fs, tableDir, asOf)
+    val kt = m.schema.fields.find(_.name == TxnLog.StatsKeyCol).map(_.dataType)
+    def overlaps(e: TxnLog.Entry): Boolean =
+      (for {
+        t <- kt
+        eLo <- e.min; eHi <- e.max
+        c1 <- TxnLog.compareStat(t, eHi, lo) // file.max < lo
+        c2 <- TxnLog.compareStat(t, eLo, hi) // file.min > hi
+      } yield !(c1 < 0 || c2 > 0)).getOrElse(true)
+    TxnLog.readEntries(spark, tableDir, m.entries.filter(overlaps), m.schema)
+      .filter(rowFilter(kt))
   }
 
   private def fsFor(spark: SparkSession, tableDir: String): FileSystem =
@@ -141,9 +126,21 @@ object CdcSink {
     val fs = fsFor(spark, tableDir)
     val snap = CdcApply.snapshot(changelog)
     val version = TxnLog.current(fs, tableDir).map(_.version + 1).getOrElse(1L)
-    val entries = TxnLog.writeCommitDir(snap, tableDir, partitionCol, version)
+    val entries = TxnLog.writeCommitDir(byValue(snap, partitionCol), tableDir, partitionCol, version)
     TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(changelog))
   }
+
+  /** The increment writers' layout ([[writeSnapshot]], the merge fold,
+    * [[applyDdl]]'s rewrite): one write task per partition value.
+    * Otherwise every upstream task writes a file into every partition
+    * dir it holds rows for (shuffle width × partitions small files per
+    * commit). One task per value is the right cost for an increment;
+    * file size is still bounded by the record target, and
+    * [[compact]]'s [[sizedLayout]] restores write parallelism for a
+    * value that grew hot.
+    */
+  private def byValue(df: DataFrame, partitionCol: Option[String]): DataFrame =
+    partitionCol.fold(df)(p => df.repartition(col(p)))
 
   /** Bulk-import a PRE-clustered consistent snapshot: the caller
     * guarantees the rows are (a) final images — one row per key, no
@@ -170,37 +167,26 @@ object CdcSink {
     TxnLog.commit(fs, tableDir, version, snap.schema, entries, batchOffsets(snap))
   }
 
-  /** Full rewrite like [[writeSnapshot]], but range-clustered by the
-    * stats key in the same pass — equivalent to writeSnapshot followed
-    * by [[compact]] without materializing and re-reading the table in
-    * between. The 100 TB bootstrap shape: a snapshot load's files come
-    * out key-disjoint and sorted on day one, so the very first merge
-    * already prunes, and the table never pays a full compaction
-    * rewrite just to earn its key-range stats. Falls back to plain
-    * writeSnapshot when the key column isn't stats-orderable.
+  /** Full rewrite like [[writeSnapshot]], but laid out by
+    * [[sizedLayout]] in the same pass — equivalent to writeSnapshot
+    * followed by [[compact]] without materializing and re-reading the
+    * table in between. The 100 TB bootstrap shape: a snapshot load's
+    * files come out key-disjoint and sorted on day one, so the very
+    * first merge already prunes, and the table never pays a full
+    * compaction rewrite just to earn its key-range stats.
     */
   def writeSnapshotClustered(
       changelog: DataFrame,
       tableDir: String,
       targetRecordsPerFile: Long = TxnLog.TargetRecordsPerFile): Unit = {
     val spark = changelog.sparkSession
-    val snap0 = CdcApply.snapshot(changelog)
-    val rangeKey = snap0.schema.fields.find(f =>
-      f.name == TxnLog.StatsKeyCol && TxnLog.statsSupported(f.dataType))
-    if (rangeKey.isEmpty) { writeSnapshot(changelog, tableDir, None); return }
     val fs = fsFor(spark, tableDir)
-    // persisted across the count+write double pass (same contract as
-    // compact's sub-split path)
-    val snap = snap0.persist()
+    // persisted across the layout's count and the write
+    val snap = CdcApply.snapshot(changelog).persist()
     try {
-      val n = snap.count()
-      val parts = math.max(1L,
-        (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-      val out =
-        if (parts > 1)
-          snap.repartitionByRange(parts, col(TxnLog.StatsKeyCol))
-            .sortWithinPartitions(TxnLog.StatsKeyCol)
-        else snap.repartition(parts)
+      // one file: a shuffle into one writer keeps the snapshot
+      // aggregate parallel
+      val out = sizedLayout(snap, None, Nil, targetRecordsPerFile)(_.repartition(1))
       val version = TxnLog.current(fs, tableDir).map(_.version + 1).getOrElse(1L)
       val entries = TxnLog.writeCommitDir(
         out, tableDir, None, version, targetRecordsPerFile)
@@ -318,7 +304,7 @@ object CdcSink {
           .unionByName(changes, allowMissingColumns = true)
       val merged = CdcApply.snapshot(unioned)
       val entries = TxnLog.writeCommitDir(
-        merged, tableDir, part, m.version + 1, computeStats = false)
+        byValue(merged, part), tableDir, part, m.version + 1, computeStats = false)
       (unionSchema(m.schema, merged.schema), pr.untouched ++ withRange(entries, pr.commitRange))
     }
     partitionCol match {
@@ -642,13 +628,10 @@ object CdcSink {
     */
   val CompactEvery = 10
 
-  /** Rewrite the table to size-targeted files (≤ targetRecordsPerFile
-    * records each) and vacuum. Partitioned tables cluster + sub-split
-    * inside [[TxnLog.writeCommitDir]] — a skew-hot partition value
-    * compacts through ceil(n/target) parallel tasks, never one giant
-    * single-task file; unpartitioned tables repartition to
-    * ceil(rows/target) output files, and a one-file table is read and
-    * written by one task, with no shuffle.
+  /** Rewrite the table to size-targeted files, laid out by
+    * [[sizedLayout]], and vacuum. The split is sized from the log's
+    * row counts, so it counts nothing; a table that is one file's
+    * worth is read and written by one task, with no shuffle.
     */
   def compact(
       spark: SparkSession,
@@ -659,50 +642,62 @@ object CdcSink {
     TxnLog.current(fs, tableDir).foreach { m =>
       if (m.entries.nonEmpty) {
         val snap = TxnLog.readEntries(spark, tableDir, m.entries, m.schema)
-        val out = partitionCol match {
-          case Some(_) => snap // writeCommitDir clusters + sub-splits
-          case None =>
-            // row count from the log when every entry carries one
-            // (merges and stats-bearing bulk commits record it) —
-            // saves a full count scan of the table per compaction;
-            // files committed without a row count pay the count.
-            // Invariant: Entry.rows must equal the file's parquet
-            // footer row count (graft writes it from the footer and
-            // merge is copy-on-write). A foreign writer's stats with
-            // present-but-wrong rows mis-sizes the repartition —
-            // performance only, never correctness: writeCommitDir
-            // still enforces targetRecordsPerFile sub-splitting
-            val n =
-              if (m.entries.forall(_.rows.isDefined)) m.entries.flatMap(_.rows).sum
-              else snap.count()
-            val parts = math.max(1L,
-              (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-            // range-cluster by key when it is orderable: compacted
-            // files become key-disjoint AND sorted, so the key-range
-            // stats turn every later merge into a touch-only-the-
-            // files-a-batch-hits rewrite instead of a table rewrite
-            val rangeKey = snap.schema.fields
-              .find(f => f.name == TxnLog.StatsKeyCol &&
-                TxnLog.statsSupported(f.dataType))
-            rangeKey match {
-              case Some(_) if parts > 1 =>
-                // sortWithinPartitions keeps maxRecordsPerFile
-                // sub-files disjoint too, not just the range tasks
-                snap.repartitionByRange(parts, col(TxnLog.StatsKeyCol))
-                  .sortWithinPartitions(TxnLog.StatsKeyCol)
-              // one output file needs no shuffle: one task reads the
-              // table and writes it
-              case _ if parts == 1 => snap.coalesce(1)
-              case _ => snap.repartition(parts)
-            }
-        }
+        val out = sizedLayout(snap, partitionCol, m.entries, targetRecordsPerFile)(_.coalesce(1))
         val entries = TxnLog.writeCommitDir(
-          out, tableDir, partitionCol, m.version + 1, targetRecordsPerFile,
-          subSplitHotPartitions = true)
+          out, tableDir, partitionCol, m.version + 1, targetRecordsPerFile)
         TxnLog.commit(fs, tableDir, m.version + 1, out.schema, entries,
           operation = "OPTIMIZE")
       }
       TxnLog.vacuum(fs, tableDir)
+    }
+  }
+
+  /** The one layout rule for a full-table write ([[compact]],
+    * [[writeSnapshotClustered]]); increments take [[byValue]].
+    *
+    * Split count: a partition value of n rows gets ceil(n / `target`)
+    * write tasks, so a skew-hot value writes in parallel instead of
+    * into one giant single-task file; the write runs their sum. The
+    * row counts come from the log when every entry of `logged` (the
+    * live files `df` reads) carries one — [[TxnLog.Entry.rows]] is the
+    * file's footer row count, so a wrong one could only mis-size the
+    * split — else from one count of `df`.
+    *
+    * Partitioning: rows range-partition on (partition value, key) and
+    * sort within each task, so a value's files come out key-disjoint
+    * and sorted, and the key-range stats let later merges and reads
+    * touch only the files they hit. A key without stats
+    * ([[TxnLog.statsSupported]]) is replaced by a hash of the columns
+    * Spark can hash (not maps), which spreads a hot value the same way.
+    *
+    * When the whole write is one split, `single` lays it out instead:
+    * each caller knows its cheapest plan for one file.
+    */
+  private def sizedLayout(
+      df: DataFrame,
+      partitionCol: Option[String],
+      logged: Seq[TxnLog.Entry],
+      target: Long)(single: DataFrame => DataFrame): DataFrame = {
+    val perValue: Iterable[Long] =
+      if (logged.nonEmpty && logged.forall(_.rows.isDefined))
+        logged.groupMapReduce(_.partition)(_.rows.get)(_ + _).values
+      else df.groupBy(partitionCol.map(col).toSeq: _*).count().collect()
+        .map(r => r.getLong(r.length - 1))
+    val splits = perValue.map(n => (n + target - 1) / target).sum
+    if (splits <= 1) single(df)
+    else {
+      def hasMap(dt: DataType): Boolean = dt match {
+        case _: MapType => true
+        case a: ArrayType => hasMap(a.elementType)
+        case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+        case _ => false
+      }
+      val within =
+        if (df.schema.exists(f => f.name == TxnLog.StatsKeyCol && TxnLog.statsSupported(f.dataType)))
+          col(TxnLog.StatsKeyCol)
+        else hash(df.schema.fields.filterNot(f => hasMap(f.dataType)).map(f => col(f.name)): _*)
+      val by = partitionCol.map(col).toSeq :+ within
+      df.repartitionByRange(splits.toInt, by: _*).sortWithinPartitions(by: _*)
     }
   }
 
@@ -737,15 +732,12 @@ object CdcSink {
     def rewrite(project: DataFrame => DataFrame): Unit =
       TxnLog.current(fs, tableDir).foreach { m =>
         val version = m.version + 1
-        if (m.entries.isEmpty) {
-          // empty table: the schema change still commits
-          val out = project(TxnLog.read(spark, tableDir))
-          TxnLog.commit(fs, tableDir, version, out.schema, Nil, operation = "ALTER TABLE")
-        } else {
-          val out = project(TxnLog.readEntries(spark, tableDir, m.entries, m.schema))
-          val entries = TxnLog.writeCommitDir(out, tableDir, partitionCol, version)
-          TxnLog.commit(fs, tableDir, version, out.schema, entries, operation = "ALTER TABLE")
-        }
+        val out = project(TxnLog.readEntries(spark, tableDir, m.entries, m.schema))
+        // an empty table's schema change still commits, with no files
+        val entries =
+          if (m.entries.isEmpty) Nil
+          else TxnLog.writeCommitDir(byValue(out, partitionCol), tableDir, partitionCol, version)
+        TxnLog.commit(fs, tableDir, version, out.schema, entries, operation = "ALTER TABLE")
       }
     stmt match {
       case Ddl.AddColumn(_, _) => tableDir // lazy evolution on next merge

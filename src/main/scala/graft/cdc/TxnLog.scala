@@ -126,22 +126,28 @@ object TxnLog {
     else DeltaLog.snapshot(fs, tableDir, Some(version)).map(_.manifest).filter(m =>
       retained(fs, tableDir, m.entries.map(_.path), scala.collection.mutable.Map.empty))
 
-  /** Read the table AS OF `version`. Throws if the version was never
-    * committed or has been vacuumed — time travel must not silently
+  /** The manifest a read resolves: `version`'s (time travel) when
+    * given, else the latest. Throws naming the table when there is
+    * none — a version never committed or already vacuumed, or a table
+    * with no committed version at all (a first commit that crashed
+    * leaves only unpublished commit dirs). A read must not silently
     * fall back to a different state of the data.
     */
+  private[cdc] def resolve(fs: FileSystem, tableDir: String, version: Option[Long]): Manifest =
+    version match {
+      case Some(v) => manifestAt(fs, tableDir, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"txnlog: version $v of $tableDir is not readable " +
+            s"(never committed, or vacuumed; retained: ${versions(fs, tableDir).mkString(",")})"))
+      case None => current(fs, tableDir).getOrElse(
+        throw new IllegalArgumentException(s"txnlog: $tableDir has no committed version"))
+    }
+
+  /** Read the table AS OF `version` ([[resolve]]'s contract). */
   def readVersion(spark: SparkSession, tableDir: String, version: Long): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestAt(fs, tableDir, version) match {
-      case None =>
-        throw new IllegalArgumentException(
-          s"txnlog: version $version of $tableDir is not readable " +
-            s"(never committed, or vacuumed; retained: ${versions(fs, tableDir).mkString(",")})")
-      case Some(m) if m.entries.isEmpty =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-      case Some(m) =>
-        readEntries(spark, tableDir, m.entries, m.schema)
-    }
+    val m = resolve(fs, tableDir, Some(version))
+    readEntries(spark, tableDir, m.entries, m.schema)
   }
 
   /** Publish `entries` as the complete live-file set of `version`,
@@ -160,16 +166,18 @@ object TxnLog {
       operation: String = "WRITE"): Manifest =
     DeltaLog.commit(fs, tableDir, version, schema, entries, offsets, operation).manifest
 
-  /** Size target for commit/compaction output files, in records.
-    * Bounds BOTH file size and write-task runtime: a partition value
-    * holding n records writes through ceil(n/target) tasks/files, so
-    * a skew-hot value at 100 TB parallelizes instead of serializing
-    * into one giant single-task file.
+  /** Size target for commit/compaction output files, in records: no
+    * file holds more (`maxRecordsPerFile`), and a full-table write
+    * gives a partition value of n records ceil(n/target) write tasks
+    * ([[CdcSink]]'s layout rule).
     */
   val TargetRecordsPerFile: Long = 2L * 1000 * 1000
 
-  /** Write `df` into a fresh commit directory for `version`; returns
-    * its entries (paths relative to the table dir). Nothing is visible
+  /** Write `df` into a fresh commit directory for `version`, as the
+    * caller laid it out: one file per task and partition value
+    * (`partitionBy(__gp)` when partitioned), each cut at
+    * `targetRecordsPerFile` records. Returns its entries (paths
+    * relative to the table dir) with their stats; nothing is visible
     * to readers until [[commit]] publishes them.
     */
   def writeCommitDir(
@@ -178,126 +186,40 @@ object TxnLog {
       partitionCol: Option[String],
       version: Long,
       targetRecordsPerFile: Long = TargetRecordsPerFile,
-      subSplitHotPartitions: Boolean = false,
       computeStats: Boolean = true): Seq[Entry] = {
     val spark = df.sparkSession
     val dirName = s"c-$version-${UUID.randomUUID().toString.take(8)}"
     val dest = new Path(tableDir, dirName)
-    partitionCol match {
-      case Some(p) if !subSplitHotPartitions =>
-        // cluster rows by their target partition before the write:
-        // otherwise every upstream task emits a file into every
-        // partition dir it holds rows for (shuffle-width × partitions
-        // small files per commit). One task per value is the right
-        // cost for increment-sized merge commits; file SIZE is still
-        // bounded (maxRecordsPerFile), and the periodic compaction
-        // rewrite (subSplitHotPartitions=true) restores write
-        // parallelism for any value that grew hot in the meantime.
-        df.withColumn(PartDirCol, col(p))
-          .repartition(col(PartDirCol))
-          .write.option("maxRecordsPerFile", targetRecordsPerFile)
-          .partitionBy(PartDirCol).parquet(dest.toString)
-      case Some(p) =>
-        // full-rewrite path (compaction): clustering by value ALONE
-        // would serialize a skew-hot value into one write task, so
-        // the rewrite runs at ceil(n/targetRecordsPerFile)-per-value
-        // total width from an exact pre-count. When the key column is
-        // orderable, the sub-split is a RANGE partition on
-        // (partition value, key) + in-task sort: a hot value spreads
-        // across tasks proportionally AND its files come out
-        // key-disjoint, so merges prune files within the partition.
-        // Unorderable/absent keys fall back to deterministic
-        // hash-salt buckets. The input is persisted across the
-        // count+write double pass.
-        import org.apache.spark.sql.functions.{
-          broadcast, ceil, coalesce, count, greatest, hash, lit, pmod, sum}
-        val base = df.withColumn(PartDirCol, col(p)).persist()
-        var splits: DataFrame = null
-        try {
-          splits = base.groupBy(col(PartDirCol).as("_pv"))
-            .agg(count(lit(1)).as("_n"))
-            .select(col("_pv"),
-              greatest(lit(1L), ceil(col("_n") / lit(targetRecordsPerFile)))
-                .cast("int").as("_nsplit"))
-            .persist()
-          val totalSplits = math.max(1L, splits
-            .agg(coalesce(sum(col("_nsplit")), lit(0L))).head.getLong(0)).toInt
-          val rangeKey = df.schema.fields
-            .find(f => f.name == StatsKeyCol && statsSupported(f.dataType))
-          val clustered = rangeKey match {
-            case Some(_) =>
-              base.repartitionByRange(
-                  totalSplits, col(PartDirCol), col(StatsKeyCol))
-                .sortWithinPartitions(PartDirCol, StatsKeyCol)
-            case None =>
-              // salt from the hashable columns only — Spark's hash()
-              // rejects MapType; a row set that is ALL maps still
-              // splits (monotonically_increasing_id is
-              // partition-local, no shuffle, and determinism of file
-              // ASSIGNMENT is not a correctness property)
-              def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean =
-                dt match {
-                  case _: org.apache.spark.sql.types.MapType => true
-                  case a: org.apache.spark.sql.types.ArrayType =>
-                    hasMap(a.elementType)
-                  case s: StructType => s.fields.exists(f => hasMap(f.dataType))
-                  case _ => false
-                }
-              val hashable = df.schema.fields
-                .filterNot(f => hasMap(f.dataType)).map(f => col(f.name))
-              val saltSrc =
-                if (hashable.nonEmpty) hash(hashable: _*)
-                else org.apache.spark.sql.functions
-                  .monotonically_increasing_id()
-              base.join(broadcast(splits), base(PartDirCol) <=> col("_pv"), "left")
-                .withColumn("_salt",
-                  pmod(saltSrc, coalesce(col("_nsplit"), lit(1))))
-                .repartition(totalSplits, col(PartDirCol), col("_salt"))
-                .drop("_pv", "_nsplit", "_salt")
-          }
-          clustered.write
-            // belt for range-sampling imbalance / hash-bucket
-            // collisions into one task: the file itself still splits
-            // at the record target
-            .option("maxRecordsPerFile", targetRecordsPerFile)
-            .partitionBy(PartDirCol).parquet(dest.toString)
-        } finally {
-          // both caches release on the failure path too — a persisted
-          // broadcast frame leaked past a failed write lingers for
-          // the session
-          if (splits != null) splits.unpersist()
-          base.unpersist()
-        }
-      case None =>
-        df.write.option("maxRecordsPerFile", targetRecordsPerFile)
-          .parquet(dest.toString)
+    val writer = partitionCol match {
+      case Some(p) => df.withColumn(PartDirCol, col(p)).write.partitionBy(PartDirCol)
+      case None => df.write
     }
+    writer.option("maxRecordsPerFile", targetRecordsPerFile).parquet(dest.toString)
     failpoint(Crash.AfterDataWrite)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = listParquet(fs, dest)
     val files = statuses.map(_.getPath)
     // Per-file row count and key-range stats (partitioned tables
     // prune first on the partition value, then on these within
-    // touched partitions). The common key types' ranges decode from
-    // the just-written parquet FOOTERS on the driver (no Spark job;
-    // ~ms per file). A bulk commit (computeStats) with many files or
-    // another key type pays one single-column scan of the commit dir
-    // instead — O(new data), never O(table). Increment commits
-    // (computeStats=false) never run that scan: they take the row
-    // counts, plus the range where the footers decode, from footers
-    // alone, and the caller may fill in a coarser range.
+    // touched partitions). Every commit takes its row counts, and the
+    // common key types' ranges, from the just-written parquet FOOTERS
+    // on the driver (no Spark job; ~ms per file). A bulk commit
+    // (computeStats) with many files or another stats-able key type
+    // pays one single-column scan of the commit dir instead —
+    // O(new data), never O(table). Increment commits
+    // (computeStats=false) never run that scan, and the caller may
+    // fill in a coarser range.
     val keyType = df.schema.fields
       .find(f => f.name == StatsKeyCol && statsSupported(f.dataType))
       .map(_.dataType)
     val footerKey = keyType.filter(footerStatsDecodable)
     val stats: Map[(Option[String], String), (Option[String], Option[String], Long)] =
       if (files.isEmpty) Map.empty
-      else if (!computeStats) fileKeyStatsFromFooters(spark, tableDir, files, footerKey)
       else keyType match {
-        case Some(_) if footerKey.isDefined && files.length <= FooterStatsMaxFiles =>
-          fileKeyStatsFromFooters(spark, tableDir, files, footerKey)
-        case Some(kt) => fileKeyStats(spark, dest, kt)
-        case None => Map.empty
+        case Some(kt) if computeStats &&
+            (footerKey.isEmpty || files.length > FooterStatsMaxFiles) =>
+          fileKeyStats(spark, dest, kt)
+        case _ => fileKeyStatsFromFooters(spark, tableDir, files, footerKey)
       }
     statuses.map { st =>
       val f = st.getPath
@@ -576,20 +498,13 @@ object TxnLog {
     s.substring(b.length + 1)
   }
 
-  /** Read the table at its current version. Falls back to a plain
-    * (mergeSchema) directory read for directories without a log; an
-    * empty version yields an empty frame with the committed schema.
+  /** Read the table at its current version ([[resolve]]'s contract);
+    * an empty version yields an empty frame with the committed schema.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DeltaLog.snapshot(fs, tableDir).map(_.manifest) match {
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(tableDir)
-      case Some(m) if m.entries.isEmpty =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-      case Some(m) =>
-        readEntries(spark, tableDir, m.entries, m.schema)
-    }
+    val m = resolve(fs, tableDir, None)
+    readEntries(spark, tableDir, m.entries, m.schema)
   }
 
   /** Read a subset of a version's entries under that version's
@@ -600,13 +515,15 @@ object TxnLog {
     * file's size and modification time, so the scan's file index
     * starts from them: no file is listed or stat'ed (Spark would list
     * more than 32 paths in a job of its own). Only an entry without a
-    * recorded size is looked up.
+    * recorded size is looked up. No entries read as an empty frame.
     */
   def readEntries(
       spark: SparkSession,
       tableDir: String,
       entries: Seq[Entry],
       schema: StructType): DataFrame = {
+    if (entries.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = entries.map(e => fs.makeQualified(new Path(root, e.path)))

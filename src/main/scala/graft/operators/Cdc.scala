@@ -1438,14 +1438,12 @@ object Cdc {
     * between the last two decades. The count probe is a
     * footer-metadata job, not a scan.
     */
-  private val stateParts =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
   private def streamStateParts(s: SparkSession, dir: String): Option[Int] =
     // the row count is immutable per generated dir, so the probe
     // (a footer-metadata job, ~0.3-0.5 s of fixed cost) runs once per
     // (session, dir) instead of once per streaming entry
-    Some(stateParts.computeIfAbsent(s.hashCode() + "|" + dir, _ =>
-      if (Tables.events(s, dir).count() > 3000000L) 32 else 8))
+    Some(SessionCache.value(s, s"cdc:stateParts:$dir")(
+      Int.box(if (Tables.events(s, dir).count() > 3000000L) 32 else 8)).intValue)
 
   // --- cdc_stream_join: stream-stream interval join ---------------
   // Two live changelogs correlated on (user, event-time range): each

@@ -305,6 +305,34 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
     assert(table(dir).count() == before)
   }
 
+  test("compaction sub-splits a hot partition value when the key has no stats (binary key)") {
+    // a binary key gets no key-range stats, so the layout spreads a hot
+    // value by a hash of the row instead of by key range
+    val dir = tempDir("graft_sink_binkey_").toString
+    def rows(n: Long, part: String, off: Long): DataFrame =
+      spark.range(0, n).select(
+        concat(lit(part), col("id").cast("string")).cast("binary").as("key"),
+        lit("c").as("op"), (col("id") + off).as("offset"), lit(part).as("part"),
+        col("id").cast("double").as("value"), lit("bin.1").as("source_file"))
+    CdcSink.writeSnapshot(rows(4000, "hot", 0).unionAll(rows(10, "cold", 10000)), dir, Some("part"))
+    // the bulk commit records row counts although the key has no stats
+    val m0 = TxnLog.current(fs, dir).get
+    assert(m0.entries.forall(e => e.rows.isDefined && e.min.isEmpty), m0.entries.toString)
+    def content(d: String) = table(d)
+      .select(hex(col("key")), col("part"), col("value")).collect().map(_.toString).sorted.toSeq
+    val before = content(dir)
+    val (_, jobs) = SparkJobs.during(spark)(
+      CdcSink.compact(spark, dir, Some("part"), targetRecordsPerFile = 1000L))
+    assert(jobs.forall(_.callSite.startsWith("parquet at")), jobs.toString)
+    val m = TxnLog.current(fs, dir).get
+    val hotTasks = m.entries.filter(_.partition.contains("hot"))
+      .map(e => new java.io.File(e.path).getName.split("-").take(2).mkString("-")).distinct
+    assert(hotTasks.length > 1, s"hot value written by ${hotTasks.length} task(s)")
+    assert(m.entries.forall(_.rows.isDefined), m.entries.toString)
+    assert(m.entries.flatMap(_.rows).sum == 4010L)
+    assert(content(dir) == before)
+  }
+
   test("crash between data write and manifest publish loses nothing") {
     val dir = tempDir("graft_sink_crash_").toString
     CdcSink.writeSnapshot(
@@ -438,6 +466,28 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
     assert(!compaction.exists(_.callSite.startsWith("count at")), compaction.toString)
     assert(compaction.forall(_.sqlExecution), compaction.toString)
     assert(table(dir).count() == 3000)
+    // so does a partitioned table's: every job is the write's, and none
+    // reads or fills a persisted frame
+    val pdir = tempDir("graft_sink_jobs_part_").toString
+    CdcSink.writeSnapshot(spark.range(0, 3000).select(
+      format_string("k%05d", col("id")).as("key"), lit("c").as("op"),
+      col("id").as("offset"), concat(lit("p"), col("id") % 3).as("part"),
+      col("id").cast("double").as("value"), lit("bin.1").as("source_file")), pdir, Some("part"))
+    val (_, pcompaction) = SparkJobs.during(spark)(
+      CdcSink.compact(spark, pdir, Some("part"), targetRecordsPerFile = 500L))
+    assert(pcompaction.nonEmpty && pcompaction.forall(j =>
+      j.sqlExecution && j.callSite.startsWith("parquet at") && !j.cached), pcompaction.toString)
+    val pm = TxnLog.current(fs, pdir).get
+    assert(pm.entries.length >= 6 && pm.entries.forall(_.rows.isDefined), pm.entries.toString)
+    // each value's files are key-disjoint: the range layout's order
+    // survives the partitioned write
+    pm.entries.groupBy(_.partition).values.foreach { es =>
+      es.map(e => (e.min.get, e.max.get)).sorted.sliding(2).foreach {
+        case Seq((_, hi), (lo, _)) => assert(hi < lo, s"overlap: $hi vs $lo")
+        case _ =>
+      }
+    }
+    assert(table(pdir).count() == 3000)
   }
 
   test("unpartitioned merge works end-to-end") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * GenScale perturbs replica payloads into NEAR-dups (token caesar
   * edits / embedding jitter), so the planted ground truth at a scaled
   * dir is the (base, base + Stride) pair set: every base row has a
-  * replica-1 twin that the near-dup miners must recover. This main
+  * replica-1 twin that the near-dup miners must recover. This probe
   * measures that recovery directly with the production miners:
   *
   *  - minhash:   Dedup.minhashPairs (xxhash64 variant) over documents
@@ -30,10 +30,8 @@ import org.apache.spark.sql.functions._
   *               projection, predicting ≥ 0.99 — floor 0.95
   *               (measured 0.9985 on the first regenerated sf1).
   *
-  * Prints ONE JSON line; exits nonzero if a floor is violated, so
-  * the probe can gate a regeneration.
-  *
-  * Usage: SPARK_GRAFT_SF_DIR=bench-data/sf1 runMain graft.RecallProbe
+  * [[RecallSpec]] runs it over a corpus it scales in-test and pins
+  * the floors.
   */
 object RecallProbe {
 
@@ -59,9 +57,7 @@ object RecallProbe {
       if (nVecs == 0) 0.0 else nVecsFound.toDouble / nVecs
   }
 
-  /** The measurement itself, over in-memory frames so the spec can
-    * run it on a generated-in-test GenScale corpus (RecallSpec pins
-    * the floors in `sbt test`; the main remains the sf1 probe).
+  /** The measurement itself, over in-memory frames.
     * `docs` = (doc_id, text), `emb` = (vec_id, embedding) with the
     * (base, base + Stride) replica structure GenScale plants.
     */
@@ -109,28 +105,5 @@ object RecallProbe {
       .join(expectedVecs, Seq("vec_id"))
     Result(nDocs, nDocsFound, nContract, nContractFound,
       expectedVecs.count(), embFound.count())
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "bench-data/sf1")
-    val spark = Spark.session()
-    spark.sparkContext.setLogLevel("WARN")
-    val r = measure(
-      Tables.parallelized(Tables.documents(spark, sfDir)),
-      Tables.parallelized(Tables.embeddings(spark, sfDir))
-        .select(col("vec_id"), col("embedding")))
-    println(s"""{"sf_dir":"$sfDir","minhash_expected":${r.nDocs},"minhash_found":${r.nDocsFound},""" +
-      f""""minhash_recall_all":${r.minhashRecallAll}%.4f,""" +
-      s""""minhash_contract_expected":${r.nContract},"minhash_contract_found":${r.nContractFound},""" +
-      f""""minhash_recall_contract":${r.minhashRecallContract}%.4f,"embedding_expected":${r.nVecs},""" +
-      f""""embedding_found":${r.nVecsFound},"embedding_recall":${r.embeddingRecall}%.4f}""")
-    spark.stop()
-    require(r.nDocs > 0 && r.nVecs > 0,
-      s"$sfDir has no (base, base+Stride) replica pairs — not a GenScale dir?")
-    require(r.nContract > 0, s"no pairs at Jaccard >= $JaccardContract — corpus too perturbed?")
-    require(r.minhashRecallContract >= MinhashFloor,
-      f"minhash contract recall ${r.minhashRecallContract}%.4f below floor $MinhashFloor")
-    require(r.embeddingRecall >= EmbeddingFloor,
-      f"embedding recall ${r.embeddingRecall}%.4f below floor $EmbeddingFloor")
   }
 }

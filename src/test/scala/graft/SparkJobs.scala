@@ -18,8 +18,10 @@ object SparkJobs {
     * result stage's for a job outside any SQL execution. Jobs that
     * run while a DataFrame is still being built, such as parquet
     * footer schema inference, run outside any SQL execution.
+    * `cached` says whether one of its stages reads or fills a
+    * persisted RDD (a persisted DataFrame's, for example).
     */
-  final case class Job(callSite: String, sqlExecution: Boolean)
+  final case class Job(callSite: String, sqlExecution: Boolean, cached: Boolean)
 
   /** Run `body` and return its result with the jobs it started. */
   def during[T](spark: SparkSession)(body: => T): (T, Seq[Job]) = {
@@ -41,7 +43,8 @@ object SparkJobs {
         jobs.add(Job(
           execution.flatMap(id => Option(executions.get(id))).getOrElse(
             e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("")),
-          execution.isDefined))
+          execution.isDefined,
+          e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid))))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
     }

@@ -129,6 +129,32 @@ class SinkLogSpec extends AnyFunSuite with SharedSpark {
     assert(r.passed, r.status.toString)
   }
 
+  test("a crashed first commit is no table: reads raise, and re-running the bootstrap lands on the no-crash run") {
+    import TxnLog.Crash._
+    val boot = frame(stream(Seed, 0)._1)
+      .withColumn("part", org.apache.spark.sql.functions.substring($"key", 1, 2))
+    for (part <- Seq(None, Some("part")); at <- Seq(AfterDataWrite, BeforePublish)) {
+      val clean = tempDir("graft_log_boot_").toString
+      CdcSink.writeSnapshot(boot, clean, part)
+      val dir = tempDir("graft_log_bootcrash_").toString
+      TxnLog.crashAt = Some(at)
+      try {
+        val e = intercept[RuntimeException](CdcSink.writeSnapshot(boot, dir, part))
+        assert(String.valueOf(e.getMessage).contains("injected crash"), e.toString)
+      } finally TxnLog.crashAt = None
+      assert(commitDirs(dir).nonEmpty, s"$at, $part: the crashed commit wrote no data")
+      val reads = Seq(
+        () => CdcSink.read(spark, dir),
+        () => CdcSink.readRange(spark, dir, "k000", "k999"))
+      reads.foreach { read =>
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains(dir), e.getMessage)
+      }
+      CdcSink.writeSnapshot(boot, dir, part)
+      assert(state(dir) == state(clean), s"$at, $part: the re-run bootstrap diverged")
+    }
+  }
+
   test("two writers commit the same version: the second throws and changes nothing") {
     val (boot, _) = stream(Seed, 0)
     val dir = tempDir("graft_log_race_").toString
