@@ -9,6 +9,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.{SparkSession, graftbridge}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,7 +17,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * sink (which evaluates every column) over N passes: pass 0 is the
   * cold pass, passes 1..N-1 the steady ones. Each entry runs under its
   * own job group. One recorder splits each entry's window into the
-  * layer fields perfbench defines under `analytics.*`.
+  * layer fields perfbench defines under `analytics.*` as soon as the
+  * entry ends, and keeps no record past it.
   *
   * The map (`BENCH_map.json`) keeps each entry's cold time, its steady
   * min and median, and the layer fields (medians over the steady
@@ -110,7 +112,7 @@ object Bench {
     * window claims what started inside it: streams re-group their jobs
     * under their run id, so a job's group cannot say which entry ran it,
     * but the entries run one at a time. */
-  private final class Recorder extends SparkListener with QueryExecutionListener {
+  private final class Recorder(spark: SparkSession) extends SparkListener with QueryExecutionListener {
     private val jobs = new ConcurrentHashMap[Int, (Long, Long)]
     // (submitted, tasks, executor CPU ns, shuffle bytes written)
     private val stages = new ConcurrentLinkedQueue[(Long, Long, Long, Long)]
@@ -131,28 +133,24 @@ object Bench {
     }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
 
-    /** Waits (up to 10 s) until every job has ended and no event arrives. */
-    def drain(): Unit = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var quiet, last = 0
-      while (quiet < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = jobs.size + stages.size + planning.size
-        val open = jobs.values.asScala.exists(_._2 == Long.MaxValue)
-        quiet = if (n == last && !open) quiet + 1 else 0
-        last = n
-      }
-    }
-
-    def layers(from: Long, to: Long, gcMs: Long): Map[String, Double] = {
+    /** The layer fields of the window `[from, to]`, once the listener
+      * bus has delivered what was posted in it (a bounded wait). Every
+      * record that started by `to` is then dropped, so the recorder
+      * holds one entry's records at a time. */
+    def take(from: Long, to: Long, gcMs: Long): Map[String, Double] = {
+      graftbridge.drainListenerBus(spark, 10000L)
       def in(t: Long) = t >= from && t <= to
       val js = jobs.values.asScala.filter(j => in(j._1)).toSeq
       val ss = stages.asScala.filter(s => in(s._1)).toSeq
-      Map("planning_s" -> planning.asScala.filter(p => in(p._1)).map(_._2).sum / 1e3,
+      val layers = Map("planning_s" -> planning.asScala.filter(p => in(p._1)).map(_._2).sum / 1e3,
         "jobs" -> js.size.toDouble, "stages" -> ss.size.toDouble, "tasks" -> ss.map(_._2).sum.toDouble,
         "exec_cpu_s" -> ss.map(_._3).sum / 1e9, "gc_s" -> gcMs / 1e3,
         "shuffle_bytes" -> ss.map(_._4).sum.toDouble,
         "driver_gap_s" -> (to - from - unionLength(js, from, to)) / 1e3)
+      jobs.values.removeIf(_._1 <= to)
+      stages.removeIf(_._1 <= to)
+      planning.removeIf(_._1 <= to)
+      layers
     }
   }
 
@@ -175,11 +173,11 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     if (entries.exists(_._1 == "cdc_binlog_throughput")) operators.Cdc.ensureBinlogGenerated(spark, sfDir)
 
-    val rec = new Recorder
+    val rec = new Recorder(spark)
     spark.sparkContext.addSparkListener(rec)
     spark.listenerManager.register(rec)
     val wall0 = System.nanoTime()
-    // per pass, per entry: (secs, wall-clock window, GC ms), or None
+    // per pass, per entry: (secs, layers), or None
     val raw = (0 until passes).map { pass =>
       if (pass > 0) System.gc()
       val samples = entries.map { case (name, fn) =>
@@ -191,18 +189,15 @@ object Bench {
           false
         }
         val secs = (System.nanoTime() - t0) / 1e9
-        name -> Option.when(ok)((secs, from, System.currentTimeMillis(), gcMs - gc0))
+        val layers = rec.take(from, System.currentTimeMillis(), gcMs - gc0)
+        name -> Option.when(ok)((secs, layers))
       }
       spark.sparkContext.clearJobGroup()
       println(f"pass $pass: ${samples.flatMap(_._2).map(_._1).sum}%.3f s")
       samples
     }
     val wallS = (System.nanoTime() - wall0) / 1e9
-    rec.drain()
-    val runs = raw.flatten.groupMap(_._1)(_._2).map { case (name, ps) =>
-      name -> ps.map(_.map { case (secs, from, to, gc) => (secs, rec.layers(from, to, gc)) })
-    }
-    val run = summarize(host, runs)
+    val run = summarize(host, raw.flatten.groupMap(_._1)(_._2))
     Files.writeString(mapPath, toJson(fold(existing, run)))
     def total(f: String) = f"${run.entries.values.map(_(f)).sum}%.3f"
     println(s"""{"entries":${run.entries.size},"failed":[${run.failed.map("\"" + _ + "\"").mkString(",")}],""" +

@@ -9,8 +9,11 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -41,9 +44,12 @@ import org.json4s.jackson.JsonMethods
   * Resolving a version runs no Spark job: the checkpoint parquet is
   * read on the driver through parquet-hadoop, then the JSON commits
   * after it are probed one by one without listing the directory.
-  * DeltaLogSpec replays the log with an independent reader of the
-  * public protocol and checks it against [[TxnLog.read]] at every
-  * version.
+  * Reading a version scans exactly the files it lists: [[read]] and
+  * [[TxnLog.readEntries]] build their scans through one file index
+  * over the log's file list (`graftbridge.logScan`), so no read lists
+  * a data directory either. DeltaLogSpec replays the log with an
+  * independent reader of the public protocol and checks it against
+  * [[TxnLog.read]] at every version.
   */
 object DeltaLog {
 
@@ -53,16 +59,6 @@ object DeltaLog {
   /** commitInfo operation of a sink merge: the commits counted by
     * `mergeCount`. */
   val MergeOp = "MERGE"
-
-  /** Partitioned reads union one scan per distinct partition-value
-    * combination up to this many (simple plan, per-branch pruning);
-    * beyond it they switch to ONE scan joined against a broadcast
-    * file→partition-values map, keeping the plan O(1) in partition
-    * count. Callers that need the other plan (DeltaLogSpec forces
-    * the join path on a small fixture) pass their own threshold to
-    * [[read]]/[[readVersion]] — no mutable global.
-    */
-  val UnionComboMax = 64
 
   // Delta action paths are RFC 2396 percent-encoded URIs relative to
   // the table root (the protocol's `path` spec): encode when WRITING
@@ -642,99 +638,44 @@ object DeltaLog {
 
   /** Read a Delta table at its latest version through the public
     * protocol (checkpoint + JSON actions) — the cross-engine read
-    * path, for graft-written and foreign tables alike, including
-    * foreign PARTITIONED tables (partition columns materialized from
-    * each add action's partitionValues).
+    * path, for graft-written and foreign tables alike. It scans
+    * exactly the files the log lists, through the same file index as
+    * [[TxnLog.readEntries]], and lists no directory. A foreign
+    * writer's add `size` is not trusted: each file is looked up on the
+    * driver, so a file gone behind the log raises here, naming it. A
+    * foreign PARTITIONED table's partition columns come from each add
+    * action's partitionValues, cast to the column type (a null value
+    * stays null), and the scan prunes its files on filters over them.
     */
-  def read(spark: SparkSession, tableDir: String,
-      unionComboMax: Int = UnionComboMax): org.apache.spark.sql.DataFrame = {
+  def read(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = snapshot(fs, tableDir).getOrElse(throw new IllegalArgumentException(
       s"delta read: no readable _delta_log under $tableDir (version 0 gone and no usable checkpoint)"))
-    stateFrame(spark, tableDir, st, unionComboMax)
+    stateFrame(spark, tableDir, st)
   }
 
   /** Read AS OF `version` — delta time travel over the action log. */
-  def readVersion(spark: SparkSession, tableDir: String,
-      version: Long,
-      unionComboMax: Int = UnionComboMax): org.apache.spark.sql.DataFrame = {
+  def readVersion(spark: SparkSession, tableDir: String, version: Long): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = snapshot(fs, tableDir, Some(version)).getOrElse(throw new IllegalArgumentException(
       s"delta read: version $version of $tableDir is not in the log"))
-    stateFrame(spark, tableDir, st, unionComboMax)
+    stateFrame(spark, tableDir, st)
   }
 
-  private def stateFrame(spark: SparkSession, tableDir: String,
-      st: Snapshot, unionComboMax: Int): org.apache.spark.sql.DataFrame = {
+  private def stateFrame(spark: SparkSession, tableDir: String, st: Snapshot): DataFrame = {
     require(st.schemaJson.nonEmpty, "delta read: no metaData action found")
     val schema = st.schema
-    def resolve(p: String): Path = resolvePath(tableDir, p)
-    val live = st.files.iterator.map { case (k, a) => k -> a.partitionValues }.toSeq
-    if (live.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (st.partitionCols.isEmpty)
-      spark.read.schema(schema).parquet(live.map(f => resolve(f._1).toString): _*)
-    else {
-      // Foreign PARTITIONED table: data files physically hold the
-      // schema minus the partition columns; each file's partition
-      // values come from its add action.
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
-      val physical = StructType(
-        schema.fields.filterNot(f => st.partitionCols.contains(f.name)))
-      val byCombo = live
-        .groupBy { case (_, pv) => st.partitionCols.map(pv.get(_).flatten) }
-      if (byCombo.size <= unionComboMax) {
-        // one scan per DISTINCT value tuple, partition columns
-        // re-attached as typed literals — downstream filters on them
-        // constant-fold per branch and unselected branches prune away
-        val frames = byCombo.toSeq.map { case (combo, files) =>
-          val base = spark.read.schema(physical).parquet(
-            files.map { case (p, _) => resolve(p).toString }: _*)
-          st.partitionCols.zip(combo).foldLeft(base) { case (df, (c, v)) =>
-            val t = schema(c).dataType
-            df.withColumn(c, v.map(lit(_).cast(t)).getOrElse(lit(null).cast(t)))
-          }.select(schema.fieldNames.map(col): _*)
-        }
-        frames.reduce(_.unionByName(_))
-      } else {
-        // high-cardinality partitioning: a union-per-combo plan would
-        // carry one parquet relation per partition — O(partitions)
-        // analysis cost. Instead: ONE scan of every live file joined
-        // against a broadcast (file → partition values) map, keyed by
-        // the exact url-encoded path string input_file_name() reports
-        // (SparkPath.fromPath of the qualified path — same encoding
-        // Spark's scan sets per file).
-        val fs = new Path(tableDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val mapRows = live.map { case (p, pv) =>
-          Row.fromSeq(
-            org.apache.spark.paths.SparkPath
-              .fromPath(fs.makeQualified(resolve(p))).urlEncoded +:
-            st.partitionCols.map(c => pv.get(c).flatten.orNull))
-        }
-        val mapSchema = StructType(
-          StructField("__file", StringType) +:
-          st.partitionCols.map(c => StructField(s"__pv_$c", StringType)))
-        val mapDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(mapRows, 1), mapSchema)
-        // LEFT join + raise_error guard: a key mismatch between the
-        // scan's reported file string and the precomputed SparkPath
-        // form must fail loudly, not silently drop the file's rows
-        val base = spark.read.schema(physical)
-          .parquet(live.map(f => resolve(f._1).toString): _*)
-          .withColumn("__file", input_file_name())
-          .join(broadcast(mapDf.withColumn("__matched", lit(true))),
-            Seq("__file"), "left")
-          .filter(org.apache.spark.sql.functions.when(
-            col("__matched").isNull,
-            org.apache.spark.sql.functions.expr(
-              "raise_error(concat('delta read: no partition mapping for ', __file))"))
-            .otherwise(lit(true)))
-        st.partitionCols.foldLeft(base) { (df, c) =>
-          df.withColumn(c, col(s"__pv_$c").cast(schema(c).dataType))
-        }.select(schema.fieldNames.map(col): _*)
-      }
-    }
+    val parts = StructType(st.partitionCols.map(schema(_)))
+    val data = StructType(schema.filterNot(f => st.partitionCols.contains(f.name)))
+    // each distinct partitionValues tuple, cast to the column types once
+    def tuple(a: AddFile) = st.partitionCols.map(a.partitionValues.get(_).flatten)
+    val tuples = st.files.valuesIterator.map(tuple).toSeq.distinct
+    val typed = tuples.zip(graftbridge.evalLocal(spark,
+      StructType(parts.map(_.copy(dataType = StringType))),
+      tuples.map(t => InternalRow.fromSeq(t.map(_.map(UTF8String.fromString).orNull))),
+      parts.map(f => col(f.name).cast(f.dataType)): _*)).toMap
+    graftbridge.logScan(spark, data, parts, st.files.iterator.map { case (k, a) =>
+      graftbridge.LogFile(resolvePath(tableDir, k), None, typed(tuple(a)))
+    }.toSeq).select(schema.fieldNames.toSeq.map(col): _*)
   }
 }

@@ -1,8 +1,9 @@
 package graft.cdc
 
 import java.util.UUID
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -79,9 +80,6 @@ object TxnLog {
     val AfterDataWrite, BeforePublish, AfterPublish, InCheckpoint = Value
   }
   private[graft] var crashAt: Option[Crash.Value] = None
-  private[graft] def crashBeforeCommit: Boolean = crashAt.contains(Crash.BeforePublish)
-  private[graft] def crashBeforeCommit_=(on: Boolean): Unit =
-    crashAt = if (on) Some(Crash.BeforePublish) else None
 
   private[cdc] def failpoint(at: Crash.Value): Unit =
     if (crashAt.contains(at)) throw new RuntimeException(s"txnlog: injected crash at $at")
@@ -481,8 +479,8 @@ object TxnLog {
       .toMap
   }
 
-  private def listParquet(fs: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+  private def listParquet(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val f = it.next()
@@ -508,30 +506,29 @@ object TxnLog {
   }
 
   /** Read a subset of a version's entries under that version's
-    * committed `schema` (its [[Manifest.schema]]). The log already
+    * committed `schema` (its [[Manifest.schema]]), through the one
+    * scan of log-listed files (`graftbridge.logScan`). The log already
     * knows the schema, so no footer-inference job runs before the
-    * scan; a column a file predates reads as null (schema evolution
-    * is reconciled from the log, not from footers). It also knows each
+    * scan; a column a file predates reads as null (schema evolution is
+    * reconciled from the log, not from footers). It also knows each
     * file's size and modification time, so the scan's file index
-    * starts from them: no file is listed or stat'ed (Spark would list
-    * more than 32 paths in a job of its own). Only an entry without a
-    * recorded size is looked up. No entries read as an empty frame.
+    * starts from them: no file is listed or stat'ed. Only an entry
+    * without a recorded size is looked up. No entries read as an empty
+    * frame.
     */
   def readEntries(
       spark: SparkSession,
       tableDir: String,
       entries: Seq[Entry],
       schema: StructType): DataFrame = {
-    if (entries.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = entries.map(e => fs.makeQualified(new Path(root, e.path)))
     lazy val blockSize = fs.getDefaultBlockSize(root)
-    val known = entries.zip(paths).collect { case (e, p) if e.size > 0 =>
-      p -> new org.apache.hadoop.fs.FileStatus(e.size, false, 1, blockSize, e.modificationTime, p)
-    }.toMap
-    org.apache.spark.sql.graftbridge.parquetScan(spark, schema, paths, known)
+    graftbridge.logScan(spark, schema, new StructType, entries.map { e =>
+      val p = fs.makeQualified(new Path(root, e.path))
+      graftbridge.LogFile(p, Option.when(e.size > 0)(
+        new FileStatus(e.size, false, 1, blockSize, e.modificationTime, p)), InternalRow.empty)
+    })
   }
 
   /** Remove commit directories the current version does not reference

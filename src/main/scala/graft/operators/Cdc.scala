@@ -682,7 +682,9 @@ object Cdc {
   // TxnLog's entries, stats or offsets — and must reproduce the
   // exact snapshot the oracle computes from the changelog. This is
   // the read path any foreign engine would take on graft's tables
-  // (and graft on theirs).
+  // (and graft on theirs). Its scan is the one every sink read uses
+  // (`graftbridge.logScan` over the listed files), except that each
+  // file's size comes from the filesystem, not from the add action.
   private def deltaRead(s: SparkSession, dir: String): DataFrame = {
     val tableDir = halfSnapshotTable(s, dir, "cdc_delta_read", partitioned = false)
     DeltaLog.read(s, tableDir)

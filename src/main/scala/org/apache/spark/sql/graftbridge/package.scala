@@ -1,13 +1,17 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into Spark's `private[sql]` and `private[spark]` internals:
   * the Column ⇄ Expression converters (Spark 4 moved classic Column
   * internals behind the Connect API split), plans built from Catalyst
-  * rows and file statuses, and the listener bus. Lives in the
-  * org.apache.spark.sql package solely to reach them; each member is
-  * a thin wrapper over Spark's own calls.
+  * rows, the listener bus, and the one scan of a table log's files
+  * ([[logScan]]: every sink and Delta read goes through its file
+  * index, which takes the file list from the log and lists no
+  * directory). Lives in the org.apache.spark.sql package solely to
+  * reach them; each member but that index is a thin wrapper over
+  * Spark's own calls.
   */
 package object graftbridge {
   def toExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -46,24 +50,53 @@ package object graftbridge {
         rows.map(r => project(r).copy())
     }
 
-  /** A parquet scan of `paths` under `schema`, as `read.schema(schema)
-    * .parquet(paths)` builds it, except that the file index starts from
-    * `known` statuses: a path with a known status is neither listed nor
-    * stat'ed, and only the others are looked up. */
-  def parquetScan(spark: SparkSession, schema: types.StructType,
-      paths: Seq[org.apache.hadoop.fs.Path],
-      known: Map[org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus]): DataFrame = {
+  /** One file of a [[logScan]]: its path, its status when the log
+    * recorded one, and its partition values. */
+  final case class LogFile(path: Path, status: Option[FileStatus], partition: catalyst.InternalRow)
+
+  /** A parquet scan of exactly the `files` a table log lists: the
+    * files hold `dataSchema`, and each file's partition values fill
+    * `partitionSchema`'s columns. Nothing is listed. A file without a
+    * status is looked up here, on the driver, on its own filesystem, so
+    * a missing one raises now and names itself. */
+  def logScan(spark: SparkSession, dataSchema: types.StructType,
+      partitionSchema: types.StructType, files: Seq[LogFile]): DataFrame = {
     import execution.datasources._
-    val cache = new FileStatusCache {
-      override def getLeafFiles(p: org.apache.hadoop.fs.Path) = known.get(p).map(Array(_))
-      override def putLeafFiles(p: org.apache.hadoop.fs.Path,
-          files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, paths, Map.empty, Some(schema), cache)
-    val relation = HadoopFsRelation(index, index.partitionSchema, schema.asNullable, None,
+    val conf = spark.sparkContext.hadoopConfiguration
+    val index = LogFileIndex(partitionSchema, files.map(f =>
+      f.status.getOrElse(f.path.getFileSystem(conf).getFileStatus(f.path)) -> f.partition))
+    val relation = HadoopFsRelation(index, partitionSchema, dataSchema.asNullable, None,
       new parquet.ParquetFileFormat, Map.empty)(spark)
     ofRows(spark, LogicalRelation(relation))
+  }
+
+  /** A fixed list of (status, partition values), as Spark's own
+    * log-backed indexes keep it. `listFiles` applies the partition
+    * filters itself: the scan does not re-apply partition-only filters
+    * after it. */
+  private final case class LogFileIndex(partitionSchema: types.StructType,
+      files: Seq[(FileStatus, catalyst.InternalRow)])
+      extends execution.datasources.FileIndex {
+    import catalyst.expressions._
+    private lazy val byValues = {
+      val groups = files.groupBy(_._2)
+      files.map(_._2).distinct.map(v => v -> groups(v).map(_._1).toArray)
+    }
+    def rootPaths: Seq[Path] = files.map(_._1.getPath)
+    def inputFiles: Array[String] = files.map(_._1.getPath.toUri.toString).toArray
+    def sizeInBytes: Long = files.map(_._1.getLen).sum
+    def refresh(): Unit = ()
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[execution.datasources.PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map(f => Predicate.createInterpreted(f.transform {
+        case a: AttributeReference =>
+          val i = partitionSchema.fieldNames.indexOf(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      }))
+      byValues.collect { case (v, fs) if keep.forall(_.eval(v)) =>
+        execution.datasources.PartitionDirectory(v, fs)
+      }
+    }
   }
 
   /** Wait up to `timeoutMs` until the listener bus has delivered every

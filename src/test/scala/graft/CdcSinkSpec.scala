@@ -344,10 +344,10 @@ class CdcSinkSpec extends AnyFunSuite with SharedSpark {
     // inject a crash after the merge writes its commit dir but before
     // the manifest publish — the exact window a mid-rewrite kill hits
     val batch = changelog(("a", "u", 3, "p1", 99.0), ("z", "c", 4, "p2", 7.0))
-    TxnLog.crashBeforeCommit = true
+    TxnLog.crashAt = Some(TxnLog.Crash.BeforePublish)
     try intercept[RuntimeException] {
       CdcSink.merge(spark, batch, dir, Some("part"))
-    } finally TxnLog.crashBeforeCommit = false
+    } finally TxnLog.crashAt = None
 
     // the table still reads at the pre-crash version, offsets intact
     assert(TxnLog.current(fs, dir).get.version == v1.version)

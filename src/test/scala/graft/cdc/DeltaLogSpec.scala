@@ -2,7 +2,9 @@ package graft.cdc
 
 import graft.SharedSpark
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -339,6 +341,20 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
         if (r.isNullAt(2)) None else Some(r.getInt(2)))).toSet
     assert(got == Set(("a", 1.0, Some(1)), ("b", 2.0, Some(1)),
       ("c", 3.0, Some(2)), ("d", 4.0, None)))
+    // a filter on p selects exactly that value's rows, and the scan
+    // opens only that value's files: the scan does not re-apply a
+    // partition-only filter, so the file index must. (A file count,
+    // since inputFiles ignores filters.)
+    def filtered(f: Column): (Set[String], Long) = {
+      val q = DeltaLog.read(spark, dir).filter(f)
+      val keys = q.collect().map(_.getString(0)).toSet
+      val scans = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.metrics("numFiles").value
+      }
+      (keys, scans.sum)
+    }
+    assert(filtered(col("p") === 1) == (Set("a", "b"), 1L))
+    assert(filtered(col("p").isNull) == (Set("d"), 1L))
     // a remove in a later version drops its partition's rows
     writeLog("00000000000000000001.json", Seq(
       """{"remove":{"path":"f2.parquet","deletionTimestamp":1,"dataChange":true}}"""))
@@ -349,9 +365,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
   test("percent-encoded action paths + the broadcast-join read path") {
     // Delta action paths are RFC 2396 percent-encoded: a partition
     // value with a space lives on disk as 'p=a b/…' but in the log
-    // as 'p=a%20b/…'. Also forces the high-cardinality read plan
-    // (one scan + broadcast file→values join keyed on the exact
-    // input_file_name() string) on the same fixture.
+    // as 'p=a%20b/…'.
     assert(DeltaLog.encodePath("p=a b/f.parquet") == "p=a%20b/f.parquet")
     assert(DeltaLog.decodePath("p=a%20b/f.parquet") == "p=a b/f.parquet")
     assert(DeltaLog.decodePath("part-0001.parquet") == "part-0001.parquet")
@@ -382,12 +396,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     def readSet() = DeltaLog.read(spark, dir).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getString(2))).toSet
     val want = Set(("a", 1.0, "a b"), ("b", 2.0, "c"))
-    assert(readSet() == want) // union path (2 combos <= max)
-    // force the broadcast-join plan via the threshold parameter
-    val joined = DeltaLog.read(spark, dir, unionComboMax = 0).collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getString(2))).toSet
-    assert(joined == want,
-      "join-path read diverged (input_file_name key mismatch?)")
+    assert(readSet() == want)
   }
 
   test("colon in a relative path's first segment stays relative") {
@@ -506,6 +515,28 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     val got = DeltaLog.read(spark, dir).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getInt(2))).toSet
     assert(got == Set(("a", 1.0, 1), ("b", 2.0, 2)))
+  }
+
+  test("a file missing behind the log raises from both readers, naming the file") {
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val dir = tempDir("graft_delta_missing_").toString
+    CdcSink.writeSnapshot(
+      changelog(("a", "c", 1, "p1", 1.0), ("b", "c", 2, "p2", 2.0)), dir, Some("part"))
+    val v1 = TxnLog.current(fs, dir).get
+    // a compaction rewrites every file, so vacuum removes v1's commit dir
+    CdcSink.compact(spark, dir, Some("part"))
+    TxnLog.vacuum(fs, dir)
+    val vacuumed = new Path(dir, v1.entries.head.path)
+    assert(!fs.exists(vacuumed))
+    val travel = intercept[Exception](DeltaLog.readVersion(spark, dir, v1.version).collect())
+    assert(messages(travel).contains(vacuumed.getName), messages(travel))
+    // a live file deleted behind the log: the sink's read, which takes
+    // each file's size from the log, raises when the scan opens it
+    val live = new Path(dir, TxnLog.current(fs, dir).get.entries.head.path)
+    fs.delete(live, false)
+    val read = intercept[Exception](CdcSink.read(spark, dir).collect())
+    assert(messages(read).contains(live.getName), messages(read))
   }
 
   test("add actions carry public-format stats (numRecords + key min/max)") {

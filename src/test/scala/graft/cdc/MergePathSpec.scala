@@ -104,6 +104,11 @@ class MergePathSpec extends AnyFunSuite with SharedSpark {
     }
     assert(n == 400)
     assert(jobs.nonEmpty && jobs.forall(_.sqlExecution), jobs.toString)
+    // the Delta-protocol read of the same table looks each file up on
+    // the driver instead of listing them in a job of its own
+    val (delta, deltaJobs) = SparkJobs.during(spark)(DeltaLog.read(spark, dir).collect().length)
+    assert(delta == 400)
+    assert(deltaJobs.nonEmpty && deltaJobs.forall(_.sqlExecution), deltaJobs.toString)
   }
 
   test("job counts: a one-file compaction runs 1 job") {
