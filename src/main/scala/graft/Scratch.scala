@@ -23,6 +23,13 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   *
   * A nested run of the same base on the same thread shares the outer
   * run's generation (an entry that calls a runner under its own name).
+  *
+  * graft deletes only what it creates: the generations under
+  * `graft_scratch/<base>`, and the superseded digest dirs of
+  * `Cdc.ensureGenerated`'s corpora. The `graft_*` and `cdc_*` dirs
+  * that older builds left in the temp dir are not graft's to delete:
+  * a sweep by name prefix could delete the data of another build
+  * running at the same time.
   */
 private[graft] object Scratch {
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables.
   *
@@ -16,20 +17,47 @@ object Tables {
   def part(s: SparkSession, dir: String): DataFrame      = load(s, dir, "part")
   def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
-  /** events.ts in nanos (TIMESTAMP(NANOS), which Spark 4 cannot infer,
-    * or plain INT64) is read through the declared schema as a raw long
-    * and converted to micros in Changelog; µs files infer as usual.
-    * A dir mixing both units fails here (see Tables0.tsReadsAsLong).
-    */
-  def events(s: SparkSession, dir: String): DataFrame =
-    if (graft.cdc.Tables0.tsReadsAsLong(s, dir))
-      s.read.schema(graft.cdc.Tables0.eventsSchema).parquet(s"$dir/events.parquet")
-    else load(s, dir, "events")
+  def events(s: SparkSession, dir: String): DataFrame    = load(s, dir, "events")
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** The events table's schema, declared for its file streams (a
+    * stream source takes its schema up front). `ts` has one unit,
+    * microseconds: the testdata's TIMESTAMP(MICROS), or Spark's own
+    * INT96, reads as it. The reference likewise decodes each temporal
+    * type with the one unit it declares (rust-cdc
+    * `src/mysql/event/mod.rs:370-640`). A file in nanos raises on
+    * read, through Spark's parquet type check or
+    * `Changelog.canonicalize`'s year guard.
+    */
+  val eventsSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
+  /** `<dir>/<name>.parquet` as a file stream, in either on-disk
+    * layout: a single file (the testdata generator's), streamed from
+    * the parent dir through a leaf-name glob because a file path
+    * cannot be a stream basePath; or a directory of part files (the
+    * production layout), streamed directly. A glob on the parent
+    * would read ZERO rows from the part-dir layout, whose leaves are
+    * `part-*.parquet`. A path that does not exist yet (a landing dir
+    * before the first write) takes the glob form: an empty stream
+    * that picks files up as they land.
+    */
+  def stream(s: SparkSession, dir: String, name: String, schema: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val rs = s.readStream.schema(schema)
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) rs.parquet(p.toString)
+    else rs.option("pathGlobFilter", s"$name.parquet").parquet(dir)
+  }
 
   /** Spread a NARROW scan across the cluster before per-row
     * compute-heavy work (gram hashing, media decode, shingling).

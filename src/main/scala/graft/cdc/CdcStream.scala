@@ -72,26 +72,9 @@ object CdcStream extends org.apache.spark.internal.Logging {
   private def smallStateTier(statePartitions: Option[Int]): Boolean =
     statePartitions.exists(_ <= 8)
 
-  /** The events changelog as a file stream, handling BOTH testdata
-    * layouts: the driver writes `<dir>/events.parquet` as a single
-    * FILE (stream the parent dir with a leaf-name glob — a file path
-    * cannot be a stream basePath), while scale-up dirs (GenScale)
-    * write it as a DIRECTORY of part files — the production shape —
-    * which streams directly. The old glob-only form silently read
-    * ZERO rows from the directory layout (pathGlobFilter matches
-    * leaf names, and the leaves there are part-*.parquet).
-    */
-  private[cdc] def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rs = s.readStream.schema(Tables0.eventsStreamSchema(s, dir))
-    // A not-yet-existing events.parquet (watching a landing dir before
-    // the first producer write) falls through to the glob form, which
-    // starts an empty stream that picks files up as they land —
-    // probing with exists() rather than getFileStatus() (throws).
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) rs.parquet(p.toString)
-    else rs.option("pathGlobFilter", "events.parquet").parquet(dir)
-  }
+  /** The events changelog as a file stream, in either layout. */
+  private[cdc] def eventsStream(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.stream(s, dir, "events", graft.Tables.eventsSchema)
 
   /** Drop memory-sink tables left by PREVIOUS invocations of the
     * same query (names are `<base>_<nanos>`). The memory sink
@@ -532,114 +515,5 @@ object CdcStream extends org.apache.spark.internal.Logging {
     // the whole aggregate, the last overwrite is the answer — window
     // cardinality is bounded but still not the driver's to hold
     runToParquetForeachBatch(s, queryName, agg, OutputMode.Complete)
-  }
-}
-
-/** Static schema for the events table (streaming sources must declare
-  * schemas up front — no inference mid-pipeline at scale; a batch
-  * `Tables.events` declares it only for nanos files).
-  *
-  * The `ts` column's declared type is dispatched on the ACTUAL
-  * parquet annotation of the probed footers, because the two testdata
-  * generations differ: TIMESTAMP(NANOS) (and plain-INT64 nanos
-  * written back by old GenScale runs) must be read as LongType
-  * (Spark 4 cannot infer a ns timestamp, but reads one exactly
-  * through a declared long, no session flag needed) and converted
-  * `div 1000` downstream, while TIMESTAMP(MICROS)
-  * reads natively as TimestampType with NO conversion. Declaring
-  * LongType for a µs file silently re-divides micros by 1000 and
-  * collapses every timestamp onto 1970-01-20 — the reference decodes
-  * each temporal type with its explicit unit (rust-cdc
-  * `src/mysql/event/mod.rs:370-640`, timestamp2/datetime2 paths);
-  * match that discipline. `Changelog.canonicalize` dispatches the
-  * conversion on the dtype this schema declares, plus a loud
-  * year-range guard so a future unit drift fails at the source.
-  */
-private[graft] object Tables0 {
-  import org.apache.spark.sql.types._
-
-  private def schemaWithTs(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** `ts` as raw int64 nanos (legacy testdata / old GenScale output). */
-  val eventsSchema: StructType = schemaWithTs(LongType)
-
-  /** `ts` as native µs TimestampType (current testdata). */
-  val eventsSchemaMicros: StructType = schemaWithTs(TimestampType)
-
-  /** Probe the parquet footers and return the schema whose `ts` type
-    * matches the files' actual timestamp unit. Driver-side, footers
-    * only, O(KB) each, and setup-time-only — the same layout-dispatch
-    * precedent as [[CdcStream.eventsStream]]'s dir-vs-file probe. A
-    * missing path (landing dir before the first write) defaults to
-    * the µs schema: that is what every current producer (driver +
-    * GenScale on current Spark) writes.
-    *
-    * ALL leaf footers are probed, because one schema governs every
-    * file the stream will read: a landing dir mixing old
-    * nanos-as-long parts with new micros parts has NO single correct
-    * schema (whichever unit the schema declares silently corrupts the
-    * other files' timestamps 1000×), so a mixed dir fails fast HERE
-    * with a clear error instead of mid-scan via the canonicalize
-    * year-range guard. Files landing after setup are still covered by
-    * that guard.
-    */
-  def eventsStreamSchema(s: SparkSession, dir: String): StructType =
-    if (tsReadsAsLong(s, dir)) eventsSchema else eventsSchemaMicros
-
-  /** True when `<dir>/events.parquet`'s `ts` column must be read as a
-    * raw long: annotated TIMESTAMP(NANOS), or a plain INT64 carrying
-    * nanos (old GenScale wrote the nanos-as-long column back without
-    * a logical annotation). Annotated µs/ms timestamps → false
-    * (Spark reads them natively as TimestampType). Throws on a dir
-    * whose part files disagree — see [[eventsStreamSchema]].
-    */
-  def tsReadsAsLong(s: SparkSession, dir: String): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return false
-    val leaves =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).toSeq
-      else Seq(p)
-    val units = leaves.map(leafTsIsLong(_, conf)).distinct
-    if (units.size > 1)
-      throw new IllegalStateException(
-        s"$p mixes timestamp units across part files (nanos-as-long and " +
-          "micros) — no single stream schema reads both without corrupting " +
-          "one set 1000x; rewrite the old-unit parts or split the landing dir")
-    units.headOption.getOrElse(false)
-  }
-
-  private def leafTsIsLong(
-      leaf: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(leaf, conf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      if (!schema.containsField("ts")) return false
-      val prim = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
-      prim.getLogicalTypeAnnotation match {
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-        case null =>
-          // plain INT64: old GenScale nanos-as-long write-back. INT96
-          // (Spark's legacy timestamp encoding, also unannotated) is
-          // NOT a long — only the INT64 form carries raw nanos.
-          prim.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
-        case _ => false
-      }
-    } finally reader.close()
   }
 }

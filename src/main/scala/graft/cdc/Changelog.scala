@@ -62,25 +62,16 @@ object Changelog {
   }
 
   def canonicalize(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    // ns-as-long (declared by Tables0.eventsSchema) →
-    // truncate to micros for Catalyst; µs files arrive as
-    // TimestampType and pass through untouched.
-    val decoded =
-      if (events.schema("ts").dataType == LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts")
-    // Loud unit-drift guard: a mis-declared timestamp unit lands
-    // 1000× off (1970 or year ~56k), which a windowed agg would
+    // Loud unit-drift guard: a timestamp written in another unit
+    // lands 1000× off (1970 or year ~56k), which a windowed agg would
     // quietly fold into one window. Fail the scan on the first bad
     // row instead — cheap codegen'd branch, no UDF.
-    val tsCol = when(
-        decoded.isNull || year(decoded).between(GuardMinYear, GuardMaxYear),
-        decoded)
+    val ts = col("ts")
+    val tsCol = when(ts.isNull || year(ts).between(GuardMinYear, GuardMaxYear), ts)
       .otherwise(raise_error(concat(
         lit(s"events.ts outside years [$GuardMinYear,$GuardMaxYear] — " +
           "timestamp unit drift? got "),
-        decoded.cast("string"))))
+        ts.cast("string"))))
     events.select(
       lit("events").as("table"),
       when(col("event_type") === "signup", Op.Insert)

@@ -41,23 +41,15 @@ object StreamDedup {
     QueryDef("dedup_stream_probe", probe, Some(probeSql)),
     QueryDef("stream_quality_gate", qualityGate, Some(qualityGateSql)))
 
-  /** documents.parquet as a file stream — same dir-vs-single-file
-    * dispatch as CdcStream.eventsStream (driver dirs hold one FILE,
-    * GenScale dirs a directory of parts).
-    */
+  /** documents.parquet as a file stream, in either layout. */
   private def docStream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
+    graft.Tables.stream(s, dir, "documents", StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),
       StructField("lang", StringType),
       StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rs = s.readStream.schema(schema)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) rs.parquet(p.toString)
-    else rs.option("pathGlobFilter", "documents.parquet").parquet(dir)
+      StructField("n_chars", LongType))))
   }
 
   /** The arriving increment probed against the standing index; the

@@ -207,18 +207,25 @@ class CdcSpec extends AnyFunSuite with SharedSpark {
   test("streaming sources read BOTH testdata layouts (flat file and part-dir)") {
     // Regression: pathGlobFilter("events.parquet") on the parent dir
     // silently streams ZERO rows when events.parquet is a DIRECTORY
-    // of part files (the GenScale / production layout) — found at sf1
-    // when cdc_stream_dedup "ran" in 0.15s. eventsStream must
-    // dispatch on the actual layout and read the same rows either way.
-    import org.apache.spark.sql.functions._
+    // of part files (the production layout) — found at sf1 when
+    // cdc_stream_dedup "ran" in 0.15s. Tables.stream must dispatch on
+    // the actual layout and read the same rows either way, for the
+    // events stream and for the documents stream alike.
     val dirLayout = tempDir("graft_layout_").toString
-    spark.read.parquet(s"$sf/events.parquet")
-      .repartition(3).write.parquet(s"$dirLayout/events.parquet")
+    Seq("events", "documents").foreach { t =>
+      spark.read.parquet(s"$sf/$t.parquet")
+        .repartition(3).write.parquet(s"$dirLayout/$t.parquet")
+    }
     val flat = CdcStream.streamingDedup(spark, sf, s"lay_flat_${System.nanoTime()}")
     val parts = CdcStream.streamingDedup(spark, dirLayout, s"lay_dir_${System.nanoTime()}")
     val nFlat = flat.count()
     assert(nFlat > 0)
     assert(parts.count() == nFlat)
+    def probe(dir: String) = SparkEntry.queries("dedup_stream_probe")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val docsFlat = probe(sf)
+    assert(docsFlat.nonEmpty)
+    assert(probe(dirLayout) == docsFlat)
   }
 
   test("streaming cleanup is scoped: active queries survive, stale views drop") {

@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: SPARK_GRAFT_SRC=/root/testdata/sf0.1 \
   *        SPARK_GRAFT_DEST=bench-data/sf1 \
-  *        SPARK_GRAFT_FACTOR=10  runMain graft.GenScale
+  *        SPARK_GRAFT_FACTOR=10  sbt "Test/runMain graft.GenScale"
+  *
+  * The session is `Spark.session()`'s default, `local[n]` with n =
+  * `SPARK_GRAFT_CPUS`.
   */
 object GenScale {
 
@@ -152,11 +155,7 @@ object GenScale {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
     val dest = sys.env.getOrElse("SPARK_GRAFT_DEST", "bench-data/sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val spark = Spark.session("local[16]", 16, "graft-genscale")
-    // this plain spark.read.parquet infers every table, so a legacy
-    // TIMESTAMP(NANOS) events.ts needs the flag to read as a long
-    // (graft's own readers declare that schema instead: Tables0)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Spark.session()
     spark.sparkContext.setLogLevel("WARN")
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

@@ -1,10 +1,8 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{
-  SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -26,7 +24,6 @@ object SparkJobs {
   /** Run `body` and return its result with the jobs it started. */
   def during[T](spark: SparkSession)(body: => T): (T, Seq[Job]) = {
     val jobs = new ConcurrentLinkedQueue[Job]
-    val ended = new AtomicInteger
     // adaptive execution runs a query's jobs on its own threads, so a
     // job's stage names do not say which call started it; the SQL
     // execution's start event (posted before its jobs) does
@@ -46,23 +43,14 @@ object SparkJobs {
           execution.isDefined,
           e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid))))
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
+    // listener events arrive asynchronously: drain the bus (bounded)
+    // so every job `body` ran has been seen
     val result =
       try body
       finally {
-        // listener events arrive asynchronously: wait (up to 10 s)
-        // until every started job has ended and the counts stay put
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        var quiet = 0
-        var last = -1
-        while (quiet < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(50)
-          val n = jobs.size
-          quiet = if (n == last && ended.get == n) quiet + 1 else 0
-          last = n
-        }
+        org.apache.spark.sql.graftbridge.drainListenerBus(spark, 10000L)
         spark.sparkContext.removeSparkListener(listener)
       }
     (result, jobs.asScala.toSeq)

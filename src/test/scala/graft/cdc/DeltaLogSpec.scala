@@ -362,7 +362,7 @@ class DeltaLogSpec extends AnyFunSuite with SharedSpark {
     assert(DeltaLog.readVersion(spark, dir, 0).count() == 4)
   }
 
-  test("percent-encoded action paths + the broadcast-join read path") {
+  test("percent-encoded action paths") {
     // Delta action paths are RFC 2396 percent-encoded: a partition
     // value with a space lives on disk as 'p=a b/…' but in the log
     // as 'p=a%20b/…'.
